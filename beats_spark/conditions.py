@@ -29,6 +29,7 @@ from collections.abc import Callable
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 Resolver = Callable[[str], Column]
@@ -268,3 +269,78 @@ def compile_condition(
     for t in terms[1:]:
         out = out & t
     return out
+
+
+# ---------------------------------------------------------------------------
+# the per-row guard: one never-null mask, applied by masked assignment
+# ---------------------------------------------------------------------------
+
+
+def guard_mask(cond: dict, df: DataFrame, active: Column | None = None) -> Column:
+    """``cond`` ANDed with any enclosing mask; a null condition value
+    reads as false, like the reference's per-event check."""
+    mask = F.coalesce(compile_condition(cond, df), F.lit(False))
+    return mask if active is None else active & mask
+
+
+def _cast_allows(df: DataFrame, check: str, src: T.DataType,
+                 dst: T.DataType) -> bool:
+    """Catalyst's ``Cast.<check>(src, dst)``, asked of two dtypes (no
+    analysis runs, so none can fail)."""
+    spark = df.sparkSession
+    parse = spark._jsparkSession.parseDataType
+    cast = spark._jvm.org.apache.spark.sql.catalyst.expressions.Cast
+    return getattr(cast, check)(parse(src.json()), parse(dst.json()))
+
+
+def try_cast_or_null(df: DataFrame, col: Column, src: T.DataType,
+                     dst: T.DataType) -> Column:
+    """``col`` as ``dst``: a try_cast when ``Cast.canTryCast(src, dst)``
+    allows one, else null."""
+    if _cast_allows(df, "canTryCast", src, dst):
+        return col.try_cast(dst)
+    return F.lit(None).cast(dst)
+
+
+def keep_old(df: DataFrame, ok: Column, expr: Column, name: str,
+             ndt: T.DataType | None) -> Column:
+    """CASE WHEN ok THEN expr (of type ``ndt``) ELSE the current value
+    of column ``name`` (null when there is none).
+
+    The types are merged explicitly: ANSI coercion of a mismatched pair
+    may cast the wrong side (a string/bigint pair casts the string,
+    which explodes on the very rows the guard protects). A new value
+    that up-casts to a non-string old type widens the column (an int
+    onto a bigint or double column keeps the old values whole);
+    otherwise the old value is try_cast to the new type, or nulled."""
+    new = F.when(ok, expr)
+    if name not in df.columns:
+        return new
+    odt = df.schema[name].dataType
+    old = F.col(f"`{name}`")
+    if odt == ndt or isinstance(odt, T.NullType) or isinstance(ndt, T.NullType):
+        return new.otherwise(old)
+    if not isinstance(odt, T.StringType) and _cast_allows(df, "canUpCast", ndt, odt):
+        return F.when(ok, expr.cast(odt)).otherwise(old)
+    return new.otherwise(try_cast_or_null(df, old, odt, ndt))
+
+
+def masked_assigns(df: DataFrame, ok: Column,
+                   assigns: dict[str, Column]) -> dict[str, Column]:
+    """``{name: CASE WHEN ok THEN expr ELSE <the old value>}`` for each
+    ``name: expr`` (see :func:`keep_old`). The new values' types come
+    from one analysis of ``df``, made only when a target already
+    exists."""
+    have = [n for n in assigns if n in df.columns]
+    ndts = df.select(*(assigns[n] for n in have)).schema.fields if have else []
+    types = {n: f.dataType for n, f in zip(have, ndts)}
+    return {n: keep_old(df, ok, e, n, types.get(n)) for n, e in assigns.items()}
+
+
+def assign_where(df: DataFrame, active: Column | None,
+                 assigns: dict[str, Column]) -> DataFrame:
+    """``df.withColumns(assigns)`` on the rows where ``active`` holds
+    (every row when it is None); the other rows keep their values."""
+    if active is not None:
+        assigns = masked_assigns(df, active, assigns)
+    return df.withColumns(assigns) if assigns else df

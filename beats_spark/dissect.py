@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from beats_spark.conditions import assign_where
+
 _TOKEN_RE = re.compile(r"%\{([^}]*)\}")
 _KEY_RE = re.compile(
     r"^(?P<prefix>[+*&?]?)(?P<name>[^|/#]*?)"
@@ -359,6 +361,7 @@ def dissect(
     trim_chars: str = " ",
     ignore_failure: bool = False,
     overwrite_keys: bool = True,
+    active: Column | None = None,
 ) -> DataFrame:
     """Apply a dissect tokenizer to ``df[field]``.
 
@@ -374,13 +377,15 @@ def dissect(
     existing column instead of overwriting it (mapper,
     processor.go:119-137; keys-under-root mode only — with a
     ``target_prefix`` struct there is no collision).
+    Rows outside the mask ``active`` keep every field, unflagged.
     """
     if trim_values not in TRIM_MODES:
         raise ValueError(
             f"trim_values must be one of {TRIM_MODES}, got {trim_values!r}"
         )
     pat = compile_tokenizer(tokenizer)
-    src = F.col(field)
+    # inactive rows feed the parse a null, so they skip its regex or UDF
+    src = F.col(field) if active is None else F.when(active, F.col(field))
 
     if pat.regex is not None:
         # ONE regex evaluation per row total, independent of key count;
@@ -402,12 +407,8 @@ def dissect(
         if not overwrite_keys:
             out_cols = {k: c for k, c in out_cols.items() if k not in df.columns}
         if target_prefix:
-            df = df.withColumn(
-                target_prefix,
-                F.when(ok, F.struct(*[c.alias(k) for k, c in out_cols.items()])),
-            )
-        else:
-            df = df.withColumns(out_cols)
+            out_cols = {target_prefix: F.when(
+                ok, F.struct(*[c.alias(k) for k, c in out_cols.items()]))}
         drop_cols = [marked_col, parts_col]
     else:
         # indirect keys → data-dependent key names → map<string,string>
@@ -419,22 +420,22 @@ def dissect(
         def dissect_map(s: pd.Series) -> pd.Series:
             return s.map(lambda v: parse(v, trim=trim_s))
 
-        tgt = target_prefix or "dissect"
-        df = df.withColumn(tgt, dissect_map(src))
-        ok = F.col(tgt).isNotNull()
-        drop_cols = []
+        df = df.withColumn("_dissect_map", dissect_map(src))
+        ok = F.col("_dissect_map").isNotNull()
+        out_cols = {target_prefix or "dissect": F.col("_dissect_map")}
+        drop_cols = ["_dissect_map"]
 
-    # failure flag (reference: processor.go:93-105 / log.flags)
+    # the flag is written in the same projection as the fields, so a
+    # guard reads the row as it was before the parse
     if not ignore_failure:
-        if flags_col in df.columns:
-            prev = F.col(flags_col)
-        else:
-            prev = F.lit(None).cast(T.ArrayType(T.StringType()))
-        df = df.withColumn(
-            flags_col,
-            F.when(ok, prev).otherwise(
-                F.array_union(F.coalesce(prev, F.array()),
-                              F.array(F.lit(PARSE_ERROR_FLAG)))
-            ),
-        )
-    return df.drop(*drop_cols) if drop_cols else df
+        out_cols[flags_col] = flag_failures(df, ok, flags_col, PARSE_ERROR_FLAG)
+    return assign_where(df, active, out_cols).drop(*drop_cols)
+
+
+def flag_failures(df: DataFrame, ok: Column, flags_col: str, flag: str) -> Column:
+    """``flags_col`` with ``flag`` appended where ``ok`` is false — a
+    parser's failure flag (reference: processor.go:93-105 / log.flags)."""
+    prev = (F.col(flags_col) if flags_col in df.columns
+            else F.lit(None).cast(T.ArrayType(T.StringType())))
+    return F.when(ok, prev).otherwise(
+        F.array_union(F.coalesce(prev, F.array()), F.array(F.lit(flag))))

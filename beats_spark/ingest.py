@@ -56,6 +56,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from beats_spark.conditions import masked_assigns, try_cast_or_null
+
 __all__ = [
     "IngestCompileError",
     "compile_ingest_pipeline",
@@ -745,18 +747,13 @@ def _p_rename(df, cfg, fmsg):
     # target keeps its value (never nulled by a missing source).
     # Branch types must agree EXACTLY: a string/timestamp pair would
     # get an implicit ANSI cast on the string side that explodes at
-    # runtime on the very rows the guard protects — probe and try_cast
-    # the old side to the incoming type instead
+    # runtime on the very rows the guard protects — try_cast the old
+    # side to the incoming type instead
     if _has(df, dst):
         ndt = df.select(F.when(src_nn, src_col)).schema[0].dataType
         odt = _dtype(df, dst)
-        if odt is not None and odt != ndt:
-            try:
-                cand = old_dst.try_cast(ndt)
-                df.select(cand)
-                old_dst = cand
-            except Exception:
-                old_dst = F.lit(None).cast(ndt)
+        if odt != ndt:
+            old_dst = try_cast_or_null(df, old_dst, odt, ndt)
     # the move happens ONLY where the target is free: an occupied
     # target throws in ES — under ignore_failure that exception is
     # swallowed and the document keeps BOTH fields untouched
@@ -1215,12 +1212,14 @@ class IngestPipeline:
     geoip_table: DataFrame | None = None
     keep_failed: bool = True
 
-    def __call__(self, df: DataFrame) -> DataFrame:
+    def __call__(self, df: DataFrame, active: Column | None = None) -> DataFrame:
+        """Run the pipeline; under a row mask ``active`` only the active
+        rows are processed (the others pass through untouched)."""
         # (path+head → member suffixes) declared by dot_expander: a
         # later `rename` of that OBJECT expands into member renames
         self._dot_objects: dict[str, set] = {}
         # COMPILE-TIME SHADOW: every schema question (column presence,
-        # dtypes, the _branch type probes) is answered by a FLAT empty
+        # dtypes, the masked-assign type checks) is answered by a FLAT empty
         # frame that mirrors the real frame's schema. Probing the real
         # frame re-analyzes its whole accumulated lineage — ~70
         # processors × several probes each made plan build O(n²)
@@ -1237,7 +1236,8 @@ class IngestPipeline:
         # active = ~FAILED, re-resolved against the frame at every
         # processor: once a row fails unhandled, every later processor
         # skips it (ES stops executing the chain for a failed document)
-        df = self._chain(df, self.cfg.get("processors") or [], ~_c(FAILED))
+        live = ~_c(FAILED) if active is None else ~_c(FAILED) & active
+        df = self._chain(df, self.cfg.get("processors") or [], live)
         top_fail = self.cfg.get("on_failure")
         if top_fail:
             df = self._chain(df, top_fail, _c(FAILED))
@@ -1273,6 +1273,10 @@ class IngestPipeline:
         handler's arbitrary transformations) — one real analysis."""
         self._sh = self._sp.createDataFrame([], df.schema)
 
+    def _guard(self, active: Column, cond: str | None) -> Column:
+        """``active`` narrowed by a processor's painless ``if``."""
+        return active & painless_condition(cond, self._sh) if cond else active
+
     # -- chain --
     def _chain(self, df: DataFrame, procs: list[dict], active: Column) -> DataFrame:
         for idx, entry in enumerate(procs):
@@ -1296,10 +1300,7 @@ class IngestPipeline:
                     ": fn} with a (df, active)->df substitute. Source:\n"
                     + str(src)
                 )
-            cond = cfg.get("if")
-            act = active & painless_condition(cond, self._sh) \
-                if cond else active
-            df = handler(df, act)
+            df = handler(df, self._guard(active, cfg.get("if")))
             self._resync(df)
             return df
         if name == "pipeline":
@@ -1310,10 +1311,8 @@ class IngestPipeline:
                     f"pipeline processor references unknown pipeline "
                     f"{ref!r} — pass pipelines={{name: cfg}}"
                 )
-            cond = cfg.get("if")
-            act = active & painless_condition(cond, self._sh) \
-                if cond else active
-            return self._chain(df, sub.get("processors") or [], act)
+            return self._chain(df, sub.get("processors") or [],
+                               self._guard(active, cfg.get("if")))
         if name == "dot_expander":
             # flat dotted columns ARE the expanded form here — but
             # record the object this declares so a later rename of the
@@ -1341,18 +1340,13 @@ class IngestPipeline:
         if name == "geoip":
             return self._geoip(df, cfg, active)
         if name == "drop":
-            cond = cfg.get("if")
-            act = active & painless_condition(cond, self._sh) \
-                if cond else active
             # row-level only: the shadow's schema is unchanged
-            return df.filter(~F.coalesce(act, F.lit(False)))
+            return df.filter(~F.coalesce(self._guard(active, cfg.get("if")), F.lit(False)))
         if name == "fail":
             cfg = dict(cfg)
-            cond = cfg.pop("if", None)
+            act = self._guard(active, cfg.pop("if", None))
             ignore_failure = cfg.pop("ignore_failure", False)
             on_failure = cfg.pop("on_failure", None)
-            act = active & painless_condition(cond, self._sh) \
-                if cond else active
             return self._apply(
                 df, {}, F.lit(True),
                 str(cfg.get("message", "Fail processor executed")),
@@ -1365,13 +1359,11 @@ class IngestPipeline:
         if fn is None:
             raise IngestCompileError(f"unsupported ingest processor {name!r}")
 
-        cond = cfg.pop("if", None)
+        act = self._guard(active, cfg.pop("if", None))
         ignore_failure = cfg.pop("ignore_failure", False)
         on_failure = cfg.pop("on_failure", None)
         cfg.pop("tag", None)
         cfg.pop("description", None)
-        act = active & painless_condition(cond, self._sh) \
-            if cond else active
         fmsg = None
         # the per-processor compilers only READ schema and build
         # name-based expressions — hand them the cheap shadow
@@ -1397,10 +1389,7 @@ class IngestPipeline:
         tmp = f"_ingest_of_{n}"
         df = self._tx(df, lambda d: d.withColumn(tmp, fail_now))
         ok = act & ~_c(tmp)
-        wrapped = {}
-        for name, expr in assigns.items():
-            old = _c(name) if _has(self._sh, name) else F.lit(None)
-            wrapped[name] = self._branch(self._sh, ok, expr, old)
+        wrapped = masked_assigns(self._sh, ok, assigns)
         if wrapped:
             df = self._tx(df, lambda d: d.withColumns(wrapped))
         if on_failure:
@@ -1428,46 +1417,16 @@ class IngestPipeline:
             })
         return self._tx(df, lambda d: d.drop(tmp))
 
-    @staticmethod
-    def _branch(df: DataFrame, ok: Column, expr: Column, old: Column) -> Column:
-        """CASE WHEN ok THEN expr ELSE old, tolerant of processors that
-        change a field's type (split: string→array, json: string→struct).
-        The common same-type case is zero-cost; on a branch-type mismatch
-        the old value is kept via try_cast when castable, else nulled on
-        the inactive rows (a columnar frame cannot hold both types).
-        Probes are Catalyst analysis only — compile-time, never a job.
-
-        The zero-cost path requires EXACT type equality: under ANSI
-        type coercion a string/bigint branch pair analyzes fine but
-        inserts an unchecked runtime CAST on whichever side got coerced
-        — which explodes on the very rows the guard was protecting
-        (e.g. convert's failed rows keeping their unparseable string)."""
-        ndt = df.select(F.when(ok, expr)).schema[0].dataType
-        try:
-            odt = df.select(old).schema[0].dataType
-        except Exception:
-            odt = None
-        if odt == ndt:
-            return F.when(ok, expr).otherwise(old)
-        try:
-            cand = F.when(ok, expr).otherwise(old.try_cast(ndt))
-            df.select(cand)
-            return cand
-        except Exception:
-            return F.when(ok, expr).otherwise(F.lit(None).cast(ndt))
-
     # -- grok / dissect --
     def _matcher(self, df: DataFrame, name: str, cfg: dict, active: Column,
                  idx: int) -> DataFrame:
         cfg = dict(cfg)
-        cond = cfg.pop("if", None)
+        act = self._guard(active, cfg.pop("if", None))
         ignore_failure = cfg.pop("ignore_failure", False)
         on_failure = cfg.pop("on_failure", None)
         ignore_missing = cfg.pop("ignore_missing", False)
         cfg.pop("tag", None)
         cfg.pop("description", None)
-        act = active & painless_condition(cond, self._sh) \
-            if cond else active
         fld = cfg["field"]
         src = _get(self._sh, fld)
         src = F.lit(None).cast("string") if src is None else src.cast("string")
@@ -1614,13 +1573,11 @@ class IngestPipeline:
     def _foreach(self, df: DataFrame, cfg: dict, active: Column,
                  idx: int) -> DataFrame:
         cfg = dict(cfg)
-        cond = cfg.pop("if", None)
+        active = self._guard(active, cfg.pop("if", None))
         ignore_failure = cfg.pop("ignore_failure", False)
         on_failure = cfg.pop("on_failure", None)
         cfg.pop("tag", None)
         cfg.pop("description", None)
-        active = active & painless_condition(cond, self._sh) \
-            if cond else active
         fld = cfg["field"]
         (sub_name, sub_cfg), = cfg["processor"].items()
         ignore_missing = cfg.pop("ignore_missing", False)
@@ -1726,14 +1683,14 @@ def compile_ingest_pipeline(
 
 
 # registry face: slots an ingest pipeline into a LogPipeline chain
-from beats_spark.processors.base import DFProc, register  # noqa: E402
+from beats_spark.processors.base import Proc, register, scoped  # noqa: E402
 
 
 @register("ingest_pipeline")
-class IngestProc(DFProc):
+class IngestProc(Proc):
     def __init__(self, **kwargs):
         definition = kwargs.pop("definition")
         self._compiled = compile_ingest_pipeline(definition, **kwargs)
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        return self._compiled(df)
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:
+        return scoped(df, active, self, self._compiled)

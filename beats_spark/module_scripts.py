@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from beats_spark.conditions import assign_where
 from beats_spark.ingest import IngestPipeline, compile_ingest_pipeline
 
 __all__ = [
@@ -45,15 +46,6 @@ def _c(name: str) -> Column:
 
 def _has(df: DataFrame, name: str) -> bool:
     return name in df.columns
-
-
-def _guarded(df: DataFrame, act: Column, assigns: dict[str, Column]) -> DataFrame:
-    out = {}
-    for name, expr in assigns.items():
-        old = _c(name) if _has(df, name) else F.lit(None).cast(
-            df.select(F.when(act, expr)).schema[0].dataType)
-        out[name] = F.when(F.coalesce(act, F.lit(False)), expr).otherwise(old)
-    return df.withColumns(out)
 
 
 # ---------------------------------------------------------------------------
@@ -83,7 +75,7 @@ def _nginx_pick_source_address(df: DataFrame, act: Column) -> DataFrame:
     public = F.filter(lst, lambda ip: ~_ip_is_private(ip))
     pick = F.coalesce(F.try_element_at(public, F.lit(1)),
                       F.try_element_at(lst, F.lit(1)))
-    return _guarded(df, act, {"source.address": pick})
+    return assign_where(df, act, {"source.address": pick})
 
 
 # ---------------------------------------------------------------------------
@@ -96,7 +88,7 @@ def _auth_categorize(df: DataFrame, act: Column) -> DataFrame:
     ok = ev == "Accepted"
     bad = ev.isin("Invalid", "Failed")
     hit = act & F.coalesce(ok | bad, F.lit(False))
-    return _guarded(df, hit, {
+    return assign_where(df, hit, {
         "event.type": F.when(ok, F.array(F.lit("authentication_success"),
                                          F.lit("info")))
         .otherwise(F.array(F.lit("authentication_failure"), F.lit("info"))),
@@ -121,7 +113,7 @@ def _apache_tls_split(df: DataFrame, act: Column) -> DataFrame:
     ver = F.element_at(parts, 2)
     ver = F.when(ver.contains("."), ver).otherwise(F.concat(ver, F.lit(".0")))
     hit = act & F.coalesce(two, F.lit(False))
-    return _guarded(df, hit, {
+    return assign_where(df, hit, {
         "tls.version": ver,
         "tls.version_protocol": F.element_at(parts, 1),
     })
@@ -133,7 +125,7 @@ def _apache_tls_split(df: DataFrame, act: Column) -> DataFrame:
 
 def _traefik_duration(df: DataFrame, act: Column) -> DataFrame:
     dur = (_c("temp.duration") if _has(df, "temp.duration") else F.lit(None))
-    return _guarded(df, act, {
+    return assign_where(df, act, {
         "event.duration": F.round(dur.cast("double") * 1000000).cast("long"),
     })
 
@@ -159,7 +151,7 @@ def _scale_duration(src: str, scale: float, post_mult: int = 1):
         prod = (dur.cast("float") * F.lit(float(scale)).cast("float"))
         out = (F.round(prod.cast("double")).cast("long")
                * F.lit(post_mult)).cast("long")
-        return _guarded(df, act, {"event.duration": out})
+        return assign_where(df, act, {"event.duration": out})
 
     return handler
 
@@ -176,7 +168,7 @@ def _map_values(field: str, mapping: dict[str, str]):
         out = col
         for k, v in mapping.items():
             out = F.when(col == k, F.lit(v)).otherwise(out)
-        return _guarded(df, act, {field: out})
+        return assign_where(df, act, {field: out})
 
     return handler
 
@@ -189,7 +181,7 @@ def _error_level_type(levels: list[str], field: str = "log.level"):
         lvl = _c(field) if _has(df, field) else F.lit(None)
         hit = act & lvl.isNotNull()
         out = F.when(lvl.isin(*levels), F.lit("error")).otherwise("info")
-        return _guarded(df, hit, {"event.type": out})
+        return assign_where(df, hit, {"event.type": out})
 
     return handler
 
@@ -210,9 +202,8 @@ def _bool_map_fields(prefix: str, fields: list[str],
             out = F.lit(None).cast("boolean")
             for k, v in mapping.items():
                 out = F.when(col == k, F.lit(v)).otherwise(out)
-            assigns[name] = F.when(F.coalesce(act, F.lit(False)), out) \
-                .otherwise(col.try_cast("boolean"))
-        return df.withColumns(assigns) if assigns else df
+            assigns[name] = out
+        return assign_where(df, act, assigns)
 
     return handler
 
@@ -232,7 +223,7 @@ def _es_audit_outcome(df: DataFrame, act: Column) -> DataFrame:
                      "run_as_granted", "connection_granted")
     out = F.when(F.coalesce(ok, F.lit(False)), F.lit("success")) \
         .otherwise("failure")
-    return _guarded(df, act, {"event.outcome": out})
+    return assign_where(df, act, {"event.outcome": out})
 
 
 def _es_audit_sub_action(df: DataFrame, act: Column) -> DataFrame:
@@ -242,7 +233,7 @@ def _es_audit_sub_action(df: DataFrame, act: Column) -> DataFrame:
     action = (_c("elasticsearch.audit.action")
               if _has(df, "elasticsearch.audit.action") else F.lit(None))
     hit = act & sub.isNotNull()
-    return _guarded(df, hit, {
+    return assign_where(df, hit, {
         "elasticsearch.audit.action":
             F.concat(action, F.lit("["), sub, F.lit("]"))})
 
@@ -261,7 +252,7 @@ def _es_gc_durations(df: DataFrame, act: Column) -> DataFrame:
               .when(u == "ms", t)
               .when(u == "m", t * 60000))
         assigns[f"{base}.ms"] = ms
-    return _guarded(df, act, assigns) if assigns else df
+    return assign_where(df, act, assigns)
 
 
 def _logstash_action_to_strings(df: DataFrame, act: Column) -> DataFrame:
@@ -273,7 +264,7 @@ def _logstash_action_to_strings(df: DataFrame, act: Column) -> DataFrame:
     if not _has(df, fld):
         return df
     col = _c(fld)
-    return _guarded(df, act, {fld: col.cast("string")})
+    return assign_where(df, act, {fld: col.cast("string")})
 
 
 def _osquery_nest_result(df: DataFrame, act: Column) -> DataFrame:
@@ -307,7 +298,7 @@ def _ingress_last_int(src: str, dst: str):
     def handler(df: DataFrame, act: Column) -> DataFrame:
         lst = _c(src) if _has(df, src) else F.lit(None).cast("array<string>")
         last = F.try_element_at(lst, F.lit(-1))
-        return _guarded(df, act, {dst: last.try_cast("long")})
+        return assign_where(df, act, {dst: last.try_cast("long")})
 
     return handler
 
@@ -319,7 +310,7 @@ def _ingress_sum_time(df: DataFrame, act: Column) -> DataFrame:
     total = F.aggregate(lst, F.lit(0.0),
                         lambda acc, x: acc + F.coalesce(
                             x.try_cast("double"), F.lit(0.0)))
-    return _guarded(df, act, {_ic("upstream.response.time"): total})
+    return assign_where(df, act, {_ic("upstream.response.time"): total})
 
 
 def _ingress_upstream_addr(df: DataFrame, act: Column) -> DataFrame:
@@ -329,7 +320,7 @@ def _ingress_upstream_addr(df: DataFrame, act: Column) -> DataFrame:
     last = F.try_element_at(lst, F.lit(-1))
     parts = F.split(last, ":")
     has_port = F.size(parts) > 1
-    return _guarded(df, act, {
+    return assign_where(df, act, {
         _ic("upstream.ip"): F.when(has_port, F.element_at(parts, 1))
         .otherwise(last),
         _ic("upstream.port"): F.when(
@@ -345,7 +336,7 @@ def _ingress_pick_source(df: DataFrame, act: Column) -> DataFrame:
     public = F.filter(lst, lambda ip: ~_ip_is_private(ip))
     pick = F.coalesce(F.try_element_at(public, F.lit(1)),
                       F.try_element_at(lst, F.lit(1)))
-    return _guarded(df, act, {"source.address": pick})
+    return assign_where(df, act, {"source.address": pick})
 
 
 # ---------------------------------------------------------------------------
@@ -397,7 +388,7 @@ def _auditd_normalize(df: DataFrame, act: Column) -> DataFrame:
     cleaned = F.map_filter(
         m, lambda _k, v: ~v.isin("?", "(null)", ""))
     out = F.transform_values(cleaned, norm)
-    return _guarded(df, act, {"auditd.log": out})
+    return assign_where(df, act, {"auditd.log": out})
 
 
 def _auditd_params() -> dict:
@@ -532,13 +523,9 @@ def _auditd_args_count(df: DataFrame, act: Column) -> DataFrame:
     dt = df.schema["process.args"].dataType
     if not isinstance(dt, T.ArrayType):
         return df
-    old = (_c("process.args_count")
-           if _has(df, "process.args_count") else F.lit(None).cast("string"))
     n = F.size(_c("process.args"))
-    hit = F.coalesce(act, F.lit(False)) & _c("process.args").isNotNull()
-    return df.withColumn(
-        "process.args_count",
-        F.when(hit, n.cast("string")).otherwise(old))
+    hit = act & _c("process.args").isNotNull()
+    return assign_where(df, hit, {"process.args_count": n.cast("string")})
 
 
 # (module, fileset) → {tag: handler}. Tags are the compiler's

@@ -1,17 +1,16 @@
 """Processor framework + registry.
 
-A processor is a ``DataFrame → DataFrame`` transform built from a
-Beats-shaped config dict. The registry maps the config key (the
+A processor is a ``(DataFrame, active) → DataFrame`` transform built
+from a Beats-shaped config dict. The registry maps the config key (the
 processor name, mirroring ``libbeat/processors/registry.go:54``) to a
 factory. Every processor supports a ``when:`` guard
-(``libbeat/processors/conditionals.go:59-111``): guarded projections
-wrap each assignment in ``CASE WHEN`` (rows failing the guard keep
-their old value), guarded filters only drop rows matching the guard.
+(``libbeat/processors/conditionals.go:59-111``), compiled to one
+per-row mask: guarded assignments wrap each value in ``CASE WHEN``
+(rows outside the mask keep their old value), guarded filters only drop
+rows inside it, and guarded lookup joins null the join key outside it.
 """
 
 from beats_spark.processors.base import (
-    DFProc,
-    FilterProc,
     Proc,
     Project,
     REGISTRY,
@@ -29,8 +28,6 @@ from beats_spark import ingest as _ingest  # noqa: F401  (registers ingest_pipel
 __all__ = [
     "Proc",
     "Project",
-    "FilterProc",
-    "DFProc",
     "REGISTRY",
     "register",
     "build_processor",

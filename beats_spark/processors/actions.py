@@ -15,20 +15,22 @@ reference's add_fields target semantics
 from __future__ import annotations
 
 import base64 as _b64
+import functools as _functools
 import gzip as _gzip
 import hashlib as _hashlib
 import socket as _socket
 import struct as _struct
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from beats_spark.conditions import compile_condition
+from beats_spark.conditions import assign_where, keep_old
 from beats_spark.fmtstr import compile_fmtstr
-from beats_spark.processors.base import FilterProc, Project, register
+from beats_spark.processors.base import MASK_PREFIX, Proc, Project, register, scoped
+from beats_spark.skew import salted_topk
 
 ATTRS = "attrs"
 
@@ -126,9 +128,11 @@ class Rename(Project):
         self.ignore_missing = ignore_missing
         self.fail_on_error = fail_on_error
 
-    def __call__(self, df: DataFrame) -> DataFrame:
-        if self.when is not None:
-            raise ValueError("rename cannot be guarded per-row (schema-level op)")
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:
+        # every pair reads the guard as it was before the first move
+        return scoped(df, active, self, self._move)
+
+    def _move(self, df: DataFrame, active: Column | None) -> DataFrame:
         for pair in self.fields:
             src, dst = pair["from"], pair["to"]
             if src not in df.columns:
@@ -139,7 +143,10 @@ class Rename(Project):
                 continue
             if dst in df.columns and self.fail_on_error:
                 raise ValueError(f"rename: target field {dst!r} already exists")
-            df = df.withColumnRenamed(src, dst)
+            if active is None:
+                df = df.withColumnRenamed(src, dst)
+            else:  # a per-row move
+                df = assign_where(df, active, {dst: F.col(src), src: F.lit(None)})
         return df
 
 
@@ -322,13 +329,12 @@ class DetectMimeType(Project):
 
 
 _CONVERT_TYPES = {
-    "string": "string",
-    "integer": "int",
-    "long": "bigint",
-    "float": "float",
-    "double": "double",
-    "boolean": "boolean",
-    "ip": "string",
+    "string": T.StringType(),
+    "integer": T.IntegerType(),
+    "long": T.LongType(),
+    "float": T.FloatType(),
+    "double": T.DoubleType(),
+    "boolean": T.BooleanType(),
 }
 
 
@@ -342,9 +348,10 @@ class Convert(Project):
         self.fields = fields
         self.mode = mode
         self.ignore_missing = ignore_missing
+        self.fail_on_error = fail_on_error
 
     def assigns(self, df: DataFrame) -> dict[str, Column]:
-        out = {}
+        out, types, failed = {}, {}, []
         for spec in self.fields:
             src = spec["from"]
             if src not in df.columns and self.ignore_missing:
@@ -356,10 +363,20 @@ class Convert(Project):
                 col = F.when(
                     col.rlike(r"^(\d{1,3}\.){3}\d{1,3}$") | col.contains(":"), col
                 )
+                types[dst] = df.schema[src].dataType
             else:
-                col = col.cast(_CONVERT_TYPES[typ])
+                col = col.try_cast(_CONVERT_TYPES[typ])
+                types[dst] = _CONVERT_TYPES[typ]
             out[dst] = col
-        return out
+            if typ != "string":  # a cast to string cannot fail
+                failed.append(F.col(src).isNotNull() & col.isNull())
+        if not (self.fail_on_error and failed):
+            return out  # a failed conversion nulls only its own target
+        # convert.go reverts the event: a row with any failed conversion
+        # keeps every target's value from before the processor
+        ok = ~_functools.reduce(Column.__or__, failed)
+        return {dst: keep_old(df, ok, col, dst, types[dst])
+                for dst, col in out.items()}
 
     def drops(self, df: DataFrame) -> list[str]:
         if self.mode != "rename":
@@ -524,11 +541,11 @@ class TimeseriesInstance(Project):
 
 
 @register("drop_event")
-class DropEvent(FilterProc):
+class DropEvent(Proc):
     """Drop rows (only useful with ``when``; ref: actions/drop_event.go:40-43)."""
 
-    def keep(self, df: DataFrame) -> Column:
-        return F.lit(False)
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:
+        return df.filter(F.lit(False) if active is None else ~active)
 
 
 @register("drop_fields")
@@ -567,15 +584,16 @@ class IncludeFields(Project):
     def __init__(self, fields: list[str]):
         self.fields = fields
 
-    def __call__(self, df: DataFrame) -> DataFrame:
-        if self.when is not None:
-            raise ValueError("include_fields cannot be guarded per-row (projection)")
-        keep = [c for c in df.columns if c in self.fields or c in self.ALWAYS]
-        return df.select(*keep)
+    def drops(self, df: DataFrame) -> list[str]:
+        return [
+            c for c in df.columns
+            if c not in self.fields and c not in self.ALWAYS
+            and not c.startswith(MASK_PREFIX)  # an enclosing scope's guard
+        ]
 
 
 @register("rate_limit")
-class RateLimit(FilterProc):
+class RateLimit(Proc):
     """Token-bucket rate limit re-expressed as windowed top-k: at most
     ``limit`` rows per key-group per time window. Wall-clock token
     refill has no batch equivalent; the windowed form preserves the
@@ -603,39 +621,26 @@ class RateLimit(FilterProc):
         self.algorithm = algorithm
         self.burst_multiplier = burst_multiplier
 
-    def __call__(self, df: DataFrame) -> DataFrame:
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:
         if self.algorithm == "token_bucket":
             # the reference's actual algorithm (token_bucket.go), event-time
             # driven — see beats_spark.token_bucket for semantics
-            if self.when is not None:
-                raise ValueError("token_bucket rate_limit cannot be guarded per-row")
             from beats_spark.token_bucket import token_bucket
 
             return token_bucket(
                 df, self.limit, self.fields, ts_col=self.ts_col,
                 order_col=self.order_col, burst_multiplier=self.burst_multiplier,
+                active=active,
             )
         keys = [F.col(f) for f in self.fields]
         order_col = self.order_col if self.order_col in df.columns else self.ts_col
-        if self.salt_buckets > 1 and self.when is None:
-            # skew-safe exact top-k: a hot (window, key) group otherwise
-            # ranks all its rows in ONE task — the north rule's salted
-            # hot-source case (see beats_spark.skew)
-            from beats_spark.skew import salted_topk
-
-            return salted_topk(
-                df, [F.window(F.col(self.ts_col), self.period), *keys],
-                order_col, self.n, self.salt_buckets, rn_col="_rl_rn",
-            ).drop("_rl_rn")
-        w = Window.partitionBy(
-            F.window(F.col(self.ts_col), self.period), *keys
-        ).orderBy(order_col)
-        out = df.withColumn("_rl_rn", F.row_number().over(w))
-        keep = F.col("_rl_rn") <= self.n
-        if self.when is not None:
-            guard = F.coalesce(compile_condition(self.when, out), F.lit(False))
-            keep = ~guard | keep
-        return out.filter(keep).drop("_rl_rn")
+        # salt_buckets > 1 is the skew-safe exact top-k: a hot (window,
+        # key) group otherwise ranks all its rows in ONE task — the north
+        # rule's salted hot-source case (see beats_spark.skew)
+        return salted_topk(
+            df, [F.window(F.col(self.ts_col), self.period), *keys],
+            order_col, self.n, self.salt_buckets, rn_col="_rl_rn", active=active,
+        ).drop("_rl_rn")
 
 
 @register("add_network_direction")

@@ -1,4 +1,4 @@
-"""Processor base classes, when-guard semantics, and the registry."""
+"""Processor base classes, the per-row guard, and the registry."""
 
 from __future__ import annotations
 
@@ -7,13 +7,26 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from beats_spark.conditions import compile_condition
+from beats_spark.conditions import assign_where, guard_mask
 
 
 class Proc:
-    """Base processor: a callable DataFrame transform."""
+    """Base processor, called as ``proc(df, active=None)``. ``active``
+    is one never-null per-row mask: the ``when:`` guard ANDed with any
+    enclosing guard (an ``if/then/else`` branch, a guarded script or
+    ingest pipeline). ``apply`` honours it in place, on one frame:
+    writes go through :func:`~beats_spark.conditions.assign_where`,
+    filters drop only active rows, parsers flag only active rows and
+    lookup joins null the join key of inactive rows."""
 
-    def __call__(self, df: DataFrame) -> DataFrame:  # pragma: no cover
+    when: dict | None = None
+
+    def __call__(self, df: DataFrame, active: Column | None = None) -> DataFrame:
+        if self.when is not None:
+            active = guard_mask(self.when, df, active)
+        return self.apply(df, active)
+
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:  # pragma: no cover
         raise NotImplementedError
 
 
@@ -21,13 +34,11 @@ class Project(Proc):
     """Column-assignment processor (the withColumn family).
 
     Subclasses implement ``assigns`` (new/updated columns) and
-    optionally ``drops``. The ``when:`` guard wraps every assignment in
-    ``CASE WHEN guard THEN new ELSE old END`` — a per-row conditional
+    optionally ``drops``. Under a mask every assignment becomes
+    ``CASE WHEN active THEN new ELSE old END`` — a per-row conditional
     mutation with zero extra scans (the reference evaluates the guard
     per event the same way, ``conditionals.go:82-87``).
     """
-
-    when: dict | None = None
 
     def assigns(self, df: DataFrame) -> dict[str, Column]:
         return {}
@@ -35,69 +46,31 @@ class Project(Proc):
     def drops(self, df: DataFrame) -> list[str]:
         return []
 
-    def __call__(self, df: DataFrame) -> DataFrame:
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:
         assigns = self.assigns(df)
-        drops = self.drops(df)
-        if self.when is not None:
-            guard = compile_condition(self.when, df)
-            wrapped: dict[str, Column] = {}
-            for name, expr in assigns.items():
-                old = F.col(name) if name in df.columns else F.lit(None)
-                wrapped[name] = F.when(guard, expr).otherwise(old)
-            assigns = wrapped
+        drops = [d for d in self.drops(df) if d in df.columns]
+        if active is not None:
             # a guarded drop can't remove the column for only some rows →
-            # null it out where the guard holds.
-            for name in drops:
-                if name in df.columns:
-                    assigns[name] = F.when(guard, F.lit(None)).otherwise(F.col(name))
+            # null it out on the active rows
+            assigns.update({d: F.lit(None) for d in drops})
             drops = []
-        if assigns:
-            df = df.withColumns(assigns)
-        if drops:
-            df = df.drop(*[d for d in drops if d in df.columns])
-        return df
+        df = assign_where(df, active, assigns)
+        return df.drop(*drops) if drops else df
 
 
-class FilterProc(Proc):
-    """Row-dropping processor. ``when:`` restricts the drop to guarded rows."""
-
-    when: dict | None = None
-
-    def keep(self, df: DataFrame) -> Column:
-        return F.lit(True)
-
-    def __call__(self, df: DataFrame) -> DataFrame:
-        keep = self.keep(df)
-        if self.when is not None:
-            # null guard (missing field) = condition false = row survives,
-            # matching the reference's condition evaluation.
-            guard = F.coalesce(compile_condition(self.when, df), F.lit(False))
-            keep = ~guard | keep  # rows outside the guard always survive
-        return df.filter(keep)
+MASK_PREFIX = "_mask_"
 
 
-class DFProc(Proc):
-    """General DataFrame transform (joins, re-shaping). A ``when:`` guard
-    splits the frame, transforms the matching half, and unions back —
-    the only processors using this path are enrichment joins, where the
-    guard is rare."""
-
-    when: dict | None = None
-
-    def __init__(self, fn: Callable[[DataFrame], DataFrame] | None = None):
-        if fn is not None:
-            self.transform = fn  # type: ignore[method-assign]
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        raise NotImplementedError
-
-    def __call__(self, df: DataFrame) -> DataFrame:
-        if self.when is None:
-            return self.transform(df)
-        guard = compile_condition(self.when, df)
-        yes = self.transform(df.filter(guard))
-        no = df.filter(~guard | guard.isNull())
-        return yes.unionByName(no, allowMissingColumns=True)
+def scoped(df: DataFrame, mask: Column | None, owner: object,
+           body: Callable[[DataFrame, Column | None], DataFrame]) -> DataFrame:
+    """``body(df, mask)`` for a multi-step scope, with ``mask`` pinned
+    as a column for the scope's duration, so its later steps read the
+    guard as it was before the scope ran (the reference evaluates a
+    condition once)."""
+    if mask is None:
+        return body(df, None)
+    name = f"{MASK_PREFIX}{id(owner)}"
+    return body(df.withColumn(name, mask), F.col(name)).drop(name)
 
 
 REGISTRY: dict[str, Callable[..., Proc]] = {}

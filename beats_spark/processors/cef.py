@@ -30,9 +30,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from beats_spark.processors.base import DFProc, register
+from beats_spark.conditions import assign_where
+from beats_spark.dissect import flag_failures
+
+from beats_spark.processors.base import Proc, register
 
 CEF_PARSE_ERROR_FLAG = "_cef_parse_failure"
 
@@ -174,6 +176,7 @@ def decode_cef(
     full_names: bool = True,
     flags_col: str = "log_flags",
     ignore_failure: bool = False,
+    active: Column | None = None,
 ) -> DataFrame:
     """Decode a CEF message in ``df[field]``.
 
@@ -183,9 +186,11 @@ def decode_cef(
     ArcSight names unless ``full_names=False``), plus — with ``ecs`` —
     flat typed convenience columns (:data:`CEF_ECS_COLUMNS`). Rows
     whose field has no parseable ``CEF:`` header get a null struct and
-    a ``_cef_parse_failure`` flag (unless ``ignore_failure``).
+    a ``_cef_parse_failure`` flag (unless ``ignore_failure``). Rows
+    outside the mask ``active`` keep every field, unflagged.
     """
-    src = F.col(field)
+    # inactive rows feed the parse a null, so they skip its regex
+    src = F.col(field) if active is None else F.when(active, F.col(field))
     # leading syslog data before the header is ignored (decode_cef.go:78)
     body = F.when(
         F.locate("CEF:", src) > 0,
@@ -273,29 +278,18 @@ def decode_cef(
             ext_map.alias("extensions"),
         ),
     )
-    df = df.withColumn(target_prefix, out)
+    # staged like the regex results: the ECS columns read the new struct,
+    # and the masked write below must not see a half-written row
+    df = df.withColumn("_cef_out", out)
+    out_cols = {target_prefix: F.col("_cef_out")}
     if ecs:
-        ecs_cols = {}
         for full, (col_name, dtype) in CEF_ECS_COLUMNS.items():
-            v = F.col(target_prefix)["extensions"][full]
-            ecs_cols[col_name] = v.try_cast(dtype) if dtype != "string" else v
-        df = df.withColumns(ecs_cols)
+            v = F.col("_cef_out")["extensions"][full]
+            out_cols[col_name] = v.try_cast(dtype) if dtype != "string" else v
     if not ignore_failure:
-        prev = (
-            F.col(flags_col)
-            if flags_col in df.columns
-            else F.lit(None).cast(T.ArrayType(T.StringType()))
-        )
-        df = df.withColumn(
-            flags_col,
-            F.when(ok, prev).otherwise(
-                F.array_union(
-                    F.coalesce(prev, F.array()),
-                    F.array(F.lit(CEF_PARSE_ERROR_FLAG)),
-                )
-            ),
-        )
-    return df.drop("_cef_parts", "_cef_toks", "_cef_entries", "_cef_ok")
+        out_cols[flags_col] = flag_failures(df, ok, flags_col, CEF_PARSE_ERROR_FLAG)
+    return assign_where(df, active, out_cols).drop(
+        "_cef_parts", "_cef_toks", "_cef_entries", "_cef_ok", "_cef_out")
 
 
 def encode_cef(
@@ -345,11 +339,11 @@ def encode_cef(
 
 
 @register("decode_cef")
-class DecodeCEF(DFProc):
+class DecodeCEF(Proc):
     """Registry face of :func:`decode_cef`."""
 
     def __init__(self, **kwargs):
         self.kwargs = kwargs
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        return decode_cef(df, **self.kwargs)
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:
+        return decode_cef(df, active=active, **self.kwargs)

@@ -11,19 +11,26 @@ All lookup processors share one implementation parameterized by the dim,
 the join key, and the output column prefix. Live I/O in executors
 (IMDS probes, DNS resolution) is out — dims are materialized up front,
 which is also the only defensible design at 10^12 rows.
+
+Under a guard, rows outside the mask get a null join key, so they match
+nothing; dim columns join under private names and are written through
+the masked assign, so an existing target is written once, in place.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from beats_spark.processors.base import DFProc, register
+from beats_spark.conditions import assign_where, masked_assigns
+from beats_spark.processors.base import Proc, Project, register
 
 
-class LookupJoin(DFProc):
+class LookupJoin(Proc):
     """Broadcast left join; dim columns land prefixed (``prefix.col`` →
-    ``prefix_col``) so repeated enrichments never collide."""
+    ``prefix_col``) so repeated enrichments never collide. A target that
+    already exists takes the dim value where the key matches and keeps
+    its old value elsewhere."""
 
     def __init__(self, dim: DataFrame, on: str, dim_key: str | None = None,
                  prefix: str = "", fields: list[str] | None = None,
@@ -35,24 +42,35 @@ class LookupJoin(DFProc):
         self.fields = fields
         self.overwrite = overwrite
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        dim = self.dim
-        cols = self.fields or [c for c in dim.columns if c != self.dim_key]
-        renames = {c: f"{self.prefix}{c}" if self.prefix else c for c in cols}
+    def targets(self) -> dict[str, str]:
+        """dim column → output column."""
+        cols = self.fields or [c for c in self.dim.columns if c != self.dim_key]
+        return {c: f"{self.prefix}{c}" for c in cols}
+
+    def key(self) -> Column:
+        return F.col(self.on)
+
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:
+        renames = self.targets()
         if not self.overwrite:
             # add_host_metadata replace_fields=false: keep pre-existing
             # event fields instead of the looked-up values
             renames = {c: n for c, n in renames.items() if n not in df.columns}
             if not renames:
                 return df
+        private = {n: f"_lk_{i}" for i, n in enumerate(renames.values())}
         sel = [F.col(self.dim_key).alias("_lk_key")] + [
-            F.col(c).alias(n) for c, n in renames.items()
+            F.col(c).alias(private[n]) for c, n in renames.items()
         ]
-        dim_slim = dim.select(*sel).dropDuplicates(["_lk_key"])
-        out = df.join(
-            F.broadcast(dim_slim), df[self.on] == dim_slim["_lk_key"], "left"
-        ).drop("_lk_key")
-        return out
+        dim_slim = self.dim.select(*sel).dropDuplicates(["_lk_key"])
+        key = self.key() if active is None else F.when(active, self.key())
+        out = df.join(F.broadcast(dim_slim), key == dim_slim["_lk_key"], "left")
+        hit = F.col("_lk_key").isNotNull()
+        existing = {n: F.col(p) for n, p in private.items() if n in df.columns}
+        return out.withColumns({
+            **{n: F.col(p) for n, p in private.items()},
+            **masked_assigns(out, hit, existing),
+        }).drop("_lk_key", *private.values())
 
 
 @register("add_host_metadata")
@@ -74,7 +92,7 @@ class AddObserverMetadata(LookupJoin):
 
 
 @register("add_cloud_metadata")
-class AddCloudMetadata(DFProc):
+class AddCloudMetadata(Project):
     """The reference probes IMDS once and attaches constant ``cloud.*``
     fields (add_cloud_metadata/add_cloud_metadata.go:115) → a constant
     struct literal here."""
@@ -82,8 +100,8 @@ class AddCloudMetadata(DFProc):
     def __init__(self, cloud: dict[str, str]):
         self.cloud = cloud
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        return df.withColumns({f"cloud_{k}": F.lit(v) for k, v in self.cloud.items()})
+    def assigns(self, df: DataFrame) -> dict[str, Column]:
+        return {f"cloud_{k}": F.lit(v) for k, v in self.cloud.items()}
 
 
 @register("add_docker_metadata")
@@ -129,29 +147,18 @@ class AddNomadMetadata(LookupJoin):
         "[a-fA-F0-9]{8}-[a-fA-F0-9]{4}-[a-fA-F0-9]{4}-"
         "[a-fA-F0-9]{4}-[a-fA-F0-9]{12}"
     )
-    _KEY = "_nomad_alloc_id"
-
     def __init__(self, dim: DataFrame, path_col: str = "source",
                  logs_path: str = "/var/lib/nomad", prefix: str = "nomad_",
                  fields: list[str] | None = None):
-        super().__init__(dim, on=self._KEY, dim_key="allocation_id",
+        super().__init__(dim, on=path_col, dim_key="allocation_id",
                          prefix=prefix, fields=fields)
-        self.path_col = path_col
         self.logs_path = logs_path.rstrip("/") + "/"
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        extracted = F.regexp_extract(
-            F.col(self.path_col), self._ALLOC_ID_RX, 0
-        )
-        key = F.when(
-            F.col(self.path_col).contains(self.logs_path)
-            & (extracted != ""),
+    def key(self) -> Column:
+        extracted = F.regexp_extract(F.col(self.on), self._ALLOC_ID_RX, 0)
+        return F.when(
+            F.col(self.on).contains(self.logs_path) & (extracted != ""),
             extracted,
-        )
-        return (
-            super()
-            .transform(df.withColumn(self._KEY, key))
-            .drop(self._KEY)
         )
 
 
@@ -166,15 +173,12 @@ class Translate(LookupJoin):
         self.target = target
         self.dim_value = dim_value
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        out = super().transform(df)
-        if self.dim_value != self.target:
-            out = out.withColumnRenamed(self.dim_value, self.target)
-        return out
+    def targets(self) -> dict[str, str]:
+        return {self.dim_value: self.target}
 
 
 @register("dns")
-class Dns(DFProc):
+class Dns(Proc):
     """Reverse-DNS enrichment against a pre-resolved dim (no live I/O in
     executors). ``action: append|replace``, ``tag_on_failure`` appends a
     tag when no mapping exists. Ref: dns/dns.go:81, config.go:32-43."""
@@ -190,29 +194,25 @@ class Dns(DFProc):
         self.dim_key = dim_key
         self.dim_value = dim_value
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:
         dim = self.dim.select(
             F.col(self.dim_key).alias("_dns_key"), F.col(self.dim_value).alias("_dns_val")
         ).dropDuplicates(["_dns_key"])
-        out = df.join(F.broadcast(dim), df[self.field] == dim["_dns_key"], "left")
+        key = F.col(self.field) if active is None else F.when(active, F.col(self.field))
+        out = df.join(F.broadcast(dim), key == dim["_dns_key"], "left")
+        val = F.col("_dns_val")
         if self.action == "replace":
-            out = out.withColumn(
-                self.target, F.coalesce(F.col("_dns_val"), F.col(self.field))
-            )
-        else:
-            out = out.withColumn(self.target, F.col("_dns_val"))
+            val = F.coalesce(val, F.col(self.field))
+        assigns = {self.target: val}
         if self.tags:
             existing = (
                 F.coalesce(F.col("tags"), F.array()) if "tags" in df.columns else F.array()
             )
-            out = out.withColumn(
-                "tags",
-                F.when(
-                    F.col("_dns_val").isNull(),
-                    F.array_union(existing, F.array(*[F.lit(t) for t in self.tags])),
-                ).otherwise(existing),
-            )
-        return out.drop("_dns_key", "_dns_val")
+            assigns["tags"] = F.when(
+                F.col("_dns_val").isNull(),
+                F.array_union(existing, F.array(*[F.lit(t) for t in self.tags])),
+            ).otherwise(existing)
+        return assign_where(out, active, assigns).drop("_dns_key", "_dns_val")
 
 
 def asof_enrich(
@@ -225,6 +225,7 @@ def asof_enrich(
     prefix: str = "",
     fields: list[str] | None = None,
     mode: str = "broadcast",
+    active: Column | None = None,
 ) -> DataFrame:
     """Time-versioned enrichment: join each event to the dim version
     with the greatest ``valid_from`` <= the event's ``ts_col`` for the
@@ -237,7 +238,8 @@ def asof_enrich(
 
     Events with a null key or no version at-or-before their timestamp
     get nulls; dim rows with a null key never match (equi-join
-    semantics).
+    semantics). Rows outside the mask ``active`` match nothing and
+    keep every field.
 
     Two scale modes:
 
@@ -260,6 +262,7 @@ def asof_enrich(
     cols = fields or [c for c in dim.columns if c not in (dim_key, valid_from)]
     renames = {c: f"{prefix}{c}" if prefix else c for c in cols}
     dim = dim.filter(F.col(dim_key).isNotNull())
+    key = F.col(on) if active is None else F.when(active, F.col(on))
 
     if mode == "broadcast":
         vs = dim.groupBy(F.col(dim_key).alias("_as_key")).agg(
@@ -270,13 +273,13 @@ def asof_enrich(
                 )
             ).alias("_vs")
         )
-        out = df.join(F.broadcast(vs), df[on] == vs["_as_key"], "left")
+        out = df.join(F.broadcast(vs), key == vs["_as_key"], "left")
         match = F.try_element_at(
             F.filter(F.col("_vs"), lambda v: v["_vf"] <= F.col(ts_col)),
             F.lit(-1),
         )
-        return out.withColumns(
-            {n: match[c] for c, n in renames.items()}
+        return assign_where(
+            out, active, {n: match[c] for c, n in renames.items()}
         ).drop("_as_key", "_vs")
 
     if mode != "merge":
@@ -285,32 +288,36 @@ def asof_enrich(
     dim_struct_t = T.StructType([T.StructField(c, dim.schema[c].dataType)
                                  for c in cols])
     ev_rows = df.select(
-        F.col(on).alias("_k"), F.col(ts_col).alias("_t"),
-        F.lit(1).alias("_is_ev"), *df.columns,
+        key.alias("_k"), F.col(ts_col).alias("_t"),
+        F.lit(1).alias("_is_ev"),
+        # a null key matches nothing: spread those events over the
+        # window partitions instead of piling them into one
+        F.when(key.isNull(), F.monotonically_increasing_id()).alias("_spread"),
+        *df.columns,
         F.lit(None).cast(dim_struct_t).alias("_d"),
     )
     dim_rows = dim.select(
         F.col(dim_key).alias("_k"), F.col(valid_from).alias("_t"),
-        F.lit(0).alias("_is_ev"),
+        F.lit(0).alias("_is_ev"), F.lit(None).cast("bigint").alias("_spread"),
         *[F.lit(None).cast(df.schema[c].dataType).alias(c) for c in df.columns],
         F.struct(*[F.col(c) for c in cols]).alias("_d"),
     )
     w = (
-        Window.partitionBy("_k")
+        Window.partitionBy("_k", "_spread")
         .orderBy("_t", "_is_ev")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = ev_rows.unionByName(dim_rows).withColumn(
         "_carry", F.last("_d", ignorenulls=True).over(w)
     )
-    return carried.filter(F.col("_is_ev") == 1).select(
-        *df.columns,
-        *[F.col("_carry")[c].alias(n) for c, n in renames.items()],
-    )
+    out = carried.filter(F.col("_is_ev") == 1).select(*df.columns, "_carry")
+    return assign_where(
+        out, active, {n: F.col("_carry")[c] for c, n in renames.items()}
+    ).drop("_carry")
 
 
 @register("asof_lookup")
-class AsofLookup(DFProc):
+class AsofLookup(Proc):
     """Processor-chain face of :func:`asof_enrich` (versioned dim
     lookup in a config pipeline)."""
 
@@ -322,5 +329,5 @@ class AsofLookup(DFProc):
                        valid_from=valid_from, prefix=prefix, fields=fields,
                        mode=mode)
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        return asof_enrich(df, **self.kw)
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:
+        return asof_enrich(df, active=active, **self.kw)

@@ -41,7 +41,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from beats_spark.conditions import assign_where
+from beats_spark.dissect import flag_failures
 
 PARSE_ERROR_FLAG = "_grok_parse_failure"
 
@@ -361,16 +363,19 @@ def grok(
     convert_types: bool = True,
     flags_col: str = "log_flags",
     ignore_failure: bool = False,
+    active: Column | None = None,
 ) -> DataFrame:
     """Apply a grok expression to ``df[field]``.
 
     Output fields land as a struct column ``target_prefix`` (or as
     top-level columns when ``target_prefix == ""``). One regex
     evaluation per row regardless of field count (see module doc).
-    Empty captures surface as null unless ``keep_empty``.
+    Empty captures surface as null unless ``keep_empty``. Rows outside
+    the mask ``active`` keep every field, unflagged.
     """
     pat = GrokPattern(expr, pattern_definitions)
-    src = F.col(field)
+    # inactive rows feed the parse a null, so they skip its regex
+    src = F.col(field) if active is None else F.when(active, F.col(field))
     rep = _MARK + _SEP.join(f"${g}" for g in range(1, pat._ngroups + 1))
     marked_col, parts_col = "_grok_marked", "_grok_parts"
     df = df.withColumn(marked_col, F.regexp_replace(src, pat.anchored(anchor), rep))
@@ -399,39 +404,23 @@ def grok(
         out_cols[key] = F.when(ok, col)
 
     if target_prefix:
-        df = df.withColumn(
-            target_prefix,
-            F.when(ok, F.struct(*[c.alias(k) for k, c in out_cols.items()])),
-        )
-    else:
-        df = df.withColumns(out_cols)
+        out_cols = {target_prefix: F.when(
+            ok, F.struct(*[c.alias(k) for k, c in out_cols.items()]))}
     if not ignore_failure:
-        prev = (
-            F.col(flags_col)
-            if flags_col in df.columns
-            else F.lit(None).cast(T.ArrayType(T.StringType()))
-        )
-        df = df.withColumn(
-            flags_col,
-            F.when(ok, prev).otherwise(
-                F.array_union(
-                    F.coalesce(prev, F.array()), F.array(F.lit(PARSE_ERROR_FLAG))
-                )
-            ),
-        )
-    return df.drop(marked_col, parts_col)
+        out_cols[flags_col] = flag_failures(df, ok, flags_col, PARSE_ERROR_FLAG)
+    return assign_where(df, active, out_cols).drop(marked_col, parts_col)
 
 
-from beats_spark.processors.base import DFProc, register  # noqa: E402
+from beats_spark.processors.base import Proc, register  # noqa: E402
 
 
 @register("grok")
-class Grok(DFProc):
+class Grok(Proc):
     """Registry face of :func:`grok`."""
 
     def __init__(self, **kwargs):
         self.expr = kwargs.pop("expr")
         self.kwargs = kwargs
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        return grok(df, self.expr, **self.kwargs)
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:
+        return grok(df, self.expr, active=active, **self.kwargs)

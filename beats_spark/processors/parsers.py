@@ -17,11 +17,11 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from beats_spark.dissect import dissect as _dissect_df
-from beats_spark.processors.base import DFProc, Project, register
+from beats_spark.processors.base import MASK_PREFIX, Proc, Project, register, scoped
 
 
 @register("dissect")
-class Dissect(DFProc):
+class Dissect(Proc):
     """The dissect processor (see :mod:`beats_spark.dissect`).
     Ref: libbeat/processors/dissect/processor.go:63-142, config.go:35-49.
     All config knobs are honored (trim_values/trim_chars per trim.go,
@@ -38,8 +38,8 @@ class Dissect(DFProc):
             trim_values=trim_values, trim_chars=trim_chars,
         )
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        return _dissect_df(df, **self.kwargs)
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:
+        return _dissect_df(df, active=active, **self.kwargs)
 
 
 def _json_is_structured(s: str) -> bool:
@@ -328,7 +328,7 @@ class ExtractArray(Project):
 
 
 @register("script")
-class Script(DFProc):
+class Script(Proc):
     """The UDF escape hatch. The reference embeds JavaScript
     (script/processor.go:38-52); our engine takes a Python callable —
     either a ``DataFrame -> DataFrame`` transform (``lang="dataframe"``)
@@ -341,7 +341,12 @@ class Script(DFProc):
     :mod:`beats_spark.processors.script_translate` — the script then
     runs as column expressions with zero Python in the hot path.
     Outside-subset scripts raise ``ScriptTranslationError`` at build
-    time (loud refusal; port those to ``lang="pandas"``)."""
+    time (loud refusal; port those to ``lang="pandas"``). A guarded
+    ``dataframe``/``pandas`` transform is opaque: it runs on the active
+    rows, and the rest are unioned back unchanged. Inside a multi-step
+    scope (an ``if/then/else`` branch, say) the scope's pinned guard
+    columns must come through the transform: a pandas script gets them
+    put back, a dataframe script that drops them is refused."""
 
     def __init__(self, source: Callable | str, lang: str = "dataframe",
                  schema: T.StructType | str | None = None):
@@ -355,20 +360,44 @@ class Script(DFProc):
 
             self._translated = translate_script(source)
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:
         if self.lang == "javascript":
             from beats_spark.pipeline import build_pipeline
 
-            return build_pipeline(self._translated)(df)
+            return scoped(df, active, self, build_pipeline(self._translated))
+        if active is None:
+            return self._run(df, [])
+        masks = [c for c in df.columns if c.startswith(MASK_PREFIX)]
+        out = self._run(df.filter(active), masks)
+        lost = [m for m in masks if m not in out.columns]
+        if lost:
+            raise ValueError(
+                f"script: a guarded dataframe transform must keep the guard columns {lost}")
+        return out.unionByName(df.filter(~active), allowMissingColumns=True)
+
+    def _run(self, df: DataFrame, masks: list[str]) -> DataFrame:
         if self.lang == "dataframe":
             return self.source(df)
         if self.lang == "pandas":
             fn = self.source
             schema = self.schema or df.schema
+            if masks:
+                if isinstance(schema, str):
+                    schema = T.StructType.fromDDL(schema)
+                schema = T.StructType(schema.fields + [
+                    T.StructField(m, T.BooleanType()) for m in masks
+                    if m not in schema.fieldNames()])
 
             def runner(batches):
                 for pdf in batches:
-                    yield fn(pdf)
+                    out = fn(pdf)
+                    # every row here is active, and an active row reads
+                    # each enclosing scope's pinned guard the same way
+                    # (true in `then`, false in `else`): one value each
+                    for m in masks:
+                        if m not in out.columns:
+                            out[m] = bool(pdf[m].iloc[0]) if len(pdf) else False
+                    yield out
 
             return df.mapInPandas(runner, schema=schema)
         raise ValueError(f"unknown script lang {self.lang!r}")

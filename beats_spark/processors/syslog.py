@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from beats_spark.conditions import assign_where
+
 SEVERITY_LABELS = [
     "Emergency", "Alert", "Critical", "Error",
     "Warning", "Notice", "Informational", "Debug",
@@ -66,9 +68,12 @@ def syslog_rfc3164(
     field: str = "message",
     assume_year: int = 2026,
     keep_raw: bool = True,
+    active: Column | None = None,
 ) -> DataFrame:
-    """Parse ``df[field]`` as RFC-3164 syslog lines (see module doc)."""
-    src = F.col(field)
+    """Parse ``df[field]`` as RFC-3164 syslog lines (see module doc);
+    rows outside the mask ``active`` keep every field."""
+    # inactive rows feed the parse a null, so they skip its regex
+    src = F.col(field) if active is None else F.when(active, F.col(field))
     rep = _MARK + _SEP.join(f"${g}" for g in range(1, 7))
     marked = F.regexp_replace(src, _RFC3164, rep)
     df = df.withColumn("_sl_marked", marked)
@@ -111,14 +116,14 @@ def syslog_rfc3164(
             src if keep_raw else F.lit(None)
         ),
     }
-    return df.withColumns(out).drop("_sl_marked", "_sl_parts")
+    return assign_where(df, active, out).drop("_sl_marked", "_sl_parts")
 
 
-from beats_spark.processors.base import DFProc, register  # noqa: E402
+from beats_spark.processors.base import Proc, register  # noqa: E402
 
 
 @register("syslog")
-class Syslog(DFProc):
+class Syslog(Proc):
     """Registry face of :func:`syslog_rfc3164` (config name matches the
     reference input's ``type: syslog``)."""
 
@@ -126,5 +131,5 @@ class Syslog(DFProc):
                  keep_raw: bool = True):
         self.kwargs = dict(field=field, assume_year=assume_year, keep_raw=keep_raw)
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        return syslog_rfc3164(df, **self.kwargs)
+    def apply(self, df: DataFrame, active: Column | None) -> DataFrame:
+        return syslog_rfc3164(df, active=active, **self.kwargs)

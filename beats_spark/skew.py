@@ -27,6 +27,7 @@ def salted_topk(
     k: int,
     salt_buckets: int = 16,
     rn_col: str = "_rn",
+    active: Column | None = None,
 ) -> DataFrame:
     """Exact per-key top-k by ``order_col`` (ascending, ties broken by
     the column itself — use a unique order column for determinism),
@@ -35,20 +36,25 @@ def salted_topk(
     true top-k, ≤ B·k rows per key); phase 2 ranks the survivors
     within keys alone. Emits ``rn_col`` (the exact global per-key
     rank); callers filter/drop it. With ``salt_buckets=1`` this
-    degenerates to the plain single-window form."""
+    degenerates to the plain single-window form. Rows outside the mask
+    ``active`` (one more partition key) pass through unranked."""
     order = F.col(order_col) if isinstance(order_col, str) else order_col
     keys = [F.col(c) if isinstance(c, str) else c for c in keys]
+    if active is not None:
+        keys.append(active)
+    top = (lambda rank: rank <= k) if active is None else (lambda rank: ~active | (rank <= k))
+
     if salt_buckets <= 1:
         w = Window.partitionBy(*keys).orderBy(order)
         return df.withColumn(rn_col, F.row_number().over(w)).filter(
-            F.col(rn_col) <= k
+            top(F.col(rn_col))
         )
     salt = F.pmod(F.xxhash64(order), F.lit(salt_buckets))
     w1 = Window.partitionBy(*keys, salt).orderBy(order)
     pruned = df.withColumn("_salt_rn", F.row_number().over(w1)).filter(
-        F.col("_salt_rn") <= k
+        top(F.col("_salt_rn"))
     ).drop("_salt_rn")
     w2 = Window.partitionBy(*keys).orderBy(order)
     return pruned.withColumn(rn_col, F.row_number().over(w2)).filter(
-        F.col(rn_col) <= k
+        top(F.col(rn_col))
     )

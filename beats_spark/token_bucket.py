@@ -42,7 +42,7 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -102,12 +102,14 @@ def token_bucket(
     ts_col: str = "ts",
     order_col: str = "offset",
     burst_multiplier: float = 1.0,
+    active: Column | None = None,
 ) -> DataFrame:
     """Batch event-time token bucket: keep rows the bucket admits.
 
     One shuffle on ``fields``; within each key group rows are processed
     in (ts, order_col) order starting from a full bucket (the
     reference creates each bucket full, token_bucket.go:124-137).
+    Rows outside the mask ``active`` pass through without tokens.
     """
     n, period = parse_limit(limit)
     rate_per_us = n / (period * 1e6)
@@ -116,25 +118,24 @@ def token_bucket(
     order = order_col if order_col in df.columns else ts_col
 
     cols = df.columns
+    guarded = active is not None  # the Column itself cannot ship to workers
+    # no fields → one global bucket (the reference hashes the empty
+    # field list to a single key); this serializes on one task, which
+    # is what a single global rate limit inherently is. A literal in
+    # groupBy would resolve as an ordinal, so group on a real column —
+    # under a mask, the mask itself.
+    extra = {"__tb_on": active} if guarded else {} if fields else {"__tb_g": F.lit(0)}
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        if guarded and not pdf["__tb_on"].iloc[0]:
+            return pdf[cols]
         pdf = pdf.sort_values([ts_col, order], kind="mergesort")
         t = _ts_us(pdf[ts_col])
         last = float(t[0]) if len(t) else 0.0
         allowed, _, _ = _run_bucket(t, depth, last, rate_per_us, depth)
         return pdf[allowed][cols]
 
-    # no fields → one global bucket (the reference hashes the empty
-    # field list to a single key); this serializes on one task, which
-    # is what a single global rate limit inherently is. A literal in
-    # groupBy would resolve as an ordinal, so group on a real column.
-    if fields:
-        return df.groupBy(*fields).applyInPandas(run, schema=schema)
-    return (
-        df.withColumn("__tb_g", F.lit(0))
-        .groupBy("__tb_g")
-        .applyInPandas(run, schema=schema)
-    )
+    return df.withColumns(extra).groupBy(*fields, *extra).applyInPandas(run, schema=schema)
 
 
 def streaming_token_bucket(

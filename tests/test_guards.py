@@ -1,0 +1,398 @@
+"""Guard semantics: ``when:`` and ``if/then/else`` compile to one per-row
+mask that every processor honours in place, on one frame.
+
+The parity tests keep the split-and-union semantics as the reference
+implementation: the guarded rows go through the unguarded processor,
+the rest are unioned back untouched. The mask must produce the same
+row set without a ``Union`` in the plan."""
+
+from __future__ import annotations
+
+import contextlib
+import logging
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from beats_spark.conditions import compile_condition
+from beats_spark.pipeline import build_pipeline
+from beats_spark.processors import build_processor
+from tests.conftest import rows
+
+ERROR = {"equals": {"level": "error"}}
+
+
+@pytest.fixture(scope="module")
+def events(spark):
+    # row 4 has a null level: the condition is null there, which reads
+    # as false (the row is outside the guard and takes `else`)
+    data = [
+        (1, "error", "GET /a", "5", "src0", "8.8.8.8"),
+        (2, "info", "PUT /b", "7", "src1", "9.9.9.9"),
+        (3, "error", "bad", "x", "src2", "8.8.8.8"),
+        (4, None, "GET /c", "13", "src0", "1.1.1.1"),
+        (5, "error", "GET /d", "17", "src3", "9.9.9.9"),
+    ]
+    return spark.createDataFrame(
+        data, "id int, level string, msg string, n string, source string, ip string"
+    )
+
+
+def _cases(spark) -> dict[str, dict]:
+    def bump(pdf: pd.DataFrame) -> pd.DataFrame:  # local: pickled by value
+        pdf["id"] = pdf["id"] + 100
+        return pdf
+
+    host_dim = spark.createDataFrame(
+        [("src0", "host-a"), ("src1", "host-b"), ("src2", "host-c")],
+        "source string, name string",
+    )
+    dns_dim = spark.createDataFrame([("8.8.8.8", "dns.google")], "ip string, hostname string")
+    return {
+        "add_fields": {"add_fields": {"fields": {"flag": "hot"}, "fields_under_root": True,
+                                      "when": ERROR}},
+        "drop_event": {"drop_event": {"when": ERROR}},
+        "convert": {"convert": {"fields": [{"from": "n", "type": "integer"}], "when": ERROR}},
+        "dissect": {"dissect": {"tokenizer": "%{verb} %{path}", "field": "msg",
+                                "target_prefix": "", "when": ERROR}},
+        "grok": {"grok": {"expr": "%{WORD:verb} %{NOTSPACE:path}", "field": "msg",
+                          "target_prefix": "", "when": ERROR}},
+        "lookup_join": {"add_host_metadata": {"dim": host_dim, "when": ERROR}},
+        "dns": {"dns": {"dim": dns_dim, "field": "ip", "target": "host",
+                        "tag_on_failure": ["_dns_fail"], "when": ERROR}},
+        "ingest_pipeline": {"ingest_pipeline": {"definition": {"processors": [
+            {"set": {"field": "seen", "value": "yes"}},
+            {"uppercase": {"field": "msg"}},
+        ]}, "when": ERROR}},
+        "pandas_script": {"script": {"source": bump, "lang": "pandas", "when": ERROR}},
+        "if_then_else": {
+            "if": ERROR,
+            "then": [
+                {"add_fields": {"fields": {"route": "alert"}, "fields_under_root": True}},
+                {"drop_event": {"when": {"equals": {"id": 3}}}},
+            ],
+            "else": [{"add_fields": {"fields": {"route": "archive"}, "fields_under_root": True}}],
+        },
+    }
+
+
+CASES = ["add_fields", "drop_event", "convert", "dissect", "grok", "lookup_join",
+         "dns", "ingest_pipeline", "pandas_script", "if_then_else"]
+
+
+def _split_and_union(df, entry):
+    """The old dispatch, kept as the reference: filter each side of the
+    condition, run the unguarded processors on the matching side,
+    ``unionByName`` the halves back together."""
+    if "if" in entry:
+        cond = compile_condition(entry["if"], df)
+        yes = build_pipeline(entry["then"])(df.filter(cond))
+        no = build_pipeline(entry["else"])(df.filter(~cond | cond.isNull()))
+        return yes.unionByName(no, allowMissingColumns=True)
+    (name, cfg), = entry.items()
+    bare = {name: {k: v for k, v in cfg.items() if k != "when"}}
+    cond = compile_condition(cfg["when"], df)
+    yes = build_processor(bare)(df.filter(cond))
+    return yes.unionByName(df.filter(~cond | cond.isNull()), allowMissingColumns=True)
+
+
+def _row_set(df):
+    cols = sorted(df.columns)
+    got = [tuple(None if r[c] is None else str(r[c]) for c in cols) for r in df.collect()]
+    return cols, sorted(got, key=lambda t: [(v is None, v or "") for v in t])
+
+
+@pytest.mark.parametrize("case", CASES)
+def test_guard_matches_split_and_union_reference(spark, events, case):
+    # the reference cannot union `convert`'s int column with a
+    # non-numeric string, so its unguarded rows must hold numbers
+    df = events.filter(F.col("id") != 3) if case == "convert" else events
+    entry = _cases(spark)[case]
+    assert _row_set(build_pipeline([entry])(df)) == _row_set(_split_and_union(df, entry))
+
+
+@pytest.mark.parametrize("case", CASES)
+def test_guarded_plans_have_no_union(spark, events, case):
+    out = build_pipeline([_cases(spark)[case]])(events)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    # an opaque script transform is the one input the union still serves
+    assert ("Union" in plan) == (case == "pandas_script")
+
+
+def test_if_then_else_adds_no_regex_evaluations(spark):
+    """A branch on a parsed field must not compute the parse twice
+    (the split-and-union plan had one copy of the regex per half)."""
+    from beats_spark.datagen import TOKENIZER, generate_events
+    from beats_spark.dissect import compile_tokenizer
+
+    ev = generate_events(spark, 200)
+    rx = compile_tokenizer(TOKENIZER).regex
+    dissect = {"dissect": {"tokenizer": TOKENIZER, "target_prefix": ""}}
+    branch = {
+        "if": ERROR,
+        "then": [{"add_fields": {"fields": {"route": "alert"}, "fields_under_root": True}}],
+        "else": [{"add_fields": {"fields": {"route": "archive"}, "fields_under_root": True}}],
+    }
+
+    def regex_evals(*entries) -> int:
+        out = build_pipeline(list(entries))(ev)
+        return out._jdf.queryExecution().executedPlan().toString().count(rx)
+
+    alone = regex_evals(dissect)
+    assert alone >= 1
+    assert regex_evals(dissect, branch) == alone
+
+
+# -- regressions of the duplicated guard code -------------------------------
+
+
+@pytest.mark.parametrize("knobs", [
+    {"salt_buckets": 1}, {"salt_buckets": 4}, {"algorithm": "token_bucket"},
+])
+def test_guarded_rate_limit_ranks_only_guarded_rows(spark, knobs):
+    data = [(i, "info" if i < 5 else "error", f"2026-01-01T00:00:{i:02d}Z") for i in range(8)]
+    df = spark.createDataFrame(data, "id int, level string, raw string").selectExpr(
+        "id", "level", "cast(raw as timestamp) ts", "id as offset"
+    )
+    limit = {"rate_limit": {"limit": "3/m", **knobs, "when": ERROR}}
+    out = build_pipeline([limit])(df)
+    assert rows(out, "id") == [(i,) for i in range(8)]
+    # the limit still binds on the guarded rows
+    df2 = df.union(df.selectExpr("id + 8 as id", "'error' as level", "ts", "offset + 8"))
+    out2 = build_pipeline([limit])(df2)
+    assert out2.filter(F.col("level") == "error").count() == 3
+    assert out2.filter(F.col("level") == "info").count() == 5
+
+
+def test_lookup_join_overwrites_existing_column_in_place(spark):
+    from beats_spark.processors.enrich import LookupJoin
+
+    df = spark.createDataFrame(
+        [("s1", "error", 1, "old1"), ("s2", "error", 2, "old2"), ("s1", "info", 3, "old3")],
+        "source string, level string, n int, host_env string",
+    )
+    dim = spark.createDataFrame([("s1", "prod")], "source string, env string")
+    out = LookupJoin(dim, on="source", prefix="host_")(df)
+    assert out.columns == ["source", "level", "n", "host_env"]
+    # the dim value where the key matches, the old value where it doesn't
+    assert rows(out, "n", "host_env") == [(1, "prod"), (2, "old2"), (3, "prod")]
+    guarded = LookupJoin(dim, on="source", prefix="host_")
+    guarded.when = ERROR
+    out = guarded(df)
+    assert out.columns == ["source", "level", "n", "host_env"]
+    assert rows(out, "n", "host_env") == [(1, "prod"), (2, "old2"), (3, "old3")]
+
+
+@pytest.fixture(scope="module")
+def numbers(spark):
+    return spark.createDataFrame(
+        [(1, "1", "2", 10), (2, "3", "x", 30)], "id int, a string, b string, a_int int"
+    )
+
+
+CONVERT_AB = [{"from": "a", "to": "a_int", "type": "integer"},
+              {"from": "b", "to": "b_int", "type": "integer"}]
+
+
+def test_convert_fail_on_error_reverts_the_row(numbers):
+    out = build_pipeline([{"convert": {"fields": CONVERT_AB}}])(numbers)
+    # row 2's `b` fails: every target keeps its value from before
+    assert rows(out, "id", "a_int", "b_int") == [(1, 1, 2), (2, 30, None)]
+
+
+def test_convert_without_fail_on_error_nulls_only_the_failed_target(numbers):
+    out = build_pipeline([{"convert": {"fields": CONVERT_AB, "fail_on_error": False}}])(numbers)
+    assert rows(out, "id", "a_int", "b_int") == [(1, 1, 2), (2, 3, None)]
+
+
+def test_if_then_else_branches_may_leave_different_types(spark):
+    df = spark.createDataFrame([("error", "5"), ("info", "x"), ("info", "7")],
+                               "level string, n string")
+    out = build_pipeline([{
+        "if": ERROR,
+        "then": [{"convert": {"fields": [{"from": "n", "type": "integer"}]}}],
+        "else": [{"add_tags": {"tags": ["other"]}}],
+    }])(df)
+    assert rows(out, "level", "n") == [("error", 5), ("info", 7), ("info", None)]
+
+
+def test_if_then_else_reads_the_condition_before_either_branch(spark):
+    df = spark.createDataFrame([(1, "error"), (2, "info")], "id int, level string")
+    out = build_pipeline([{
+        "if": ERROR,
+        "then": [{"add_fields": {"fields": {"level": "info"}, "fields_under_root": True}}],
+        "else": [{"add_tags": {"tags": ["else"]}}],
+    }])(df)
+    assert rows(out, "id", "level", "tags") == [(1, "info", None), (2, "info", ["else"])]
+
+
+# -- no caught analysis errors while compiling a guard ----------------------
+
+
+@contextlib.contextmanager
+def _error_records():
+    """ERROR records from the root logger and PySpark's query-context
+    loggers (which do not propagate)."""
+    from pyspark.logger import PySparkLogger
+
+    class Collect(logging.Handler):
+        def __init__(self):
+            super().__init__(logging.ERROR)
+            self.records: list[logging.LogRecord] = []
+
+        def emit(self, record):
+            self.records.append(record)
+
+    h = Collect()
+    loggers = [logging.getLogger()] + [
+        PySparkLogger.getLogger(n)
+        for n in ("DataFrameQueryContextLogger", "SQLQueryContextLogger")
+    ]
+    for lg in loggers:
+        lg.addHandler(h)
+    try:
+        yield h.records
+    finally:
+        for lg in loggers:
+            lg.removeHandler(h)
+
+
+def test_guarded_convert_skips_excluded_rows_without_error_logs(spark):
+    df = spark.createDataFrame([("error", "5"), ("info", "x"), ("info", "7")],
+                               "level string, n string")
+    with _error_records() as records:
+        out = build_pipeline([{"convert": {"fields": [{"from": "n", "type": "integer"}],
+                                           "when": ERROR}}])(df)
+    assert records == []
+    assert dict(out.dtypes)["n"] == "int"
+    # an excluded row keeps its value where the new type can hold it
+    assert rows(out, "level", "n") == [("error", 5), ("info", 7), ("info", None)]
+
+
+def test_guarded_ingest_split_compiles_without_error_logs(spark):
+    from beats_spark.ingest import compile_ingest_pipeline
+
+    df = spark.createDataFrame([("error", "a,b"), ("info", "c,d")], "level string, msg string")
+    with _error_records() as records:
+        out = compile_ingest_pipeline({"processors": [
+            {"split": {"field": "msg", "separator": ",", "if": "ctx.level == 'error'"}},
+        ]})(df)
+    assert records == []
+    # a string cannot be held by the array column: the excluded row is null
+    assert rows(out, "level", "msg") == [("error", ["a", "b"]), ("info", None)]
+
+
+# -- a guard keeps the excluded rows' values whole --------------------------
+
+
+@pytest.fixture(scope="module")
+def wide(spark):
+    return spark.createDataFrame(
+        [("error", 2**40, 3.7), ("info", 2**40 + 1, 4.5)],
+        "level string, big bigint, real double",
+    )
+
+
+@pytest.mark.parametrize("entry, want", [
+    ({"add_fields": {"fields": {"big": 0, "real": 1}, "fields_under_root": True, "when": ERROR}},
+     [("error", 0, 1.0), ("info", 2**40 + 1, 4.5)]),
+    ({"if": ERROR,
+      "then": [{"add_fields": {"fields": {"big": 0}, "fields_under_root": True}}],
+      "else": [{"add_fields": {"fields": {"real": 1}, "fields_under_root": True}}]},
+     [("error", 0, 3.7), ("info", 2**40 + 1, 1.0)]),
+])
+def test_guarded_int_literal_widens_instead_of_narrowing(wide, entry, want):
+    out = build_pipeline([entry])(wide)
+    assert dict(out.dtypes) == {"level": "string", "big": "bigint", "real": "double"}
+    assert rows(out, "level", "big", "real") == want
+
+
+def test_guarded_rename_reads_its_guard_once(spark):
+    df = spark.createDataFrame([(1, "a1", "c1"), (2, None, "c2")], "id int, a string, c string")
+    out = build_pipeline([{"rename": {
+        "fields": [{"from": "a", "to": "b"}, {"from": "c", "to": "d"}],
+        "when": {"has_fields": ["a"]},
+    }}])(df)
+    # row 1 moves both pairs, though the first move empties `a`
+    assert sorted(out.columns) == ["a", "b", "c", "d", "id"]
+    assert rows(out, "id", "a", "b", "c", "d") == [
+        (1, None, "a1", None, "c1"), (2, None, None, "c2", None)]
+
+
+# -- an opaque script inside a scope keeps the scope's guard ----------------
+
+
+def test_schema_changing_pandas_script_in_a_branch(spark, events):
+    def slim(pdf: pd.DataFrame) -> pd.DataFrame:  # local: pickled by value
+        return pd.DataFrame({"id": pdf["id"] + 100, "level": pdf["level"]})
+
+    out = build_pipeline([{
+        "if": ERROR,
+        "then": [
+            {"script": {"source": slim, "lang": "pandas", "schema": "id int, level string"}},
+            {"add_fields": {"fields": {"route": "alert"}, "fields_under_root": True}},
+        ],
+        "else": [{"drop_event": {"when": {"equals": {"id": 2}}}}],
+    }])(events)
+    assert not [c for c in out.columns if c.startswith("_mask_")]
+    # the script's rows still take the rest of `then`, and `else` drops
+    # only its own row
+    assert rows(out, "id", "route", "msg") == [
+        (101, "alert", None), (103, "alert", None), (105, "alert", None), (4, None, "GET /c")]
+
+
+def test_dataframe_script_dropping_a_scope_guard_is_refused(events):
+    with pytest.raises(ValueError, match="guard columns"):
+        build_pipeline([{
+            "if": ERROR,
+            "then": [{"script": {"source": lambda df: df.select("id", "level")}}],
+        }])(events)
+
+
+# -- as-of lookup under a guard ---------------------------------------------
+
+
+@pytest.mark.parametrize("mode", ["broadcast", "merge"])
+def test_guarded_asof_lookup(spark, mode):
+    df = spark.createDataFrame(
+        [(1, "error", "h1", 10, "old1"), (2, "info", "h1", 10, "old2"),
+         (3, "error", None, 10, "old3")],
+        "id int, level string, host string, ts int, host_os string",
+    )
+    dim = spark.createDataFrame([("h1", 5, "linux"), ("h1", 20, "bsd")],
+                                "host string, valid_from int, os string")
+    out = build_pipeline([{"asof_lookup": {"dim": dim, "on": "host", "prefix": "host_",
+                                           "mode": mode, "when": ERROR}}])(df)
+    assert out.columns == df.columns
+    # the guarded row takes its version; the others keep their value
+    # (a null key matches nothing)
+    assert rows(out, "id", "host_os") == [(1, "linux"), (2, "old2"), (3, None)]
+
+
+def test_guarded_indirect_dissect(spark, events):
+    # `&` keys take the map (pandas UDF) path
+    out = build_pipeline([{"dissect": {"tokenizer": "%{?k} %{&k}", "field": "msg",
+                                       "target_prefix": "kv", "when": ERROR}}])(events)
+    got = {r["id"]: r["kv"] for r in out.collect()}
+    assert got[1] == {"GET": "/a"} and got[2] is None and got[4] is None
+    assert rows(out.filter(F.col("id") == 2), "log_flags") == [(None,)]
+
+
+def test_module_script_handlers_write_only_active_rows(spark):
+    from beats_spark.module_scripts import (
+        _auditd_args_count, _bool_map_fields, _nginx_pick_source_address)
+
+    df = spark.createDataFrame(
+        [(1, True, "Yes", ["10.0.0.1", "8.8.8.8"], ["a", "b"], "7"),
+         (2, False, "No", ["9.9.9.9"], ["c"], "5"),
+         (3, None, "maybe", None, None, None)],
+        "id int, act boolean, `s.flag` string, `nginx.access.remote_ip_list` array<string>,"
+        " `process.args` array<string>, `process.args_count` string",
+    )
+    act = F.col("act")
+    out = _bool_map_fields("s", ["flag"], {"Yes": True, "No": False})(df, act)
+    out = _nginx_pick_source_address(out, act)
+    out = _auditd_args_count(out, act)
+    assert rows(out, "id", "`s.flag`", "`source.address`", "`process.args_count`") == [
+        (1, True, "8.8.8.8", "2"), (2, False, None, "5"), (3, None, None, None)]
