@@ -12,10 +12,14 @@ and hashes values).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from beats_spark.corpus import entry_queries as cq
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -2296,7 +2300,6 @@ def q_streaming_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming face: the same routing config run as an
     availableNow stream with foreachBatch fan-out; per-sink ack counts
     must equal the batch/SQL result (streaming/batch parity)."""
-    import os
     import tempfile
 
     from beats_spark.streaming import StreamingLogPipeline
@@ -2389,179 +2392,404 @@ def q_pipeline_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Registry
+# Registry: ONE ordered table. Every consumer selects from it by tag or
+# audit opts: ``queries()`` / ``oracle_sql()`` (the driver and
+# scripts/oracle_check.py), bench.py (``headline``, ``r2``),
+# scripts/explain_audit.py (``audit``) and the sf0.1 gate in
+# tests/test_second_scale_oracle.py (``order_sensitive``).
 # ---------------------------------------------------------------------------
 
 
-# The driver's correctness gate checks the FIRST 50 entries of
-# ``queries()`` in dict order. Rounds 2+3 drove 59 distinct queries
-# green; the 45 below never had (or lost) a driver row, so they lead
-# the round-4 window — followed by 4 already-proven rotators to fill
-# the 50 — and the remaining proven queries close the dict. Over
-# rounds 3+4 together every registry query then has a driver-green
-# row. (All 45 were pre-verified against the DuckDB oracle via
-# ``scripts/oracle_check.py``; this is ordering, not new code.)
-_DRIVER_WINDOW_PRIORITY = [
-    "pipeline_flagship",  # flagship stays first: re-proven every round
-    # -- the 3 r4-red rows (array outputs crashed the driver canon;
-    #    now md5-signature shaped, commit addf993) --
-    "fim_transform",
-    "fim_loss_mask",
-    "span_corrupt",
-    # -- the 43 never-driver-checked queries (round-4 rotation list;
-    #    all judge-verified vs the DuckDB oracle in the r4 session) --
-    "curriculum_order",
-    "length_buckets",
-    "pack_seq_boundaries",
-    "epoch_schedule",
-    "corpus_report",
-    "quality_classifier",
-    "truncation_stats",
-    "nb_weights",
-    "quality_classifier_trained",
-    "source_kl",
-    "dedup_incremental",
-    "quality_by_source",
-    "bm25_topk",
-    "packing_efficiency",
-    "quality_sample",
-    "split_leakage_safe",
-    "ppl_buckets",
-    "detokenize",
-    "repeat_ngram_mask",
-    "script_stats",
-    "bpe_compression",
-    "compression_ratio",  # rows-only: no zlib in DuckDB
-    "hashed_embedding",
-    "dup_profile",
-    "source_overlap",
-    "soft_dedup",
-    "neardup_profile",
-    "split_leakage_report",
-    "padding_stats",
-    "length_resample",
-    "chat_loss_mask",
-    "preference_pairs",
-    "log_corpus_bridge",
-    "token_budget_sample",
-    "netflow_parse",
-    "netflow_v9_parse",
-    "ipfix_parse",
-    "token_shard_export",
-    "batch_schedule",
-    "step_token_balance",
-    "decode_cef",
-    "module_tidb",
-    "module_slowlog",
-    # -- new in r5: ES-ingest-compiled reference module pipelines --
-    "module_nginx",
-    "module_system_syslog",
-    "module_system_auth",
-    # Everything below position 50 has a driver-green row from r2/r3/r4
-    # (CORRECTNESS_r0{2,3,4}.json); after this round every registry
-    # query has been driver-proven in some round.
-]
+class Query(NamedTuple):
+    """One registry row.
+
+    ``oracle`` is the DuckDB statement, or a zero-arg callable that
+    renders it (so importing this module builds no oracle text); a
+    query without one names why in ``rows_only``. ``tags`` is a
+    space-separated set:
+
+    - ``headline``: timed by bench.py;
+    - ``r2``: the round-2 headline set, reported as its own subtotal so
+      the headline total (which grew 18 → 99 queries across rounds)
+      stays comparable round over round;
+    - ``order_sensitive``: rows depend on a global order or range
+      boundary, so they are oracle-checked at a second scale (sf0.1);
+    - ``needs_reference``: builds from the reference module checkout
+      (``module_scripts.REFERENCE_MODULE_ROOT``) and is skipped, with
+      its reason, where that is absent (see :func:`skip_reason`).
+
+    ``audit`` holds the plan-audit opts (``broadcast``: an enrichment
+    join must broadcast; ``allow_cartesian``: a nested-loop join is
+    deliberate); None leaves the query out of the audit."""
+
+    name: str
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str | Callable[[], str] | None
+    tags: str = ""
+    audit: dict[str, bool] | None = None
+    rows_only: str | None = None
+
+
+# Row order is the driver order: the driver's correctness gate checks
+# the FIRST 50 rows. The flagship leads, then the rows that had no
+# driver-green row when the window was last rotated (rounds 4-5), down
+# to module_system_auth; every row after them has one from r2/r3/r4
+# (CORRECTNESS_r0{2,3,4}.json).
+REGISTRY: tuple[Query, ...] = (
+    # flagship stays first: re-proven every round
+    Query("pipeline_flagship", q_pipeline_flagship, _FLAGSHIP_ORACLE,
+          "headline r2", audit=dict(broadcast=True)),
+    # the 3 r4-red rows (array outputs crashed the driver canon; now
+    # md5-signature shaped, commit addf993)
+    Query("fim_transform", cq.q_fim_transform, cq._FIM_SQL, "headline", audit={}),
+    Query("fim_loss_mask", cq.q_fim_loss_mask, cq._FIM_LOSS_SQL, audit={}),
+    Query("span_corrupt", cq.q_span_corrupt, cq._SPANC_SQL, "headline", audit={}),
+    # curriculum thresholds embed as plan-build literals — pure narrow
+    Query("curriculum_order", cq.q_curriculum_order, cq._CURRICULUM_SQL,
+          "headline", audit={}),
+    Query("length_buckets", cq.q_length_buckets, cq._LENGTH_BUCKETS_SQL,
+          "headline order_sensitive", audit={}),
+    Query("pack_seq_boundaries", cq.q_pack_seq_boundaries, cq._PACK_SEQ_BOUND_SQL,
+          "headline order_sensitive", audit={}),
+    Query("epoch_schedule", cq.q_epoch_schedule, cq._EPOCH_SCHEDULE_SQL,
+          "headline", audit={}),
+    Query("corpus_report", cq.q_corpus_report, cq._corpus_report_sql,
+          "headline", audit={}),
+    # hashed classifier is join-free by construction; truncation is a
+    # narrow n_tok projection + one hash aggregate
+    Query("quality_classifier", cq.q_quality_classifier, cq._QUALITY_CLASSIFIER_SQL,
+          "headline", audit={}),
+    Query("truncation_stats", cq.q_truncation_stats, cq._TRUNCATION_SQL,
+          "headline", audit={}),
+    # NB training: one feature hash agg (totals are plan-build
+    # literals); the trained-scorer composition must broadcast the
+    # vocab-sized weight table into the feature lookup
+    Query("nb_weights", cq.q_nb_weights, cq._NB_WEIGHTS_SQL, "headline", audit={}),
+    Query("quality_classifier_trained", cq.q_quality_classifier_trained,
+          cq._QUALITY_CLASSIFIER_TRAINED_SQL, "headline", audit=dict(broadcast=True)),
+    # source drift: #sources totals broadcast, corpus counts equi-join
+    Query("source_kl", cq.q_source_kl, cq._SOURCE_KL_SQL,
+          "headline", audit=dict(broadcast=True)),
+    # incremental dedup: fingerprint + band-key equi-joins only
+    Query("dedup_incremental", cq.q_dedup_incremental, cq._DEDUP_INCREMENTAL_SQL,
+          "headline", audit={}),
+    # fused rule+score report: zero joins, one agg on source
+    Query("quality_by_source", cq.q_quality_by_source, cq._QUALITY_BY_SOURCE_SQL,
+          "headline", audit={}),
+    # BM25: query-term table broadcasts into the postings scoring join
+    Query("bm25_topk", cq.q_bm25_topk, cq._BM25_TOPK_SQL,
+          "headline", audit=dict(broadcast=True)),
+    # per-bin agg + 1-row global agg over the FFD packing
+    Query("packing_efficiency", cq.q_packing_efficiency, cq._PACKING_EFFICIENCY_SQL,
+          audit={}),
+    # score + clamped keep-probability + id-hash draw: one narrow pass
+    Query("quality_sample", cq.q_quality_sample, cq._QUALITY_SAMPLE_SQL, audit={}),
+    # CC labels resolve EAGERLY at plan build (localCheckpoint rounds);
+    # the audited plan is labels ⋈ docs + the split projection
+    Query("split_leakage_safe", cq.q_split_leakage_safe, cq._SPLIT_LEAKAGE_SAFE_SQL,
+          audit={}),
+    # CCNet tercile derivation: per-(lang,range) offsets broadcast into
+    # the range-split rank (per-group rank over range-split score
+    # boundaries); the vocab feature join broadcasts
+    Query("ppl_buckets", cq.q_ppl_buckets, cq._PPL_BUCKETS_SQL,
+          "headline order_sensitive", audit=dict(broadcast=True)),
+    # id → surface text: the vocab table must broadcast into the
+    # exploded token stream
+    Query("detokenize", cq.q_detokenize, cq._detokenize_sql,
+          "headline", audit=dict(broadcast=True)),
+    # gram min-start hash agg + per-doc mask transform — equi-joins only
+    Query("repeat_ngram_mask", cq.q_repeat_ngram_mask, cq._repeat_ngram_mask_sql,
+          "headline", audit={}),
+    # script composition: pure regexp length-deltas, one codegen pass
+    Query("script_stats", cq.q_script_stats, cq._SCRIPT_STATS_SQL,
+          "headline", audit={}),
+    # merge learning is eager at plan build (bpe_apply discipline); the
+    # audited plan is one Arrow pass + a doc_id equi-join + #langs agg.
+    # Not timed, like bpe_merges/bpe_apply: the plan-build merge
+    # learning dominates and token_pipeline's BPE stage covers it.
+    Query("bpe_compression", cq.q_bpe_compression, cq._bpe_compression_sql, audit={}),
+    Query("compression_ratio", cq.q_compression_ratio, None, "headline",
+          rows_only="no zlib in DuckDB"),
+    # word explode + ONE doc-keyed hash agg (partial dim-vectors)
+    Query("hashed_embedding", cq.q_hashed_embedding, cq._hashed_embedding_sql,
+          audit={}),
+    # two chained hash aggs: groupBy(text)->count then groupBy(count)
+    Query("dup_profile", cq.q_dup_profile, cq._DUP_PROFILE_SQL, "headline", audit={}),
+    # distinct (source,fp) + fp-keyed self-equi-join; per-source totals
+    # broadcast back in
+    Query("source_overlap", cq.q_source_overlap, cq._SOURCE_OVERLAP_SQL,
+          "headline", audit=dict(broadcast=True)),
+    # fp hash agg + counts joined back on the 32-char fp
+    Query("soft_dedup", cq.q_soft_dedup, cq._SOFT_DEDUP_SQL, "headline", audit={}),
+    # eager CC at plan build (like neardup_clusters), then two chained
+    # hash aggs over (doc, canonical)
+    Query("neardup_profile", cq.q_neardup_profile, cq._NEARDUP_PROFILE_SQL,
+          "headline", audit={}),
+    # LSH pair list equi-joined twice against the (id, split)
+    # projection; output ∝ leaking pairs
+    Query("split_leakage_report", cq.q_split_leakage_report,
+          cq._SPLIT_LEAKAGE_REPORT_SQL, "headline", audit={}),
+    # (bucket,shard,batch) hash agg reusing the layout's exchange, then
+    # a log-many-row bucket rollup
+    Query("padding_stats", cq.q_padding_stats, cq._PADDING_STATS_SQL,
+          "headline", audit={}),
+    # K-row bucket counts × 1-row total (linear BNLJ on the tiny side,
+    # temperature_mix discipline), K-row weights broadcast back
+    Query("length_resample", cq.q_length_resample, cq._LENGTH_RESAMPLE_SQL,
+          "headline", audit=dict(broadcast=True, allow_cartesian=True)),
+    # pure array transform+flatten — must stay Exchange-free
+    Query("chat_loss_mask", cq.q_chat_loss_mask, cq._CHAT_LOSS_MASK_SQL,
+          "headline", audit={}),
+    # ONE prompt-keyed hash agg (combinable min/max-of-struct)
+    Query("preference_pairs", cq.q_preference_pairs, cq._PREFERENCE_PAIRS_SQL,
+          "headline", audit={}),
+    # parse -> filter (narrow) -> text-keyed keep-one agg ->
+    # range-partitioned pack; no joins. Ends in pack_sequences'
+    # distributed prefix sum.
+    Query("log_corpus_bridge", cq.q_log_corpus_bridge, cq._LOG_CORPUS_BRIDGE_SQL,
+          "headline order_sensitive", audit={}),
+    # bucketed per-source prefix sum (inclusive-cumsum cut line): tiny
+    # offsets table broadcast back; per-(source,bucket) windows only
+    Query("token_budget_sample", cq.q_token_budget_sample,
+          cq._TOKEN_BUDGET_SAMPLE_SQL, "headline order_sensitive",
+          audit=dict(broadcast=True)),
+    # netflow v5: encode is ONE repartition on packet_id + a batched
+    # mapInPandas packer (carry-over keeps packets whole across Arrow
+    # batches), decode is a narrow mapInPandas; nothing here may
+    # cartesian or BatchEval
+    Query("netflow_parse", q_netflow_parse, _netflow_oracle_sql, "headline", audit={}),
+    # netflow v9 / ipfix: decode shuffles ONCE on the exporter (the
+    # session key — template state must co-locate with its data
+    # packets). rec_pos is a per-packet rank; session replay sorts on
+    # recv_seq.
+    Query("netflow_v9_parse", q_netflow_v9_parse, _netflow_v9_oracle_sql,
+          "headline order_sensitive", audit={}),
+    Query("ipfix_parse", q_ipfix_parse, lambda: _netflow_v9_oracle_sql(ipfix=True),
+          "headline order_sensitive", audit={}),
+    # shard export: ONE hash repartition on shard + sortWithinPartitions
+    # + a streaming mapInPandas writer — no join anywhere. Shard files
+    # are written in sortWithinPartitions order; the stats rows prove
+    # the same bytes land at any scale.
+    Query("token_shard_export", cq.q_token_shard_export, cq._TOKEN_SHARD_EXPORT_SQL,
+          "headline order_sensitive", audit={}),
+    # global_pos = broadcast shard offsets + per-shard window rank
+    Query("batch_schedule", cq.q_batch_schedule, cq._BATCH_SCHEDULE_SQL,
+          "headline order_sensitive"),
+    # aggregates over batch_schedule's order-derived (step, rank) cells
+    Query("step_token_balance", cq.q_step_token_balance, cq._STEP_TOKEN_BALANCE_SQL,
+          "headline order_sensitive"),
+    Query("decode_cef", q_decode_cef, _Q_DECODE_CEF_SQL, "headline", audit={}),
+    # compiled module pipelines: pure projection chains — no Exchange,
+    # no joins, no BatchEvalPython. module_slowlog and module_auditd
+    # each carry exactly ONE Arrow-batched node (the documented
+    # JS-number-parity / ECS-table kernels).
+    Query("module_tidb", q_module_tidb, _Q_MODULE_TIDB_SQL, "headline", audit={}),
+    Query("module_slowlog", q_module_slowlog, _Q_MODULE_SLOWLOG_SQL,
+          "headline", audit={}),
+    # new in r5: the reference's own ingest pipelines, compiled
+    Query("module_nginx", q_module_nginx, _Q_MODULE_NGINX_SQL,
+          "headline needs_reference", audit={}),
+    Query("module_system_syslog", q_module_system_syslog, _Q_MODULE_SYSLOG_SQL,
+          "headline needs_reference", audit={}),
+    # not timed: its 7-pattern grok ladder over unmatched rows is
+    # regex-bound (~10 s at sf0.01 even with the first-match-wins short
+    # circuit); the driver gates its correctness instead
+    Query("module_system_auth", q_module_system_auth, _Q_MODULE_AUTH_SQL,
+          "needs_reference", audit={}),
+    # row 50 on: driver-proven in an earlier round
+    Query("route_fanout", q_route_fanout, _Q_ROUTE_FANOUT_SQL),
+    Query("dissect", q_dissect, _Q_DISSECT_SQL, "headline r2", audit={}),
+    Query("json_decode", q_json_decode, _Q_JSON_DECODE_SQL),
+    Query("conditions", q_conditions, _Q_CONDITIONS_SQL),
+    Query("include_exclude", q_include_exclude, _Q_INCLUDE_EXCLUDE_SQL),
+    # per-key order windows
+    Query("multiline_pattern", q_multiline_pattern, _Q_MULTILINE_PATTERN_SQL,
+          "headline r2 order_sensitive", audit={}),
+    Query("multiline_count", q_multiline_count, _Q_MULTILINE_COUNT_SQL),
+    Query("rate_limit", q_rate_limit, _Q_RATE_LIMIT_SQL, "headline r2", audit={}),
+    Query("rate_limit_salted", q_rate_limit_salted, _Q_RATE_LIMIT_SQL, audit={}),
+    Query("token_bucket", q_token_bucket, _Q_TOKEN_BUCKET_SQL, "headline", audit={}),
+    Query("enrich_lookup", q_enrich_lookup, _Q_ENRICH_LOOKUP_SQL,
+          "headline r2", audit=dict(broadcast=True)),
+    Query("enrich_asof", q_enrich_asof, _Q_ENRICH_ASOF_SQL,
+          "headline", audit=dict(broadcast=True)),
+    Query("enrich_asof_merge", q_enrich_asof_merge, _Q_ENRICH_ASOF_SQL, audit={}),
+    # per-key order windows
+    Query("sessionize", q_sessionize, _Q_SESSIONIZE_SQL,
+          "headline order_sensitive", audit={}),
+    Query("session_agg", q_session_agg, _Q_SESSION_AGG_SQL, audit={}),
+    Query("window_percentiles", q_window_percentiles, _Q_WINDOW_PERCENTILES_SQL,
+          "headline", audit={}),
+    Query("dns_enrich", q_dns_enrich, _Q_DNS_ENRICH_SQL, audit=dict(broadcast=True)),
+    Query("fingerprint", q_fingerprint, _Q_FINGERPRINT_SQL, "headline r2"),
+    Query("mutations", q_mutations, _Q_MUTATIONS_SQL),
+    Query("codec_fields", q_codec_fields, _Q_CODEC_FIELDS_SQL),
+    Query("convert_timestamp", q_convert_timestamp, _Q_CONVERT_TIMESTAMP_SQL),
+    Query("network_direction", q_network_direction, _Q_NETWORK_DIRECTION_SQL),
+    Query("syslog_parse", q_syslog_parse, _syslog_parse_sql, "headline", audit={}),
+    Query("grok_parse", q_grok_parse, _Q_GROK_PARSE_SQL, "headline", audit={}),
+    Query("journald_parse", q_journald_parse, _Q_JOURNALD_PARSE_SQL,
+          "headline", audit={}),
+    Query("sink_triage", q_sink_triage, _Q_SINK_TRIAGE_SQL, audit={}),
+    Query("window_agg", q_window_agg, _Q_WINDOW_AGG_SQL, "headline r2", audit={}),
+    Query("csv_extract", q_csv_extract, _Q_CSV_EXTRACT_SQL, "headline r2", audit={}),
+    Query("streaming_fanout", q_streaming_fanout, _Q_STREAM_FANOUT_SQL),
+    Query("checkpoint_resume", q_checkpoint_resume, _Q_CHECKPOINT_RESUME_SQL),
+    Query("module_postgresql", q_module_postgresql, _Q_MODULE_POSTGRESQL_SQL,
+          "needs_reference", audit={}),
+    Query("module_auditd", q_module_auditd, _Q_MODULE_AUDITD_SQL,
+          "needs_reference", audit={}),
+    Query("dedup_exact", cq.q_dedup_exact, cq._DEDUP_EXACT_SQL,
+          "headline r2", audit={}),
+    Query("text_stats", cq.q_text_stats, cq._text_stats_sql, "headline r2", audit={}),
+    Query("quality_filters", cq.q_quality_filters, cq._quality_filters_sql,
+          "headline", audit={}),
+    Query("lm_score", cq.q_lm_score, cq._LM_SCORE_SQL,
+          "headline", audit=dict(broadcast=True)),
+    Query("lm_score_bigram", cq.q_lm_score_bigram, cq._LM_SCORE_BIGRAM_SQL,
+          "headline", audit=dict(broadcast=True)),
+    Query("lm_score_lang", cq.q_lm_score_lang, cq._LM_SCORE_LANG_SQL,
+          "headline", audit=dict(broadcast=True)),
+    Query("dsir_weights", cq.q_dsir_weights, cq._DSIR_WEIGHTS_SQL,
+          "headline", audit=dict(broadcast=True)),
+    Query("lang_id", cq.q_lang_id, cq._lang_id_sql),
+    Query("doc_fingerprint", cq.q_doc_fingerprint, cq._DOC_FINGERPRINT_SQL),
+    Query("winnow_fp", cq.q_winnow_fp, cq._WINNOW_FP_SQL, audit={}),
+    Query("winnow_neardup", cq.q_winnow_neardup, cq._WINNOW_NEARDUP_SQL,
+          "headline", audit={}),
+    Query("simhash", cq.q_simhash, cq._SIMHASH_SQL, "headline r2"),
+    Query("minhash_neardup", cq.q_minhash_neardup, cq._MINHASH_NEARDUP_SQL,
+          "headline r2", audit={}),
+    Query("neardup_clusters", cq.q_neardup_clusters, cq._NEARDUP_CLUSTERS_SQL,
+          "headline", audit={}),
+    Query("neardup_survivors", cq.q_neardup_survivors, cq._NEARDUP_SURVIVORS_SQL,
+          audit={}),
+    Query("neardup_survivors_best", cq.q_neardup_survivors_best,
+          cq._NEARDUP_SURVIVORS_BEST_SQL),
+    Query("ngram_jaccard", cq.q_ngram_jaccard, cq._NGRAM_JACCARD_SQL),
+    Query("simhash_neardup", cq.q_simhash_neardup, cq._SIMHASH_NEARDUP_SQL),
+    # gated exact APIs: at the audit sf (0.01, 500 vectors) the auto
+    # gate picks the cross join — the deliberate small-n fast path; the
+    # blocked twins prove the scale plan is cartesian-free (that is
+    # their whole point)
+    Query("embedding_topk", cq.q_embedding_topk, cq._EMBEDDING_TOPK_SQL,
+          "headline r2", audit=dict(allow_cartesian=True)),
+    Query("embedding_topk_blocked", cq.q_embedding_topk_blocked,
+          cq._EMBEDDING_TOPK_SQL, "headline r2", audit={}),
+    Query("embedding_neardup", cq.q_embedding_neardup, cq._EMBEDDING_NEARDUP_SQL,
+          audit=dict(allow_cartesian=True)),
+    Query("embedding_neardup_blocked", cq.q_embedding_neardup_blocked,
+          cq._EMBEDDING_NEARDUP_SQL, "headline r2", audit={}),
+    Query("ann_lsh", cq.q_ann_lsh, cq._ann_lsh_sql, "headline r2", audit={}),
+    Query("ann_ivf", cq.q_ann_ivf, cq._ann_ivf_sql, "headline r2", audit={}),
+    Query("ann_ivf_sqrtn", cq.q_ann_ivf_sqrtn, lambda: cq._ann_ivf_sql(45),
+          "headline r2", audit={}),
+    Query("ann_ivf_nprobe", cq.q_ann_ivf_nprobe,
+          lambda: cq._ann_ivf_sql(45, nprobe=3), "headline", audit={}),
+    Query("ann_ivf_pq", cq.q_ann_ivf_pq, cq._ann_ivf_pq_sql, "headline", audit={}),
+    Query("ann_ivf_pq_nprobe", cq.q_ann_ivf_pq_nprobe,
+          lambda: cq._ann_ivf_pq_sql(nprobe=3), "headline", audit={}),
+    Query("ann_ivf_pq_rerank", cq.q_ann_ivf_pq_rerank,
+          lambda: cq._ann_ivf_pq_sql(nprobe=3, rerank=4), "headline", audit={}),
+    Query("semantic_dedup", cq.q_semantic_dedup, cq._semantic_dedup_sql,
+          "headline", audit={}),
+    Query("dedup_tokens", cq.q_dedup_tokens, cq._DEDUP_TOKENS_SQL, audit={}),
+    Query("pii_redact", cq.q_pii_redact, cq._pii_redact_sql, audit={}),
+    Query("hash_sample", cq.q_hash_sample, cq._HASH_SAMPLE_SQL),
+    # range partitioning
+    Query("shuffle_shards", cq.q_shuffle_shards, cq._SHUFFLE_SHARDS_SQL,
+          "order_sensitive", audit={}),
+    Query("mix_sources", cq.q_mix_sources, cq._MIX_SOURCES_SQL),
+    # temperature mixing joins a ONE-ROW global aggregate back via
+    # crossJoin(broadcast(...)) — Spark plans a scalar-dim
+    # BroadcastNestedLoopJoin, which is linear (n × 1), not quadratic;
+    # the per-source rate dim itself is a BroadcastHashJoin
+    Query("temperature_mix", cq.q_temperature_mix, cq._TEMPERATURE_MIX_SQL,
+          "headline", audit=dict(broadcast=True, allow_cartesian=True)),
+    Query("temperature_rates", cq.q_temperature_rates, cq._TEMPERATURE_RATES_SQL,
+          audit=dict(allow_cartesian=True)),
+    # broadcast-GEMM decontamination is a single narrow mapInPandas — no
+    # join at all; the audit just proves no cartesian/BatchEval crept in
+    Query("semantic_decontaminate", cq.q_semantic_decontaminate,
+          cq._SEMANTIC_DECON_SQL, "headline", audit={}),
+    Query("pack_training_meta", cq.q_pack_training_meta, cq._PACK_META_SQL,
+          "headline order_sensitive", audit={}),
+    Query("line_dedup", cq.q_line_dedup, cq._LINE_DEDUP_SQL, "headline", audit={}),
+    Query("line_dedup_within", cq.q_line_dedup_within, cq._LINE_DEDUP_WITHIN_SQL,
+          "headline", audit={}),
+    Query("substring_dedup", cq.q_substring_dedup, cq._SUBSTRING_DEDUP_SQL,
+          "headline", audit={}),
+    Query("substring_dedup_tokens", cq.q_substring_dedup_tokens,
+          cq._SUBSTRING_DEDUP_TOKENS_SQL, "headline", audit={}),
+    Query("minhash_neardup_tokens", cq.q_minhash_neardup_tokens,
+          cq._MINHASH_NEARDUP_TOKENS_SQL, "headline", audit={}),
+    Query("decontaminate", cq.q_decontaminate, cq._DECONTAMINATE_SQL,
+          "headline", audit=dict(broadcast=True)),
+    Query("decontaminate_report", cq.q_decontaminate_report,
+          cq._DECONTAMINATE_REPORT_SQL, audit=dict(broadcast=True)),
+    Query("decontaminate_spans", cq.q_decontaminate_spans, cq._DECONTAMINATE_SPANS_SQL,
+          "headline", audit=dict(broadcast=True)),
+    Query("decontaminate_spans_tokens", cq.q_decontaminate_spans_tokens,
+          cq._DECONTAMINATE_SPANS_TOKENS_SQL, "headline", audit=dict(broadcast=True)),
+    # packing: distributed prefix sums
+    Query("pack_sequences", cq.q_pack_sequences, cq._PACK_SEQUENCES_SQL,
+          "headline order_sensitive", audit={}),
+    Query("chunk_tokens", cq.q_chunk_tokens, cq._CHUNK_TOKENS_SQL, "headline", audit={}),
+    Query("top_ngram", cq.q_top_ngram, cq._TOP_NGRAM_SQL, "headline", audit={}),
+    Query("pack_sequences_sig", cq.q_pack_sequences_sig, cq._PACK_SEQUENCES_SIG_SQL),
+    Query("split_assign", cq.q_split_assign, cq._SPLIT_ASSIGN_SQL, audit={}),
+    Query("vocab_histogram", cq.q_vocab_histogram, cq._VOCAB_HISTOGRAM_SQL, audit={}),
+    Query("token_bigrams", cq.q_token_bigrams, cq._TOKEN_BIGRAMS_SQL, audit={}),
+    Query("token_stats", cq.q_token_stats, cq._TOKEN_STATS_SQL, "headline", audit={}),
+    Query("bpe_merges", cq.q_bpe_merges, cq._bpe_merges_sql),
+    Query("bpe_apply", cq.q_bpe_apply, cq._bpe_apply_sql, audit={}),
+    Query("token_pipeline", cq.q_token_pipeline, cq._TOKEN_PIPELINE_SQL,
+          "headline", audit={}),
+    Query("winnow_neardup_tokens", cq.q_winnow_neardup_tokens,
+          cq._WINNOW_NEARDUP_TOKENS_SQL, "headline", audit={}),
+    Query("pack_bins", cq.q_pack_bins, cq._PACK_BINS_SQL,
+          "headline order_sensitive", audit={}),
+    Query("pack_bins_sequences", cq.q_pack_bins_sequences, cq._PACK_BINS_SEQ_SQL,
+          "headline order_sensitive", audit={}),
+    Query("sample_per_source", cq.q_sample_per_source, cq._SAMPLE_PER_SOURCE_SQL,
+          audit={}),
+    Query("vocab_coverage", cq.q_vocab_coverage, cq._VOCAB_COVERAGE_SQL, audit={}),
+    # composed cleaning pipeline: the decon benchmark broadcast runs
+    # EAGERLY inside the stage materialization (localCheckpoint), so the
+    # audited final plan starts from the checkpointed RDD; its only
+    # remaining join is survivors ⋈ docs on doc_id — correctly a
+    # shuffle join (the survivor set is ~corpus-sized; broadcasting it
+    # would be the 100 TB bug). decontaminate's own broadcast is
+    # audited on its row.
+    Query("corpus_pipeline", cq.q_corpus_pipeline, cq._corpus_pipeline_sql,
+          "headline", audit={}),
+    Query("corpus_pipeline_funnel", cq.q_corpus_pipeline_funnel,
+          cq._corpus_pipeline_funnel_sql, audit={}),
+)
+
+
+def rows(tag: str) -> list[Query]:
+    """The registry rows carrying ``tag``, in registry order."""
+    return [r for r in REGISTRY if tag in r.tags.split()]
+
+
+def skip_reason(row: Query) -> str | None:
+    """Why ``row`` cannot build on this host, or None when it can."""
+    from beats_spark import module_scripts
+
+    root = module_scripts.REFERENCE_MODULE_ROOT
+    if "needs_reference" in row.tags.split() and not os.path.isdir(root):
+        return f"reference module checkout {root} not present"
+    return None
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from beats_spark.corpus.entry_queries import corpus_queries
-
-    q = {
-        "pipeline_flagship": q_pipeline_flagship,
-        "route_fanout": q_route_fanout,
-        "dissect": q_dissect,
-        "json_decode": q_json_decode,
-        "conditions": q_conditions,
-        "include_exclude": q_include_exclude,
-        "multiline_pattern": q_multiline_pattern,
-        "multiline_count": q_multiline_count,
-        "rate_limit": q_rate_limit,
-        "rate_limit_salted": q_rate_limit_salted,
-        "token_bucket": q_token_bucket,
-        "enrich_lookup": q_enrich_lookup,
-        "enrich_asof": q_enrich_asof,
-        "enrich_asof_merge": q_enrich_asof_merge,
-        "sessionize": q_sessionize,
-        "session_agg": q_session_agg,
-        "window_percentiles": q_window_percentiles,
-        "dns_enrich": q_dns_enrich,
-        "fingerprint": q_fingerprint,
-        "mutations": q_mutations,
-        "codec_fields": q_codec_fields,
-        "convert_timestamp": q_convert_timestamp,
-        "network_direction": q_network_direction,
-        "syslog_parse": q_syslog_parse,
-        "grok_parse": q_grok_parse,
-        "journald_parse": q_journald_parse,
-        "sink_triage": q_sink_triage,
-        "window_agg": q_window_agg,
-        "csv_extract": q_csv_extract,
-        "streaming_fanout": q_streaming_fanout,
-        "checkpoint_resume": q_checkpoint_resume,
-        "netflow_parse": q_netflow_parse,
-        "netflow_v9_parse": q_netflow_v9_parse,
-        "ipfix_parse": q_ipfix_parse,
-        "decode_cef": q_decode_cef,
-        "module_tidb": q_module_tidb,
-        "module_slowlog": q_module_slowlog,
-        "module_nginx": q_module_nginx,
-        "module_system_syslog": q_module_system_syslog,
-        "module_system_auth": q_module_system_auth,
-        "module_postgresql": q_module_postgresql,
-        "module_auditd": q_module_auditd,
-    }
-    q.update(corpus_queries())
-    ordered = {k: q[k] for k in _DRIVER_WINDOW_PRIORITY}
-    ordered.update({k: v for k, v in q.items() if k not in ordered})
-    return ordered
+    return {r.name: r.build for r in REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
-    from beats_spark.corpus.entry_queries import corpus_oracles
-
-    o = {
-        "pipeline_flagship": _FLAGSHIP_ORACLE,
-        "route_fanout": _Q_ROUTE_FANOUT_SQL,
-        "dissect": _Q_DISSECT_SQL,
-        "json_decode": _Q_JSON_DECODE_SQL,
-        "conditions": _Q_CONDITIONS_SQL,
-        "include_exclude": _Q_INCLUDE_EXCLUDE_SQL,
-        "multiline_pattern": _Q_MULTILINE_PATTERN_SQL,
-        "multiline_count": _Q_MULTILINE_COUNT_SQL,
-        "rate_limit": _Q_RATE_LIMIT_SQL,
-        "rate_limit_salted": _Q_RATE_LIMIT_SQL,
-        "token_bucket": _Q_TOKEN_BUCKET_SQL,
-        "enrich_lookup": _Q_ENRICH_LOOKUP_SQL,
-        "enrich_asof": _Q_ENRICH_ASOF_SQL,
-        "enrich_asof_merge": _Q_ENRICH_ASOF_SQL,
-        "sessionize": _Q_SESSIONIZE_SQL,
-        "session_agg": _Q_SESSION_AGG_SQL,
-        "window_percentiles": _Q_WINDOW_PERCENTILES_SQL,
-        "dns_enrich": _Q_DNS_ENRICH_SQL,
-        "fingerprint": _Q_FINGERPRINT_SQL,
-        "mutations": _Q_MUTATIONS_SQL,
-        "codec_fields": _Q_CODEC_FIELDS_SQL,
-        "convert_timestamp": _Q_CONVERT_TIMESTAMP_SQL,
-        "network_direction": _Q_NETWORK_DIRECTION_SQL,
-        "syslog_parse": _syslog_parse_sql(),
-        "grok_parse": _Q_GROK_PARSE_SQL,
-        "journald_parse": _Q_JOURNALD_PARSE_SQL,
-        "sink_triage": _Q_SINK_TRIAGE_SQL,
-        "window_agg": _Q_WINDOW_AGG_SQL,
-        "csv_extract": _Q_CSV_EXTRACT_SQL,
-        "streaming_fanout": _Q_STREAM_FANOUT_SQL,
-        "checkpoint_resume": _Q_CHECKPOINT_RESUME_SQL,
-        "netflow_parse": _netflow_oracle_sql(),
-        "netflow_v9_parse": _netflow_v9_oracle_sql(),
-        "ipfix_parse": _netflow_v9_oracle_sql(ipfix=True),
-        "decode_cef": _Q_DECODE_CEF_SQL,
-        "module_tidb": _Q_MODULE_TIDB_SQL,
-        "module_slowlog": _Q_MODULE_SLOWLOG_SQL,
-        "module_nginx": _Q_MODULE_NGINX_SQL,
-        "module_system_syslog": _Q_MODULE_SYSLOG_SQL,
-        "module_system_auth": _Q_MODULE_AUTH_SQL,
-        "module_postgresql": _Q_MODULE_POSTGRESQL_SQL,
-        "module_auditd": _Q_MODULE_AUDITD_SQL,
+    return {
+        r.name: r.oracle if isinstance(r.oracle, str) else r.oracle()
+        for r in REGISTRY
+        if r.oracle is not None
     }
-    o.update(corpus_oracles())
-    return o

@@ -1,5 +1,4 @@
-"""Training-data corpus operators: dedup, text analysis, similarity,
-multimodal plumbing.
+"""Training-data corpus operators: dedup, text analysis, similarity.
 
 These extend the log-pipeline engine with the operations a large-scale
 training-data pipeline needs over document/embedding tables — all
@@ -10,4 +9,4 @@ an equi-join on band keys; embedding ANN buckets via random
 hyperplanes; nothing collects to the driver.
 """
 
-from beats_spark.corpus import dedup, hashing, multimodal, similarity, textstats  # noqa: F401
+from beats_spark.corpus import dedup, hashing, similarity, textstats  # noqa: F401

@@ -1,4 +1,5 @@
-"""Driver-contract queries + DuckDB oracles for the corpus operators.
+"""Driver-contract queries + DuckDB oracles for the corpus operators
+(registered as rows of ``__spark_entry__.REGISTRY``).
 
 Each Spark query runs the engine operator; the oracle re-derives the
 same result in pure SQL (md5-based portable hashing makes minhash /
@@ -9,12 +10,10 @@ drift."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from beats_spark.corpus import dedup, multimodal, similarity, textstats
+from beats_spark.corpus import dedup, similarity, textstats
 
 H32_SQL = "('0x' || substr(md5({expr}), 1, 8))::BIGINT"
 
@@ -559,9 +558,6 @@ QUALIFY rank <= {k}
 """
 
 
-# -- multimodal --------------------------------------------------------------
-
-
 def q_ann_ivf_nprobe(spark, sf_dir):
     """Multi-probe IVF (nprobe=3 of 45 cells): the recall lever — each
     query searches its 3 nearest cells; candidates stay an equi-join."""
@@ -732,46 +728,6 @@ dups AS (
 )
 SELECT c.vec_id, c.cell::INT AS cell, (d.vec_id IS NOT NULL) AS is_semdup
 FROM cells c LEFT JOIN dups d ON c.vec_id = d.vec_id
-"""
-
-
-def q_media_features(spark, sf_dir):
-    media = multimodal.synth_media(_docs(spark, sf_dir))
-    return multimodal.extract_features(media, fake_decode=True).select(
-        "media_id", "kind", "n_bytes", "sha", "sniffed_format", "width", "height"
-    )
-
-
-_MEDIA_FEATURES_SQL = """
-WITH m AS (
-  SELECT CAST(doc_id AS VARCHAR) AS media_id,
-         ['image','audio','video'][CAST(doc_id % 3 AS INT) + 1] AS kind,
-         ['IMG0','AUD0','VID0'][CAST(doc_id % 3 AS INT) + 1] || text AS payload
-  FROM documents
-)
-SELECT media_id, kind,
-       (octet_length(payload::BLOB))::BIGINT AS n_bytes,
-       sha256(payload) AS sha,
-       'fake' AS sniffed_format,
-       (64 + ('0x' || substr(md5(payload), 1, 2))::INT % 192)::INT AS width,
-       (64 + ('0x' || substr(md5(payload), 3, 2))::INT % 192)::INT AS height
-FROM m
-"""
-
-
-def q_frame_sample(spark, sf_dir):
-    media = multimodal.synth_media(_docs(spark, sf_dir))
-    return multimodal.frame_sample(media)
-
-
-_FRAME_SAMPLE_SQL = """
-WITH m AS (
-  SELECT CAST(doc_id AS VARCHAR) AS media_id,
-         octet_length((['VID0'][1] || text)::BLOB) AS n
-  FROM documents WHERE doc_id % 3 = 2
-)
-SELECT media_id, frame_no::INT AS frame_no, (frame_no * 64)::INT AS frame_offset
-FROM (SELECT media_id, unnest(range(0, least(n // 64, 7) + 1)) AS frame_no FROM m)
 """
 
 
@@ -955,6 +911,10 @@ FROM (
 """
 
 
+def _repeat_ngram_mask_sql() -> str:
+    return _REPEAT_NGRAM_MASK_SQL.format(tokenize=_TOKENIZE_SQL, n=3)
+
+
 def q_detokenize(spark, sf_dir):
     """Round trip: tokenize_ids → hash_vocab surface table →
     detokenize. Where the corpus has no id collision the text comes
@@ -986,6 +946,11 @@ re AS (
 SELECT d.doc_id, coalesce(re.text, '') AS text
 FROM documents d LEFT JOIN re ON re.doc_id = d.doc_id
 """
+
+
+def _detokenize_sql() -> str:
+    return _DETOKENIZE_SQL.format(tokenize=_TOKENIZE_SQL,
+                                  h32w=H32_SQL.format(expr="w"), vocab=_TOKVOCAB)
 
 
 _HE_DIM = 8
@@ -1413,263 +1378,6 @@ SELECT doc_id FROM (
   FROM cl
 ) WHERE rn = 1
 """
-
-
-def q_media_embed(spark, sf_dir):
-    """EmbedModel hook end-to-end: the deterministic fake encoder over
-    the synthetic media table; oracle re-derives the md5-byte embedding
-    in SQL. Exploded to scalar rows for the driver hasher."""
-    media = multimodal.synth_media(_docs(spark, sf_dir))
-    out = multimodal.embed_media(media, multimodal.FakeEmbedModel(dim=8))
-    return out.select(
-        "media_id",
-        F.posexplode("embedding").alias("pos", "component"),
-    )
-
-
-_MEDIA_EMBED_SQL = """
-WITH m AS (
-  SELECT CAST(doc_id AS VARCHAR) AS media_id,
-         md5(['IMG0', 'AUD0', 'VID0'][(doc_id % 3) + 1] || text) AS hx
-  FROM documents
-)
-SELECT media_id, pos::INT AS pos,
-       (('0x' || substr(hx, (pos % 16) * 2 + 1, 2))::INT / 255.0) AS component
-FROM m, (SELECT unnest(range(0, 8)) AS pos)
-"""
-
-
-def corpus_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "dedup_exact": q_dedup_exact,
-        "dup_profile": q_dup_profile,
-        "source_overlap": q_source_overlap,
-        "soft_dedup": q_soft_dedup,
-        "neardup_profile": q_neardup_profile,
-        "split_leakage_report": q_split_leakage_report,
-        "text_stats": q_text_stats,
-        "quality_filters": q_quality_filters,
-        "lm_score": q_lm_score,
-        "lm_score_bigram": q_lm_score_bigram,
-        "lm_score_lang": q_lm_score_lang,
-        "dsir_weights": q_dsir_weights,
-        "lang_id": q_lang_id,
-        "doc_fingerprint": q_doc_fingerprint,
-        "winnow_fp": q_winnow_fp,
-        "winnow_neardup": q_winnow_neardup,
-        "simhash": q_simhash,
-        "minhash_neardup": q_minhash_neardup,
-        "neardup_clusters": q_neardup_clusters,
-        "neardup_survivors": q_neardup_survivors,
-        "neardup_survivors_best": q_neardup_survivors_best,
-        "ngram_jaccard": q_ngram_jaccard,
-        "simhash_neardup": q_simhash_neardup,
-        "embedding_topk": q_embedding_topk,
-        "embedding_topk_blocked": q_embedding_topk_blocked,
-        "embedding_neardup": q_embedding_neardup,
-        "embedding_neardup_blocked": q_embedding_neardup_blocked,
-        "ann_lsh": q_ann_lsh,
-        "ann_ivf": q_ann_ivf,
-        "ann_ivf_sqrtn": q_ann_ivf_sqrtn,
-        "ann_ivf_nprobe": q_ann_ivf_nprobe,
-        "ann_ivf_pq": q_ann_ivf_pq,
-        "ann_ivf_pq_nprobe": q_ann_ivf_pq_nprobe,
-        "ann_ivf_pq_rerank": q_ann_ivf_pq_rerank,
-        "semantic_dedup": q_semantic_dedup,
-        "media_features": q_media_features,
-        "media_embed": q_media_embed,
-        "dedup_tokens": q_dedup_tokens,
-        "pii_redact": q_pii_redact,
-        "hash_sample": q_hash_sample,
-        "shuffle_shards": q_shuffle_shards,
-        "mix_sources": q_mix_sources,
-        "temperature_mix": q_temperature_mix,
-        "temperature_rates": q_temperature_rates,
-        "fim_transform": q_fim_transform,
-        "fim_loss_mask": q_fim_loss_mask,
-        "span_corrupt": q_span_corrupt,
-        "curriculum_order": q_curriculum_order,
-        "length_buckets": q_length_buckets,
-        "padding_stats": q_padding_stats,
-        "length_resample": q_length_resample,
-        "chat_loss_mask": q_chat_loss_mask,
-        "preference_pairs": q_preference_pairs,
-        "log_corpus_bridge": q_log_corpus_bridge,
-        "token_budget_sample": q_token_budget_sample,
-        "pack_seq_boundaries": q_pack_seq_boundaries,
-        "epoch_schedule": q_epoch_schedule,
-        "corpus_report": q_corpus_report,
-        "semantic_decontaminate": q_semantic_decontaminate,
-        "pack_training_meta": q_pack_training_meta,
-        "line_dedup": q_line_dedup,
-        "line_dedup_within": q_line_dedup_within,
-        "substring_dedup": q_substring_dedup,
-        "substring_dedup_tokens": q_substring_dedup_tokens,
-        "minhash_neardup_tokens": q_minhash_neardup_tokens,
-        "decontaminate": q_decontaminate,
-        "decontaminate_report": q_decontaminate_report,
-        "decontaminate_spans": q_decontaminate_spans,
-        "decontaminate_spans_tokens": q_decontaminate_spans_tokens,
-        "pack_sequences": q_pack_sequences,
-        "chunk_tokens": q_chunk_tokens,
-        "top_ngram": q_top_ngram,
-        "pack_sequences_sig": q_pack_sequences_sig,
-        "split_assign": q_split_assign,
-        "vocab_histogram": q_vocab_histogram,
-        "token_bigrams": q_token_bigrams,
-        "token_stats": q_token_stats,
-        "bpe_merges": q_bpe_merges,
-        "bpe_apply": q_bpe_apply,
-        "bpe_compression": q_bpe_compression,
-        "token_pipeline": q_token_pipeline,
-        "winnow_neardup_tokens": q_winnow_neardup_tokens,
-        "pack_bins": q_pack_bins,
-        "pack_bins_sequences": q_pack_bins_sequences,
-        "sample_per_source": q_sample_per_source,
-        "vocab_coverage": q_vocab_coverage,
-        "frame_sample": q_frame_sample,
-        "corpus_pipeline": q_corpus_pipeline,
-        "corpus_pipeline_funnel": q_corpus_pipeline_funnel,
-        "quality_classifier": q_quality_classifier,
-        "truncation_stats": q_truncation_stats,
-        "nb_weights": q_nb_weights,
-        "quality_classifier_trained": q_quality_classifier_trained,
-        "source_kl": q_source_kl,
-        "dedup_incremental": q_dedup_incremental,
-        "quality_by_source": q_quality_by_source,
-        "bm25_topk": q_bm25_topk,
-        "packing_efficiency": q_packing_efficiency,
-        "quality_sample": q_quality_sample,
-        "split_leakage_safe": q_split_leakage_safe,
-        "ppl_buckets": q_ppl_buckets,
-        "script_stats": q_script_stats,
-        "compression_ratio": q_compression_ratio,
-        "hashed_embedding": q_hashed_embedding,
-        "detokenize": q_detokenize,
-        "repeat_ngram_mask": q_repeat_ngram_mask,
-        "token_shard_export": q_token_shard_export,
-        "batch_schedule": q_batch_schedule,
-        "step_token_balance": q_step_token_balance,
-    }
-
-
-def corpus_oracles() -> dict[str, str]:
-    return {
-        "dedup_exact": _DEDUP_EXACT_SQL,
-        "dup_profile": _DUP_PROFILE_SQL,
-        "source_overlap": _SOURCE_OVERLAP_SQL,
-        "soft_dedup": _SOFT_DEDUP_SQL,
-        "neardup_profile": _NEARDUP_PROFILE_SQL,
-        "split_leakage_report": _SPLIT_LEAKAGE_REPORT_SQL,
-        "text_stats": _text_stats_sql(),
-        "quality_filters": _quality_filters_sql(),
-        "lm_score": _LM_SCORE_SQL,
-        "lm_score_bigram": _LM_SCORE_BIGRAM_SQL,
-        "lm_score_lang": _LM_SCORE_LANG_SQL,
-        "dsir_weights": _DSIR_WEIGHTS_SQL,
-        "lang_id": _lang_id_sql(),
-        "doc_fingerprint": _DOC_FINGERPRINT_SQL,
-        "winnow_fp": _WINNOW_FP_SQL,
-        "winnow_neardup": _WINNOW_NEARDUP_SQL,
-        "simhash": _SIMHASH_SQL,
-        "minhash_neardup": _MINHASH_NEARDUP_SQL,
-        "neardup_clusters": _NEARDUP_CLUSTERS_SQL,
-        "neardup_survivors": _NEARDUP_SURVIVORS_SQL,
-        "neardup_survivors_best": _NEARDUP_SURVIVORS_BEST_SQL,
-        "ngram_jaccard": _NGRAM_JACCARD_SQL,
-        "simhash_neardup": _SIMHASH_NEARDUP_SQL,
-        "embedding_topk": _EMBEDDING_TOPK_SQL,
-        "embedding_topk_blocked": _EMBEDDING_TOPK_SQL,
-        "embedding_neardup": _EMBEDDING_NEARDUP_SQL,
-        "embedding_neardup_blocked": _EMBEDDING_NEARDUP_SQL,
-        "ann_lsh": _ann_lsh_sql(),
-        "ann_ivf": _ann_ivf_sql(),
-        "ann_ivf_sqrtn": _ann_ivf_sql(45),
-        "ann_ivf_nprobe": _ann_ivf_sql(45, nprobe=3),
-        "ann_ivf_pq": _ann_ivf_pq_sql(),
-        "ann_ivf_pq_nprobe": _ann_ivf_pq_sql(nprobe=3),
-        "ann_ivf_pq_rerank": _ann_ivf_pq_sql(nprobe=3, rerank=4),
-        "semantic_dedup": _semantic_dedup_sql(),
-        "media_features": _MEDIA_FEATURES_SQL,
-        "media_embed": _MEDIA_EMBED_SQL,
-        "dedup_tokens": _DEDUP_TOKENS_SQL,
-        "pii_redact": _pii_redact_sql(),
-        "hash_sample": _HASH_SAMPLE_SQL,
-        "shuffle_shards": _SHUFFLE_SHARDS_SQL,
-        "mix_sources": _MIX_SOURCES_SQL,
-        "temperature_mix": _TEMPERATURE_MIX_SQL,
-        "temperature_rates": _TEMPERATURE_RATES_SQL,
-        "fim_transform": _FIM_SQL,
-        "fim_loss_mask": _FIM_LOSS_SQL,
-        "span_corrupt": _SPANC_SQL,
-        "curriculum_order": _CURRICULUM_SQL,
-        "length_buckets": _LENGTH_BUCKETS_SQL,
-        "padding_stats": _PADDING_STATS_SQL,
-        "length_resample": _LENGTH_RESAMPLE_SQL,
-        "chat_loss_mask": _CHAT_LOSS_MASK_SQL,
-        "preference_pairs": _PREFERENCE_PAIRS_SQL,
-        "log_corpus_bridge": _LOG_CORPUS_BRIDGE_SQL,
-        "token_budget_sample": _TOKEN_BUDGET_SAMPLE_SQL,
-        "pack_seq_boundaries": _PACK_SEQ_BOUND_SQL,
-        "epoch_schedule": _EPOCH_SCHEDULE_SQL,
-        "corpus_report": _corpus_report_sql(),
-        "semantic_decontaminate": _SEMANTIC_DECON_SQL,
-        "pack_training_meta": _PACK_META_SQL,
-        "line_dedup": _LINE_DEDUP_SQL,
-        "line_dedup_within": _LINE_DEDUP_WITHIN_SQL,
-        "substring_dedup": _SUBSTRING_DEDUP_SQL,
-        "substring_dedup_tokens": _SUBSTRING_DEDUP_TOKENS_SQL,
-        "minhash_neardup_tokens": _MINHASH_NEARDUP_TOKENS_SQL,
-        "decontaminate": _DECONTAMINATE_SQL,
-        "decontaminate_report": _DECONTAMINATE_REPORT_SQL,
-        "decontaminate_spans": _DECONTAMINATE_SPANS_SQL,
-        "decontaminate_spans_tokens": _DECONTAMINATE_SPANS_TOKENS_SQL,
-        "pack_sequences": _PACK_SEQUENCES_SQL,
-        "chunk_tokens": _CHUNK_TOKENS_SQL,
-        "top_ngram": _TOP_NGRAM_SQL,
-        "pack_sequences_sig": _PACK_SEQUENCES_SIG_SQL,
-        "split_assign": _SPLIT_ASSIGN_SQL,
-        "vocab_histogram": _VOCAB_HISTOGRAM_SQL,
-        "token_bigrams": _TOKEN_BIGRAMS_SQL,
-        "token_stats": _TOKEN_STATS_SQL,
-        "bpe_merges": _bpe_merges_sql(),
-        "bpe_apply": _bpe_apply_sql(),
-        "bpe_compression": _bpe_compression_sql(),
-        "token_pipeline": _TOKEN_PIPELINE_SQL,
-        "winnow_neardup_tokens": _WINNOW_NEARDUP_TOKENS_SQL,
-        "pack_bins": _PACK_BINS_SQL,
-        "pack_bins_sequences": _PACK_BINS_SEQ_SQL,
-        "sample_per_source": _SAMPLE_PER_SOURCE_SQL,
-        "vocab_coverage": _VOCAB_COVERAGE_SQL,
-        "frame_sample": _FRAME_SAMPLE_SQL,
-        "corpus_pipeline": _corpus_pipeline_sql(),
-        "corpus_pipeline_funnel": _corpus_pipeline_funnel_sql(),
-        "quality_classifier": _QUALITY_CLASSIFIER_SQL,
-        "truncation_stats": _TRUNCATION_SQL,
-        "nb_weights": _NB_WEIGHTS_SQL,
-        "quality_classifier_trained": _QUALITY_CLASSIFIER_TRAINED_SQL,
-        "source_kl": _SOURCE_KL_SQL,
-        "dedup_incremental": _DEDUP_INCREMENTAL_SQL,
-        "quality_by_source": _QUALITY_BY_SOURCE_SQL,
-        "bm25_topk": _BM25_TOPK_SQL,
-        "packing_efficiency": _PACKING_EFFICIENCY_SQL,
-        "quality_sample": _QUALITY_SAMPLE_SQL,
-        "split_leakage_safe": _SPLIT_LEAKAGE_SAFE_SQL,
-        "ppl_buckets": _PPL_BUCKETS_SQL,
-        "script_stats": _SCRIPT_STATS_SQL,
-        "hashed_embedding": _hashed_embedding_sql(),
-        "repeat_ngram_mask": _REPEAT_NGRAM_MASK_SQL.format(
-            tokenize=_TOKENIZE_SQL, n=3
-        ),
-        "detokenize": _DETOKENIZE_SQL.format(
-            tokenize=_TOKENIZE_SQL,
-            h32w=H32_SQL.format(expr="w"),
-            vocab=_TOKVOCAB,
-        ),
-        "token_shard_export": _TOKEN_SHARD_EXPORT_SQL,
-        "batch_schedule": _BATCH_SCHEDULE_SQL,
-        "step_token_balance": _STEP_TOKEN_BALANCE_SQL,
-    }
 
 
 # -- token-sequence operators (training-data layout) ---------------------------

@@ -56,7 +56,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from beats_spark.conditions import masked_assigns, try_cast_or_null
+from beats_spark.conditions import keep_old, masked_assigns, try_cast_or_null
 
 __all__ = [
     "IngestCompileError",
@@ -1036,10 +1036,12 @@ def _p_kv(df, cfg, fmsg):
 
         def join_vals(_k, v1, v2):
             both = v1.isNotNull() & v2.isNotNull()
+            # a '['-prefixed v1 that is not a JSON list (from_json
+            # gives null) is a plain value: append it as one element
             appended = F.when(
                 v1.startswith("["),
-                F.to_json(F.concat(
-                    F.from_json(v1, "array<string>"), F.array(v2)))
+                F.to_json(F.concat(F.coalesce(
+                    F.from_json(v1, "array<string>"), F.array(v1)), F.array(v2)))
             ).otherwise(F.to_json(F.array(v1, v2)))
             return F.when(both, appended).otherwise(F.coalesce(v2, v1))
 
@@ -1071,9 +1073,11 @@ def _p_csv(df, cfg, fmsg):
         # with (element, index), and F.trim's second param is a trim-SET —
         # F.transform(arr, F.trim) would strip the stringified index chars
         arr = F.transform(arr, lambda x: F.trim(x))
-    # try_element_at: a row with fewer values than target_fields leaves
-    # the remaining targets unset (ES CsvParser stops at the last value)
-    assigns = {t: F.try_element_at(arr, F.lit(i + 1))
+    # a row with fewer values than target_fields leaves the remaining
+    # targets unset (ES CsvParser stops at the last value): an existing
+    # target keeps its old value there
+    assigns = {t: keep_old(df, F.size(arr) > i, F.try_element_at(arr, F.lit(i + 1)),
+                           t, T.StringType())
                for i, t in enumerate(targets) if t != ""}
     fails = None if cfg.get("ignore_missing", False) else _missing(df, fld)
     return assigns, fails, f"field [{fld}] not present"

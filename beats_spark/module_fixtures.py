@@ -35,12 +35,10 @@ import os
 import re
 from dataclasses import dataclass, field
 
-from beats_spark.module_scripts import load_module_pipeline
+from beats_spark.module_scripts import REFERENCE_MODULE_ROOT as REF, load_module_pipeline
 
 __all__ = ["FIXTURE_INPUT", "FixtureInput", "run_fixture", "diff_rows",
            "fixture_names", "EXCLUDED_FIELDS"]
-
-REF = "/root/reference/filebeat/module"
 
 # fields never compared (see module docstring)
 EXCLUDED_FIELDS = re.compile(

@@ -644,8 +644,8 @@ MODULE_SCRIPT_HANDLERS: dict[tuple[str, str], dict] = {
 
 
 def module_pipeline_path(module: str, fileset: str,
-                         ref_root: str = REFERENCE_MODULE_ROOT) -> str:
-    d = os.path.join(ref_root, module, fileset, "ingest")
+                         ref_root: str | None = None) -> str:
+    d = os.path.join(ref_root or REFERENCE_MODULE_ROOT, module, fileset, "ingest")
     for name in ("pipeline.yml", "pipeline.json"):
         p = os.path.join(d, name)
         if os.path.exists(p):
@@ -654,7 +654,7 @@ def module_pipeline_path(module: str, fileset: str,
 
 
 def load_module_pipeline(module: str, fileset: str, *,
-                         ref_root: str = REFERENCE_MODULE_ROOT,
+                         ref_root: str | None = None,
                          **kwargs) -> IngestPipeline:
     """Compile the reference's ingest pipeline for ``module/fileset``
     with this registry's translated script handlers wired in."""

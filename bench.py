@@ -1,5 +1,5 @@
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+"""Benchmark runner: the registry's ``headline`` rows at
+$SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 
 Two measurements:
 
@@ -18,138 +18,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = [
-    "pipeline_flagship",
-    "dissect",
-    "multiline_pattern",
-    "rate_limit",
-    "token_bucket",
-    "enrich_lookup",
-    "enrich_asof",
-    "sessionize",
-    "window_agg",
-    "window_percentiles",
-    "syslog_parse",
-    "grok_parse",
-    "journald_parse",
-    "fingerprint",
-    "dedup_exact",
-    "text_stats",
-    "simhash",
-    "minhash_neardup",
-    "winnow_neardup",
-    "winnow_neardup_tokens",
-    "neardup_clusters",
-    "quality_filters",
-    "lm_score",
-    "lm_score_bigram",
-    "lm_score_lang",
-    "dsir_weights",
-    "line_dedup",
-    "line_dedup_within",
-    "substring_dedup",
-    "substring_dedup_tokens",
-    "minhash_neardup_tokens",
-    "decontaminate",
-    "decontaminate_spans",
-    "decontaminate_spans_tokens",
-    "corpus_pipeline",
-    "token_pipeline",
-    "pack_sequences",
-    "pack_bins",
-    "pack_bins_sequences",
-    "chunk_tokens",
-    "token_stats",
-    "top_ngram",
-    "embedding_topk",
-    "embedding_topk_blocked",
-    "semantic_dedup",
-    "embedding_neardup_blocked",
-    "ann_lsh",
-    "ann_ivf",
-    "ann_ivf_sqrtn",
-    "ann_ivf_nprobe",
-    "ann_ivf_pq",
-    "ann_ivf_pq_nprobe",
-    "ann_ivf_pq_rerank",
-    "temperature_mix",
-    "fim_transform",
-    "semantic_decontaminate",
-    "pack_training_meta",
-    "span_corrupt",
-    "curriculum_order",
-    "length_buckets",
-    "pack_seq_boundaries",
-    "epoch_schedule",
-    "corpus_report",
-    "quality_classifier",
-    "quality_classifier_trained",
-    "nb_weights",
-    "quality_by_source",
-    "truncation_stats",
-    "source_kl",
-    "dedup_incremental",
-    "bm25_topk",
-    "csv_extract",
-    # r4 late additions (all narrow or equi-join plans at sf0.1 scale;
-    # bpe_compression is excluded like bpe_merges/bpe_apply — its
-    # plan-build merge learning dominates and is covered by
-    # token_pipeline's BPE stage)
-    "ppl_buckets",
-    "detokenize",
-    "repeat_ngram_mask",
-    "script_stats",
-    "compression_ratio",
-    "dup_profile",
-    "source_overlap",
-    "soft_dedup",
-    "neardup_profile",
-    "split_leakage_report",
-    "padding_stats",
-    "length_resample",
-    "chat_loss_mask",
-    "preference_pairs",
-    "log_corpus_bridge",
-    "token_budget_sample",
-    "netflow_parse",
-    "netflow_v9_parse",
-    "ipfix_parse",
-    "token_shard_export",
-    "batch_schedule",
-    "step_token_balance",
-    "decode_cef",
-    "module_tidb",
-    "module_slowlog",
-    # r5: ES-ingest-compiled reference module pipelines (narrow
-    # grok-ladder projections). module_system_auth is excluded like
-    # bpe_merges: its 7-pattern grok ladder over unmatched rows is
-    # regex-bound (~10s at sf0.01 even with the first-match-wins short
-    # circuit) and is correctness-gated by the driver instead.
-    "module_nginx",
-    "module_system_syslog",
-]
-
-#: the round-2 headline set — reported as its own subtotal so the
-#: headline `value` (which grew 18 → 52 queries across rounds) stays
-#: comparable round-over-round
-R2_SUBSET = [
-    "pipeline_flagship", "dissect", "multiline_pattern", "rate_limit",
-    "enrich_lookup", "window_agg", "fingerprint", "dedup_exact",
-    "text_stats", "simhash", "minhash_neardup", "embedding_topk",
-    "embedding_topk_blocked", "embedding_neardup_blocked", "ann_lsh",
-    "ann_ivf", "ann_ivf_sqrtn", "csv_extract",
-]
-
-#: deliberately scale-UNSAFE exactness baselines, timed once and
-#: reported OUTSIDE the headline total (the headline tracks only paths
-#: that survive 100x scale-up; embedding_topk itself is the gated API
-#: and delegates to the blocked GEMM path above the small-n gate)
-BASELINES = {
-    "embedding_topk_crossjoin": lambda similarity, emb: similarity.cosine_topk(
-        emb, k=3, mode="crossjoin"
-    ),
-}
 
 PIPELINE_ROWS = int(os.environ.get("BENCH_PIPELINE_ROWS", "1000000"))
 
@@ -250,10 +118,15 @@ def main() -> None:
     spark = get_spark("bench", master=f"local[{cpus}]",
                       shuffle_partitions=int(cpus))
 
-    qs = entry.queries()
     times: dict[str, float] = {}
     query_reps: dict[str, int] = {}
-    for name in HEADLINE:
+    skipped: dict[str, str] = {}
+    for row in entry.rows("headline"):
+        why = entry.skip_reason(row)
+        if why:
+            skipped[row.name] = why
+            print(f"skipped {row.name}: {why}", file=sys.stderr)
+            continue
         reps = []
         # min-of-reps: the host stalls runs at random. Sub-second
         # queries drift 1.3-1.8x on host windows alone, so they get
@@ -264,22 +137,12 @@ def main() -> None:
             # components loop, the auto-gate count) do real work at
             # plan-build time and must be charged
             t0 = time.time()
-            materialize(qs[name](spark, sf_dir))
+            materialize(row.build(spark, sf_dir))
             reps.append(time.time() - t0)
             if i >= 1 and min(reps) >= 1.0:
                 break
-        times[name] = round(min(reps), 3)
-        query_reps[name] = len(reps)
-
-    # scale-unsafe exactness baselines: timed once, outside the headline
-    from beats_spark.corpus import similarity as _sim
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    baselines: dict[str, float] = {}
-    for name, build in BASELINES.items():
-        t0 = time.time()
-        materialize(build(_sim, emb))
-        baselines[name] = round(time.time() - t0, 3)
+        times[row.name] = round(min(reps), 3)
+        query_reps[row.name] = len(reps)
 
     eps, nrows, rep_secs = run_pipeline_throughput(spark)
     ml_scale = run_multiline_scale(
@@ -290,13 +153,14 @@ def main() -> None:
     out = {
         "metric": "headline query seconds + pipeline events/sec",
         "value": round(sum(times.values()), 3),
+        # the round-2 headline set as its own subtotal (see the r2 tag)
         "value_r2_subset": round(
-            sum(times[n] for n in R2_SUBSET if n in times), 3
+            sum(times[r.name] for r in entry.rows("r2") if r.name in times), 3
         ),
         "unit": "sec",
         "queries": times,
         "query_reps": query_reps,
-        "baselines": baselines,
+        "skipped": skipped,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         # in-process measurement — superseded below by the pinned
         # spark-submit steady-state run when the scaling section runs

@@ -1,7 +1,8 @@
 """Physical-plan audit: verify the plans are the ones we want at scale.
 
-For each headline query, render ``explain("formatted")`` and check the
-scale-critical properties mechanically:
+For each registry row with audit opts (``__spark_entry__.REGISTRY``),
+render ``explain("formatted")`` and check the scale-critical properties
+mechanically:
 
 - parquet scans carry **PushedFilters** / pruned **ReadSchema** where
   the query filters/projects (predicate pushdown + column pruning hit
@@ -10,9 +11,11 @@ scale-critical properties mechanically:
   fact side for dims);
 - the hot path sits inside **WholeStageCodegen** spans (JVM-compiled,
   no per-row Python);
-- no **CartesianProduct** / BroadcastNestedLoopJoin anywhere.
+- no **CartesianProduct** / BroadcastNestedLoopJoin anywhere (unless
+  the row's ``allow_cartesian`` says it is deliberate).
 
-Writes PLANS.md with the verdict table + annotated excerpts.
+Rows that cannot build on this host (``skip_reason``) are listed as
+skipped. Writes PLANS.md with the verdict table + annotated excerpts.
 
     python scripts/explain_audit.py
 """
@@ -27,211 +30,6 @@ from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-AUDITED = {
-    "pipeline_flagship": dict(broadcast=True),
-    "dissect": dict(),
-    "multiline_pattern": dict(),
-    "rate_limit": dict(),
-    "enrich_lookup": dict(broadcast=True),
-    "window_agg": dict(),
-    "dedup_exact": dict(),
-    "text_stats": dict(),
-    "minhash_neardup": dict(),
-    # brute-force cosine top-k is BY DESIGN a cross join (the exhaustive
-    # baseline the LSH variant is measured against) — allow it there only
-    "embedding_topk": dict(allow_cartesian=True),
-    # the blocked exact path must NOT have one — that's its whole point
-    "embedding_topk_blocked": dict(),
-    "embedding_neardup_blocked": dict(),
-    "ann_lsh": dict(),
-    "ann_ivf": dict(),
-    "ann_ivf_sqrtn": dict(),
-    "sink_triage": dict(),
-    "dns_enrich": dict(broadcast=True),
-    "enrich_asof": dict(broadcast=True),
-    "enrich_asof_merge": dict(),
-    "sessionize": dict(),
-    "session_agg": dict(),
-    "window_percentiles": dict(),
-    "csv_extract": dict(),
-    # round-3 additions
-    "syslog_parse": dict(),
-    "grok_parse": dict(),
-    "journald_parse": dict(),
-    "winnow_fp": dict(),
-    "winnow_neardup": dict(),
-    "winnow_neardup_tokens": dict(),
-    "quality_filters": dict(),
-    "neardup_clusters": dict(),
-    "neardup_survivors": dict(),
-    "ann_ivf_nprobe": dict(),
-    "ann_ivf_pq": dict(),
-    "ann_ivf_pq_nprobe": dict(),
-    "semantic_dedup": dict(),
-    "lm_score": dict(broadcast=True),
-    "lm_score_bigram": dict(broadcast=True),
-    "dsir_weights": dict(broadcast=True),
-    "lm_score_lang": dict(broadcast=True),
-    "media_embed": dict(),
-    "media_features": dict(),
-    "frame_sample": dict(),
-    # gated exact APIs: at the audit sf (0.01, 500 vectors) the auto
-    # gate picks the cross join — the deliberate small-n fast path; the
-    # blocked twins above prove the scale plan is cartesian-free
-    "embedding_neardup": dict(allow_cartesian=True),
-    "rate_limit_salted": dict(),
-    "token_bucket": dict(),
-    "dedup_tokens": dict(),
-    # round-4 additions
-    "ann_ivf_pq_rerank": dict(),
-    # netflow v5: encode is ONE repartition on packet_id + a batched
-    # mapInPandas packer (carry-over keeps packets whole across Arrow
-    # batches), decode is a narrow mapInPandas; nothing here may
-    # cartesian or BatchEval
-    "netflow_parse": dict(),
-    # netflow v9: decode shuffles ONCE on the exporter (the session
-    # key — template state must co-locate with its data packets);
-    # same no-cartesian/no-BatchEval bar
-    "netflow_v9_parse": dict(),
-    "ipfix_parse": dict(),
-    # compiled reference module pipelines: pure projection chains —
-    # no Exchange, no joins, no BatchEvalPython. module_slowlog and
-    # module_auditd each carry exactly ONE Arrow-batched node (the
-    # documented JS-number-parity / ECS-table kernels).
-    "module_tidb": dict(),
-    "module_slowlog": dict(),
-    "module_nginx": dict(),
-    "module_system_syslog": dict(),
-    "module_system_auth": dict(),
-    "module_postgresql": dict(),
-    "module_auditd": dict(),
-    "decode_cef": dict(),
-    # temperature mixing joins a ONE-ROW global aggregate back via
-    # crossJoin(broadcast(...)) — Spark plans a scalar-dim
-    # BroadcastNestedLoopJoin, which is linear (n × 1), not quadratic;
-    # the per-source rate dim itself is a BroadcastHashJoin
-    "temperature_rates": dict(allow_cartesian=True),
-    "temperature_mix": dict(broadcast=True, allow_cartesian=True),
-    "fim_transform": dict(),
-    "fim_loss_mask": dict(),
-    "span_corrupt": dict(),
-    # curriculum thresholds embed as plan-build literals — pure narrow
-    "curriculum_order": dict(),
-    "length_buckets": dict(),
-    "pack_seq_boundaries": dict(),
-    "epoch_schedule": dict(),
-    "corpus_report": dict(),
-    # broadcast-GEMM decontamination is a single narrow mapInPandas —
-    # no join at all; the audit just proves no cartesian/BatchEval crept in
-    "semantic_decontaminate": dict(),
-    "pack_training_meta": dict(),
-    "pack_sequences": dict(),
-    "pack_bins": dict(),
-    "pack_bins_sequences": dict(),
-    "chunk_tokens": dict(),
-    "top_ngram": dict(),
-    "vocab_histogram": dict(),
-    "vocab_coverage": dict(),
-    "sample_per_source": dict(),
-    "token_bigrams": dict(),
-    "split_assign": dict(),
-    "pii_redact": dict(),
-    "shuffle_shards": dict(),
-    "line_dedup": dict(),
-    "line_dedup_within": dict(),
-    "substring_dedup": dict(),
-    "substring_dedup_tokens": dict(),
-    "minhash_neardup_tokens": dict(),
-    "token_stats": dict(),
-    "bpe_apply": dict(),
-    "decontaminate": dict(broadcast=True),
-    "decontaminate_report": dict(broadcast=True),
-    "decontaminate_spans": dict(broadcast=True),
-    "decontaminate_spans_tokens": dict(broadcast=True),
-    # composed cleaning pipeline: the decon benchmark broadcast runs
-    # EAGERLY inside the stage materialization (localCheckpoint), so the
-    # audited final plan starts from the checkpointed RDD; its only
-    # remaining join is survivors ⋈ docs on doc_id — correctly a
-    # shuffle join (the survivor set is ~corpus-sized; broadcasting it
-    # would be the 100 TB bug). decontaminate's own broadcast is audited
-    # standalone above.
-    "corpus_pipeline": dict(),
-    "token_pipeline": dict(),
-    "corpus_pipeline_funnel": dict(),
-    # hashed classifier is join-free by construction; truncation is a
-    # narrow n_tok projection + one hash aggregate
-    "quality_classifier": dict(),
-    "truncation_stats": dict(),
-    # NB training: one feature hash agg (totals are plan-build
-    # literals); the trained-scorer composition must broadcast the
-    # vocab-sized weight table into the feature lookup
-    "nb_weights": dict(),
-    "quality_classifier_trained": dict(broadcast=True),
-    # source drift: #sources totals broadcast, corpus counts equi-join
-    "source_kl": dict(broadcast=True),
-    # incremental dedup: fingerprint + band-key equi-joins only
-    "dedup_incremental": dict(),
-    # fused rule+score report: zero joins, one agg on source
-    "quality_by_source": dict(),
-    # BM25: query-term table broadcasts into the postings scoring join
-    "bm25_topk": dict(broadcast=True),
-    # per-bin agg + 1-row global agg over the FFD packing
-    "packing_efficiency": dict(),
-    # score + clamped keep-probability + id-hash draw: one narrow pass
-    "quality_sample": dict(),
-    # CC labels resolve EAGERLY at plan build (localCheckpoint rounds);
-    # the audited plan is labels ⋈ docs + the split projection
-    "split_leakage_safe": dict(),
-    # CCNet tercile derivation: per-(lang,range) offsets broadcast into
-    # the range-split rank; the vocab feature join broadcasts
-    "ppl_buckets": dict(broadcast=True),
-    # id → surface text: the vocab table must broadcast into the
-    # exploded token stream
-    "detokenize": dict(broadcast=True),
-    # gram min-start hash agg + per-doc mask transform — equi-joins only
-    "repeat_ngram_mask": dict(),
-    # shard export: ONE hash repartition on shard + sortWithinPartitions
-    # + a streaming mapInPandas writer — no join anywhere
-    "token_shard_export": dict(),
-    # script composition: pure regexp length-deltas, one codegen pass
-    "script_stats": dict(),
-    # merge learning is eager at plan build (bpe_apply discipline);
-    # the audited plan is one Arrow pass + a doc_id equi-join + #langs agg
-    "bpe_compression": dict(),
-    # word explode + ONE doc-keyed hash agg (partial dim-vectors)
-    "hashed_embedding": dict(),
-    # two chained hash aggs: groupBy(text)->count then groupBy(count)
-    "dup_profile": dict(),
-    # distinct (source,fp) + fp-keyed self-equi-join; per-source
-    # totals broadcast back in
-    "source_overlap": dict(broadcast=True),
-    # fp hash agg + counts joined back on the 32-char fp
-    "soft_dedup": dict(),
-    # eager CC at plan build (like neardup_clusters), then two
-    # chained hash aggs over (doc, canonical)
-    "neardup_profile": dict(),
-    # LSH pair list equi-joined twice against the (id, split)
-    # projection; output ∝ leaking pairs
-    "split_leakage_report": dict(),
-    # (bucket,shard,batch) hash agg reusing the layout's exchange,
-    # then a log-many-row bucket rollup
-    "padding_stats": dict(),
-    # K-row bucket counts × 1-row total (linear BNLJ on tiny side,
-    # temperature_mix discipline), K-row weights broadcast back
-    "length_resample": dict(broadcast=True, allow_cartesian=True),
-    # pure array transform+flatten — must stay Exchange-free
-    "chat_loss_mask": dict(),
-    # ONE prompt-keyed hash agg (combinable min/max-of-struct)
-    "preference_pairs": dict(),
-    # parse -> filter (narrow) -> text-keyed keep-one agg ->
-    # range-partitioned pack; no joins
-    "log_corpus_bridge": dict(),
-    # bucketed per-source prefix sum: tiny offsets table broadcast
-    # back; per-(source,bucket) windows only
-    "token_budget_sample": dict(broadcast=True),
-}
-
 
 def extra_frames(spark, sf_dir):
     """Plan-audit targets that are not driver queries: the spool drain
@@ -265,7 +63,8 @@ def plan_text(df) -> str:
     return buf.getvalue()
 
 
-def audit(name: str, text: str, broadcast: bool, allow_cartesian: bool = False) -> list[str]:
+def audit(name: str, text: str, broadcast: bool = False,
+          allow_cartesian: bool = False) -> list[str]:
     problems = []
     if not allow_cartesian and (
         "CartesianProduct" in text or "BroadcastNestedLoopJoin" in text
@@ -293,15 +92,21 @@ def main() -> None:
     # the static plan instead (AQE only re-plans exchanges at runtime).
     spark = get_spark("explain_audit", master="local[4]", shuffle_partitions=4,
                       extra_conf={"spark.sql.adaptive.enabled": "false"})
-    qs = entry.queries()
-
     results: dict[str, tuple[list[str], str]] = {}
-    targets = {n: (qs[n](spark, sf_dir), o) for n, o in AUDITED.items()}
+    skipped: dict[str, str] = {}
+    targets = {}
+    for row in entry.REGISTRY:
+        if row.audit is None:
+            continue
+        why = entry.skip_reason(row)
+        if why:
+            skipped[row.name] = why
+            continue
+        targets[row.name] = (row.build(spark, sf_dir), row.audit)
     targets.update(extra_frames(spark, sf_dir))
     for name, (df, opts) in targets.items():
         text = plan_text(df)
-        results[name] = (audit(name, text, opts.get("broadcast", False),
-                       opts.get("allow_cartesian", False)), text)
+        results[name] = (audit(name, text, **opts), text)
 
     out = ["# PLANS — physical-plan audit of headline queries\n"]
     out.append("Generated by `python scripts/explain_audit.py` (sf=%s).\n" % sf_dir)
@@ -313,6 +118,8 @@ def main() -> None:
         pf = "yes" if re.search(r"PushedFilters: \[[^\]]", text) else "—"
         verdict = "OK" if not problems else "; ".join(problems)
         out.append(f"| {name} | {bj} | {wsc} spans | {pf} | {verdict} |")
+    for name, why in skipped.items():
+        out.append(f"| {name} | — | — | — | skipped: {why} |")
     out.append("")
 
     for name, (problems, text) in results.items():
@@ -323,6 +130,8 @@ def main() -> None:
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     bad = {n: p for n, (p, _) in results.items() if p}
+    for name, why in skipped.items():
+        print(f"skipped {name}: {why}")
     print("PLANS.md written;", "ALL OK" if not bad else f"issues: {bad}")
     if bad:
         sys.exit(1)

@@ -111,8 +111,13 @@ def main():
     qs = entry.queries()
     oracles = entry.oracle_sql()
     failures = []
-    for name in qs:
+    for row in entry.REGISTRY:
+        name = row.name
         if only and name not in only:
+            continue
+        why = entry.skip_reason(row)
+        if why:
+            print(f"skip {name}: {why}")
             continue
         t0 = time.time()
         info: dict = {}

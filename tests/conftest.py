@@ -18,3 +18,22 @@ def rows(df, *cols):
         (tuple(r) for r in sel.collect()),
         key=lambda t: tuple((v is None, str(v)) for v in t),
     )
+
+
+@pytest.fixture(scope="session")
+def registry_frames(spark, tmp_path_factory):
+    """``{name: DataFrame}`` for every registry row that builds without
+    the reference module checkout, built once at sf0.001 with the
+    reference root pointed at a missing directory. Some rows do eager
+    work at build time, so the tests that need every row share this."""
+    import os
+
+    import __spark_entry__ as entry
+    from beats_spark import module_scripts
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(module_scripts, "REFERENCE_MODULE_ROOT",
+                   str(tmp_path_factory.mktemp("no_reference") / "absent"))
+        return {r.name: r.build(spark, sf_dir)
+                for r in entry.REGISTRY if not entry.skip_reason(r)}

@@ -1,5 +1,5 @@
 """Tests for the training-data corpus operators (dedup, textstats,
-similarity, multimodal)."""
+similarity)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.corpus import dedup, multimodal, similarity, textstats
+from beats_spark.corpus import dedup, similarity, textstats
 from beats_spark.corpus.hashing import h32, shingles, word_tokens
 from tests.conftest import rows
 
@@ -224,49 +224,6 @@ def test_blocked_neardup_matches_crossjoin(spark):
     want = sorted(rows(similarity.embedding_neardup_pairs(df, 0.8), *cols))
     got = sorted(rows(similarity.embedding_neardup_blocked(df, 0.8, n_blocks=4), *cols))
     assert got == want and len(want) > 0
-
-
-# -- multimodal --------------------------------------------------------------
-
-
-def test_decode_media_stub():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_media(b"\x89PNG....")
-    d1 = multimodal.decode_media(b"IMG0abc", fake=True)
-    d2 = multimodal.decode_media(b"IMG0abc", fake=True)
-    assert d1 == d2
-    assert 64 <= d1["width"] < 256 and 64 <= d1["height"] < 256
-
-
-def test_media_features_pipeline(spark):
-    docs = spark.createDataFrame(
-        [(i, f"text payload {i}", "src0") for i in range(6)],
-        "doc_id long, text string, source string",
-    )
-    media = multimodal.synth_media(docs)
-    assert [f.name for f in media.schema.fields] == ["media_id", "kind", "data", "meta"]
-    feats = multimodal.extract_features(media, fake_decode=True)
-    got = {r["media_id"]: r for r in feats.collect()}
-    assert len(got) == 6
-    r0 = got["0"]
-    payload = b"IMG0text payload 0"
-    assert r0["n_bytes"] == len(payload)
-    assert r0["sha"] == hashlib.sha256(payload).hexdigest()
-    assert r0["sniffed_format"] == "fake"
-    assert r0["kind"] == "image"
-
-
-def test_frame_sample_video_only(spark):
-    docs = spark.createDataFrame(
-        [(2, "x" * 200, "src0"), (1, "y" * 200, "src0")],
-        "doc_id long, text string, source string",
-    )
-    media = multimodal.synth_media(docs)
-    frames = rows(multimodal.frame_sample(media, every_n_bytes=64, max_frames=8),
-                  "media_id", "frame_no", "frame_offset")
-    # only doc_id=2 is video; 204 bytes → floor(204/64)=3 → frames 0..3
-    assert [f[0] for f in frames] == ["2"] * 4
-    assert [f[2] for f in frames] == [0, 64, 128, 192]
 
 
 def test_lang_id_pluggable_scorer(spark):
@@ -658,27 +615,6 @@ def test_quality_filters_metrics(spark):
     assert r["n_bullet_lines"] == 2
     assert r["n_ellipsis_lines"] == 2
     assert r["n_symbol_marks"] == 2  # two '...' runs, no '#'
-
-
-def test_embed_media_fake_model(spark):
-    """EmbedModel hook: a fake encoder plugs in, output shape feeds the
-    ANN operators directly (media_id + array<double> of model.dim)."""
-    from beats_spark.corpus.multimodal import FakeEmbedModel, embed_media, synth_media
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    media = synth_media(docs.limit(20))
-    out = embed_media(media, FakeEmbedModel(dim=6))
-    rows = out.collect()
-    assert len(rows) == 20
-    assert all(len(r["embedding"]) == 6 for r in rows)
-    # deterministic: same blob -> same embedding
-    again = {r["media_id"]: r["embedding"] for r in out.collect()}
-    assert all(again[r["media_id"]] == r["embedding"] for r in rows)
-    # composes with the similarity operators
-    from beats_spark.corpus.similarity import cosine_topk
-    emb = out.withColumn("vec_id", F.col("media_id").cast("long"))
-    top = cosine_topk(emb, k=1, mode="crossjoin")
-    assert top.count() == 20
 
 
 # -- token-sequence operators --------------------------------------------------

@@ -9,6 +9,8 @@ convert/set/rename/urldecode/kv/csv processor kernels.
 """
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -148,6 +150,36 @@ def test_module_shaped_pipeline_kv_csv_date_split(spark):
     assert str(r["@timestamp"]).startswith("2026-01-02 03:04:05")
     assert r["tags_raw"] == ["t1", "t2", "extra"]
     assert r["row"] is None  # remove = null-out (documented: guarded drop)
+
+
+def test_kv_duplicate_key_keeps_a_bracketed_plain_value(spark):
+    """Two kv passes into one target append a key found in both into a
+    list. A first value that starts with '[' but is not a JSON list is
+    a plain value: both values survive (ES appendFieldValue)."""
+    cfg = {"processors": [
+        {"kv": {"field": "message", "field_split": " ",
+                "value_split": "=", "target_field": "kv"}},
+        {"kv": {"field": "more", "field_split": " ",
+                "value_split": "=", "target_field": "kv"}},
+    ]}
+    got, _ = _run(spark, cfg, [("a=[x b=1", "a=y"), ("a=z", "a=y")],
+                  "message string, more string")
+    assert json.loads(got["a=[x b=1"]["kv"]["a"]) == ["[x", "y"]
+    assert got["a=[x b=1"]["kv"]["b"] == "1"
+    assert json.loads(got["a=z"]["kv"]["a"]) == ["z", "y"]
+
+
+def test_csv_short_row_leaves_existing_targets_unset(spark):
+    """ES CsvParser stops at the last value: targets past it keep the
+    value they had (a typed one under the masked-write type rules)."""
+    cfg = {"processors": [
+        {"csv": {"field": "message", "target_fields": ["a", "b", "c", "n"]}}]}
+    got, _ = _run(spark, cfg, [("1,2", "old_b", "old_c", 7),
+                               ("w,x,y,8", "old_b", "old_c", 7)],
+                  "message string, b string, c string, n bigint")
+    assert (got["1,2"]["a"], got["1,2"]["b"], got["1,2"]["c"]) == ("1", "2", "old_c")
+    assert got["1,2"]["n"] == "7"
+    assert (got["w,x,y,8"]["c"], got["w,x,y,8"]["n"]) == ("y", "8")
 
 
 def test_script_refuses_without_handler_and_runs_with_one(spark):

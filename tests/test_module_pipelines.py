@@ -31,9 +31,7 @@ from beats_spark.module_fixtures import (
     FIXTURE_INPUT, diff_rows, fixture_names, run_fixture,
 )
 from beats_spark.module_scripts import MODULE_SCRIPT_HANDLERS, \
-    load_module_pipeline
-
-REF = "/root/reference/filebeat/module"
+    REFERENCE_MODULE_ROOT as REF, load_module_pipeline
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(REF), reason="reference checkout not present")

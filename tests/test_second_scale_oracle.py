@@ -24,38 +24,9 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF01 = "/root/testdata/sf0.1"
+import __spark_entry__ as entry  # noqa: E402
 
-# every operator whose rows depend on a global order / range boundary:
-# packing (distributed prefix sums), sharding (range partitioning),
-# sessionization + multiline (per-key order windows)
-ORDER_SENSITIVE = [
-    "pack_sequences",
-    "pack_bins",
-    "pack_bins_sequences",
-    "pack_training_meta",
-    "pack_seq_boundaries",
-    "length_buckets",
-    "shuffle_shards",
-    "sessionize",
-    "multiline_pattern",
-    # per-group rank over range-split score boundaries (CCNet terciles)
-    "ppl_buckets",
-    # bucketed per-source prefix sum (inclusive-cumsum cut line)
-    "token_budget_sample",
-    # ends in pack_sequences' distributed prefix sum
-    "log_corpus_bridge",
-    # rec_pos is a per-packet rank; session replay sorts on recv_seq
-    "netflow_v9_parse",
-    "ipfix_parse",
-    # shard files are written in sortWithinPartitions order; the stats
-    # rows prove the same bytes land at any scale
-    "token_shard_export",
-    # global_pos = broadcast shard offsets + per-shard window rank
-    "batch_schedule",
-    # aggregates over batch_schedule's order-derived (step, rank) cells
-    "step_token_balance",
-]
+SF01 = "/root/testdata/sf0.1"
 
 
 @pytest.fixture(scope="module")
@@ -69,7 +40,9 @@ def sf01_oracle():
     con.close()
 
 
-@pytest.mark.parametrize("name", ORDER_SENSITIVE)
+# every operator whose rows depend on a global order / range boundary:
+# the registry's ``order_sensitive`` rows (each row says why)
+@pytest.mark.parametrize("name", [r.name for r in entry.rows("order_sensitive")])
 def test_second_scale_oracle(spark, sf01_oracle, name):
     from scripts.oracle_check import compare_query
 

@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from beats_spark.module_scripts import REFERENCE_MODULE_ROOT
 from beats_spark.modules import (
     SLOWLOG_MULTILINE_PATTERN,
     UNIFIED_MULTILINE_PATTERN,
@@ -19,7 +20,7 @@ from beats_spark.modules import (
 from beats_spark.multiline import multiline_pattern
 from beats_spark.readers import read_log_lines
 
-_MODULE_DIR = "/root/reference/filebeat/module/tidb"
+_MODULE_DIR = os.path.join(REFERENCE_MODULE_ROOT, "tidb")
 
 needs_fixtures = pytest.mark.skipif(
     not os.path.isdir(_MODULE_DIR),
