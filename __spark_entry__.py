@@ -2420,7 +2420,8 @@ class Query(NamedTuple):
 
     ``audit`` holds the plan-audit opts (``broadcast``: an enrichment
     join must broadcast; ``allow_cartesian``: a nested-loop join is
-    deliberate); None leaves the query out of the audit."""
+    deliberate); None leaves the query out of the plan-shape rules, but
+    not out of the repeated-regex rule, which every row gets."""
 
     name: str
     build: Callable[[SparkSession, str], DataFrame]

@@ -344,3 +344,24 @@ def assign_where(df: DataFrame, active: Column | None,
     if active is not None:
         assigns = masked_assigns(df, active, assigns)
     return df.withColumns(assigns) if assigns else df
+
+
+def once(df: DataFrame, name: str, col: Column) -> DataFrame:
+    """``df.withColumn(name, col)``, computed once per row whatever
+    later reads it.
+
+    A plain projected column is not enough for an expensive ``col`` (a
+    parse regex, a Python UDF). ``CollapseProject`` leaves a
+    multi-referenced column alone, but predicate pushdown does not: a
+    filter on anything derived from ``col`` is pushed below the
+    projection with ``col`` substituted into it, once per reference,
+    and the projection still computes its own copy (a ``drop_event`` on
+    a dissected field ran the dissect regex three times per row).
+
+    Here ``col`` goes through a one-element ``explode(array(col))``, a
+    Generate node. Catalyst pushes through a Generate only the
+    conjuncts that do not read its output, so a filter on a parsed
+    field stays above the single evaluation, while a filter on any
+    other column still reaches the scan. The row count is unchanged: the
+    array always holds exactly one element, a null one included."""
+    return df.withColumn(name, F.explode(F.array(col)))

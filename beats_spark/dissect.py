@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from beats_spark.conditions import assign_where
+from beats_spark.conditions import assign_where, once
 
 _TOKEN_RE = re.compile(r"%\{([^}]*)\}")
 _KEY_RE = re.compile(
@@ -186,27 +186,20 @@ class DissectPattern:
     SEP = "\x01"
     MARK = "\x02"
 
-    def marked_column(self, src: Column) -> Column:
-        """One regex evaluation → "\\x02" + captures joined by SEP when the
-        pattern matches; the input unchanged when it doesn't. Because every
-        match is rewritten to start with MARK, ``marked != src`` is exact:
-        an unmatched line passes through identical, and a matched line's
-        rewrite always differs from itself (it would have to both start
-        with MARK and equal its own capture-join to collide)."""
+    def parts_column(self, src: Column) -> Column:
+        """One regex evaluation → the captured group values (group g =
+        element_at(parts, g)). A match is rewritten to "\\x02" + captures
+        joined by SEP and split on SEP; an unmatched line passes through
+        unchanged. The MARK prefix stays on element 1 (see
+        :func:`matched`); ``extract_columns`` strips it there, so only
+        the first field is copied, never the whole line."""
         assert self._regex is not None
         ngroups = max((f.group for f in self.fields if f.group), default=0)
         rep = self.MARK + self.SEP.join(f"${g}" for g in range(1, ngroups + 1))
         # dissect allows (ignores) trailing text after the last delimiter;
         # the replacement form must swallow it so only captures remain.
         pattern = self._regex if self._regex.endswith("$") else self._regex + ".*"
-        return F.regexp_replace(src, pattern, rep)
-
-    def parts_column(self, marked: Column) -> Column:
-        """Captured group values from ``marked_column`` output (group g =
-        element_at(parts, g)); no further regex work. The MARK prefix is
-        still on element 1 — ``extract_columns`` strips it there, so only
-        the first field is copied, never the whole line."""
-        return F.split(marked, self.SEP, -1)
+        return F.split(F.regexp_replace(src, pattern, rep), self.SEP, -1)
 
     def extract_columns(self, parts: Column,
                         trim=None) -> dict[str, Column]:
@@ -388,13 +381,10 @@ def dissect(
     src = F.col(field) if active is None else F.when(active, F.col(field))
 
     if pat.regex is not None:
-        # ONE regex evaluation per row total, independent of key count;
-        # marked/parts are materialized in temp columns so codegen computes
-        # the replace and the split exactly once each.
-        marked_col, parts_col = "_dissect_marked", "_dissect_parts"
-        df = df.withColumn(marked_col, pat.marked_column(src))
-        df = df.withColumn(parts_col, pat.parts_column(F.col(marked_col)))
-        ok = src.isNotNull() & (F.col(marked_col) != src)
+        # ONE regex evaluation per row total, independent of key count
+        parts_col = "_dissect_parts"
+        df = once(df, parts_col, pat.parts_column(src))
+        ok = matched(src, F.col(parts_col))
         raw_cols = pat.extract_columns(
             F.col(parts_col), trim=_trim_column_fn(trim_values, trim_chars)
         )
@@ -409,7 +399,7 @@ def dissect(
         if target_prefix:
             out_cols = {target_prefix: F.when(
                 ok, F.struct(*[c.alias(k) for k, c in out_cols.items()]))}
-        drop_cols = [marked_col, parts_col]
+        drop_cols = [parts_col]
     else:
         # indirect keys → data-dependent key names → map<string,string>
         # via an Arrow-batched pandas UDF (no per-row Spark UDF).
@@ -420,7 +410,7 @@ def dissect(
         def dissect_map(s: pd.Series) -> pd.Series:
             return s.map(lambda v: parse(v, trim=trim_s))
 
-        df = df.withColumn("_dissect_map", dissect_map(src))
+        df = once(df, "_dissect_map", dissect_map(src))
         ok = F.col("_dissect_map").isNotNull()
         out_cols = {target_prefix or "dissect": F.col("_dissect_map")}
         drop_cols = ["_dissect_map"]
@@ -430,6 +420,15 @@ def dissect(
     if not ignore_failure:
         out_cols[flags_col] = flag_failures(df, ok, flags_col, PARSE_ERROR_FLAG)
     return assign_where(df, active, out_cols).drop(*drop_cols)
+
+
+def matched(src: Column, parts: Column) -> Column:
+    """Never-null match flag of a parser's capture array: the one regex
+    rewrites a match to MARK + captures joined by SEP, so element 1
+    starts with MARK (which log text never does) exactly on a match,
+    and no second regex evaluation is needed."""
+    return src.isNotNull() & F.coalesce(
+        F.element_at(parts, 1).startswith(DissectPattern.MARK), F.lit(False))
 
 
 def flag_failures(df: DataFrame, ok: Column, flags_col: str, flag: str) -> Column:

@@ -48,15 +48,18 @@ At 10^12 rows the plan is scan → project×k → sink.
 from __future__ import annotations
 
 import json as _json
+import operator
 import re
 from dataclasses import dataclass, field as _dc_field
+from functools import reduce
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from beats_spark.conditions import keep_old, masked_assigns, try_cast_or_null
+from beats_spark.conditions import keep_old, masked_assigns, once, try_cast_or_null
+from beats_spark.dissect import matched as matched_parts
 
 __all__ = [
     "IngestCompileError",
@@ -743,6 +746,12 @@ def _p_rename(df, cfg, fmsg):
         msg = F.when(exists, F.lit(f"field [{dst}] already exists")) \
             .otherwise(F.lit(f"field [{src}] not present"))
         fails = exists if fails is None else (fails | exists)
+    # the move happens ONLY where the target is free: an occupied
+    # target throws in ES — under ignore_failure that exception is
+    # swallowed and the document keeps BOTH fields untouched. Free is
+    # read before the type merge below, which may null an occupied
+    # target's uncastable value.
+    moved = src_nn & old_dst.isNull() if _has(df, dst) else src_nn
     # src-null docs under ignore_missing are a per-row NO-OP: the
     # target keeps its value (never nulled by a missing source).
     # Branch types must agree EXACTLY: a string/timestamp pair would
@@ -754,10 +763,6 @@ def _p_rename(df, cfg, fmsg):
         odt = _dtype(df, dst)
         if odt != ndt:
             old_dst = try_cast_or_null(df, old_dst, odt, ndt)
-    # the move happens ONLY where the target is free: an occupied
-    # target throws in ES — under ignore_failure that exception is
-    # swallowed and the document keeps BOTH fields untouched
-    moved = src_nn & old_dst.isNull() if _has(df, dst) else src_nn
     assigns = {dst: F.when(moved, src_col).otherwise(old_dst)}
     if entry is not None:
         # renaming OUT of a map column: drop the key from the map
@@ -1272,6 +1277,15 @@ class IngestPipeline:
         self._sh = fn(self._sh)
         return fn(df)
 
+    def _tmp_name(self, kind: str) -> str:
+        """A temp column name unique per compiled plan, NOT per chain
+        position: an on_failure sub-chain re-enters ``_apply`` at idx 0,
+        and a positional name would shadow (then drop) the outer chain's
+        still-referenced column."""
+        n = self.__dict__.get("_tmp_n", 0)
+        self.__dict__["_tmp_n"] = n + 1
+        return f"_ingest_{kind}_{n}"
+
     def _resync(self, df: DataFrame) -> None:
         """Re-derive the shadow from the real frame (after a script
         handler's arbitrary transformations) — one real analysis."""
@@ -1330,17 +1344,32 @@ class IngestPipeline:
             return df
         if name == "rename" and (cfg or {}).get("field") in getattr(
                 self, "_dot_objects", {}):
-            # rename of a dot_expander'd OBJECT → one leaf rename per
+            # rename of a dot_expander'd OBJECT → one leaf move per
             # declared member (elasticsearch.audit.node →
-            # elasticsearch.node moves node.id / node.name)
+            # elasticsearch.node moves node.id / node.name), compiled as
+            # ONE processor like the ES rename: its `if` reads the frame
+            # before any member moves, an occupied member target fails
+            # the whole object (nothing moves), and on_failure runs once
             src0, dst0 = cfg["field"], cfg["target_field"]
-            for mem in sorted(self._dot_objects[src0]):
-                df = self._one(df, "rename", {
-                    "field": f"{src0}.{mem}",
-                    "target_field": f"{dst0}.{mem}",
-                    "ignore_missing": True,
-                }, active, idx)
-            return df
+            mems = sorted(self._dot_objects[src0])
+            assigns: dict[str, Column] = {}
+            for mem in mems:
+                assigns.update(_p_rename(self._sh, {
+                    "field": f"{src0}.{mem}", "target_field": f"{dst0}.{mem}",
+                    "ignore_missing": True}, None)[0])
+            present = [_c(f"{src0}.{m}").isNotNull() for m in mems
+                       if _has(self._sh, f"{src0}.{m}")]
+            taken = [_c(f"{dst0}.{m}").isNotNull() for m in mems
+                     if _has(self._sh, f"{dst0}.{m}")]
+            fails = None
+            if present and taken:
+                fails = reduce(operator.or_, present) & reduce(operator.or_, taken)
+                assigns = masked_assigns(
+                    self._sh, ~F.coalesce(fails, F.lit(False)), assigns)
+            return self._apply(
+                df, assigns, fails, f"field [{dst0}] already exists",
+                self._guard(active, cfg.get("if")),
+                cfg.get("ignore_failure", False), cfg.get("on_failure"), idx)
         if name == "geoip":
             return self._geoip(df, cfg, active)
         if name == "drop":
@@ -1385,12 +1414,7 @@ class IngestPipeline:
             fail_now: Column = F.lit(False)
         else:
             fail_now = act & F.coalesce(fails, F.lit(False))
-        # unique per compiled plan, NOT per chain position: an on_failure
-        # sub-chain re-enters _apply at idx 0 and a positional name would
-        # shadow (then drop) the outer chain's still-referenced flag column
-        n = self.__dict__.get("_tmp_n", 0)
-        self.__dict__["_tmp_n"] = n + 1
-        tmp = f"_ingest_of_{n}"
+        tmp = self._tmp_name("of")
         df = self._tx(df, lambda d: d.withColumn(tmp, fail_now))
         ok = act & ~_c(tmp)
         wrapped = masked_assigns(self._sh, ok, assigns)
@@ -1445,44 +1469,31 @@ class IngestPipeline:
             matched = F.lit(False)
             grok_tmps: list[str] = []
             for pat in pats:
+                if pat.regex == "" and not pat.semantics:
+                    # "" in a pattern list matches anything (e.g. nginx)
+                    matched = matched | src.isNotNull()
+                    continue
+                pname = self._tmp_name("grok")
+                grok_tmps.append(pname)
+                # ES ingest grok is SEARCH semantics (joni matcher.search):
+                # a pattern matching any substring of the field matches the
+                # document; anchored(False) is the whole-line search rewrite.
+                # First match wins: rows already claimed by an earlier
+                # pattern skip this pattern's regex (CASE WHEN branches
+                # evaluate lazily), so most rows pay for ONE search.
+                rx = pat.anchored(False)
                 if not pat.semantics:
-                    # capture-less pattern: a pure match predicate ("" in
-                    # a pattern list means match-anything, e.g. nginx)
-                    if pat.regex == "":
-                        matched = matched | src.isNotNull()
-                    else:
-                        matched = matched | (
-                            src.isNotNull() & src.rlike(pat.anchored(False)))
+                    # capture-less pattern: a pure match predicate
+                    df = self._tx(df, lambda d: once(
+                        d, pname, F.when(~matched, src.rlike(rx))))
+                    matched = matched | F.coalesce(_c(pname), F.lit(False))
                     continue
                 rep = "\x02" + "\x01".join(
                     f"${g}" for g in range(1, pat._ngroups + 1))
-                # ES ingest grok is SEARCH semantics (joni matcher.search):
-                # a pattern matching any substring of the field matches the
-                # document. anchored(False) is the whole-line search rewrite.
-                # The split capture array is MATERIALIZED as a column so
-                # the (expensive) search regex runs once per row per
-                # pattern — every field extraction, the match probe, and
-                # the failure flag all reference the same computed array
-                # instead of re-evaluating the regexp_replace.
-                n = self.__dict__.get("_tmp_n", 0)
-                self.__dict__["_tmp_n"] = n + 1
-                pname = f"_ingest_grok_{n}"
-                grok_tmps.append(pname)
-                # first-match-wins short circuit: rows already claimed by
-                # an earlier pattern skip this pattern's regex entirely
-                # (CASE WHEN branches evaluate lazily per row) — on a
-                # k-pattern grok most rows pay for ONE search, not k
-                df = self._tx(df, lambda d: d.withColumn(
-                    pname, F.when(~matched, F.split(
-                        F.regexp_replace(src, pat.anchored(False), rep),
-                        "\x01", -1))))
+                df = self._tx(df, lambda d: once(d, pname, F.when(~matched, F.split(
+                    F.regexp_replace(src, rx, rep), "\x01", -1))))
                 parts = _c(pname)
-                # a match always rewrites to a \x02-prefixed capture join;
-                # \x01/\x02 never occur in log text, so element 1's prefix
-                # IS the match signal (no second regex evaluation)
-                ok = src.isNotNull() & F.coalesce(
-                    F.element_at(parts, 1).startswith("\x02"), F.lit(False)
-                )
+                ok = matched_parts(src, parts)
 
                 def grp(g: int, parts=parts) -> Column:
                     # try_element_at: unmatched rows keep a 1-element
@@ -1547,16 +1558,10 @@ class IngestPipeline:
                 "dissect: pointer/indirect keys (%{*k}/%{&k}) are not "
                 f"supported in the ingest compiler: {cfg['pattern']!r}"
             )
-        # materialize the one-regex capture array (same reasoning as the
-        # grok kernel above: every key + the match probe reference it)
-        n = self.__dict__.get("_tmp_n", 0)
-        self.__dict__["_tmp_n"] = n + 1
-        pname = f"_ingest_dissect_{n}"
-        df = self._tx(df, lambda d: d.withColumn(
-            pname, pat.parts_column(pat.marked_column(src))))
+        pname = self._tmp_name("dissect")
+        df = self._tx(df, lambda d: once(d, pname, pat.parts_column(src)))
         parts = _c(pname)
-        matched = src.isNotNull() & F.coalesce(
-            F.element_at(parts, 1).startswith(pat.MARK), F.lit(False))
+        matched = matched_parts(src, parts)
         tmp_cols = pat.extract_columns(parts)
         # ES dissect types via %{key} only (no :type); apply declared casts
         for key in list(tmp_cols):

@@ -58,6 +58,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from beats_spark.conditions import once
+
 __all__ = [
     "UNIFIED_FILESETS",
     "UNIFIED_MULTILINE_PATTERN",
@@ -136,8 +138,12 @@ def unified_log_parse(df: DataFrame, fileset: str = "tidb",
     )
 
     raw = F.col("body")
-    q_full = F.regexp_extract(raw, _MSG_QUOTED, 0)
-    u_full = F.regexp_extract(raw, _MSG_PLAIN, 0)
+    # each message probe feeds outputs in several stacked projections
+    # (three copies of each otherwise): evaluate it once
+    d = once(d, "_msg_q", F.regexp_extract(raw, _MSG_QUOTED, 0))
+    d = once(d, "_msg_u", F.when(F.col("_msg_q") == "",
+                                 F.regexp_extract(raw, _MSG_PLAIN, 0)))
+    q_full, u_full = F.col("_msg_q"), F.col("_msg_u")
     is_q = raw.isNotNull() & (q_full != "")
     is_u = raw.isNotNull() & ~is_q & (u_full != "")
     matched = is_q | is_u
@@ -209,7 +215,7 @@ def unified_log_parse(df: DataFrame, fileset: str = "tidb",
             "kv": kv,
             "body": body_out,
         })
-        .drop("time", "level", "logger", "_kvs", "_parts")
+        .drop("time", "level", "logger", "_kvs", "_parts", "_msg_q", "_msg_u")
     )
 
 

@@ -31,8 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from beats_spark.conditions import assign_where
-from beats_spark.dissect import flag_failures
+from beats_spark.conditions import assign_where, once
+from beats_spark.dissect import flag_failures, matched
 
 from beats_spark.processors.base import Proc, register
 
@@ -199,18 +199,10 @@ def decode_cef(
     marked = F.regexp_replace(
         body, _HEADER_RX, _MARK + _SEP.join(f"${g}" for g in range(1, 9))
     )
-    # materialize the one-regex result as a real column: every header
-    # field and the ok probe reference it, and a multi-referenced
-    # non-trivial column is NOT collapsed back into consumers by
-    # Catalyst — so the header regex runs exactly ONCE per row instead
-    # of once per referencing expression
-    df = df.withColumn("_cef_parts", F.split(marked, _SEP, -1))
+    # every header field and the ok probe read this one regex result
+    df = once(df, "_cef_parts", F.split(marked, _SEP, -1))
     parts = F.col("_cef_parts")
-    # a match always rewrites to a MARK-prefixed capture join; \x01/\x02
-    # never occur in log text, so the first element's MARK prefix IS the
-    # match signal (no second regex evaluation)
-    df = df.withColumn("_cef_ok", F.coalesce(
-        F.element_at(parts, 1).startswith(_MARK), F.lit(False)))
+    df = df.withColumn("_cef_ok", matched(body, parts))
     ok = F.col("_cef_ok")
 
     def grp(g: int) -> Column:
@@ -228,10 +220,9 @@ def decode_cef(
     severity = grp(7)
     ext_blob = grp(8)
 
-    # same materialization for the extension tokenizer — the entries /
-    # dedup / map stages and every ECS column hang off this one result
-    df = df.withColumn(
-        "_cef_toks", F.regexp_extract_all(ext_blob, F.lit(_EXT_TOKEN_RX), 0))
+    # the entries / dedup / map stages and every ECS column hang off
+    # this one extension tokenizer result
+    df = once(df, "_cef_toks", F.regexp_extract_all(ext_blob, F.lit(_EXT_TOKEN_RX), 0))
     toks = F.col("_cef_toks")
     key = lambda t: F.substring_index(t, "=", 1)  # noqa: E731  keys have no '='
     entries = F.transform(
@@ -280,7 +271,7 @@ def decode_cef(
     )
     # staged like the regex results: the ECS columns read the new struct,
     # and the masked write below must not see a half-written row
-    df = df.withColumn("_cef_out", out)
+    df = once(df, "_cef_out", out)
     out_cols = {target_prefix: F.col("_cef_out")}
     if ecs:
         for full, (col_name, dtype) in CEF_ECS_COLUMNS.items():

@@ -42,8 +42,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from beats_spark.conditions import assign_where
-from beats_spark.dissect import flag_failures
+from beats_spark.conditions import assign_where, once
+from beats_spark.dissect import flag_failures, matched
 
 PARSE_ERROR_FLAG = "_grok_parse_failure"
 
@@ -323,16 +323,16 @@ class GrokPattern:
         return seen
 
     def anchored(self, anchor: bool) -> str:
-        core = self.regex
-        if anchor:
-            return "(?s)^(?:" + core + ")$"
-        # leftmost-match search semantics as a whole-string rewrite.
-        # Skip and tail use explicit [\s\S] classes instead of a global
-        # (?s): joni's search does NOT put the pattern body in DOTALL,
+        # Neither form puts the pattern body in DOTALL: joni does not,
         # so a `.*` inside the pattern must stop at a newline exactly
         # like it does in ES (multiline events depend on this — e.g.
         # the kafka module's stack-trace split). \z pins the absolute
         # end so a trailing newline can't leak into the last capture.
+        core = self.regex
+        if anchor:
+            return "^(?:" + core + ")\\z"
+        # leftmost-match search semantics as a whole-string rewrite; the
+        # skip and the tail are explicit [\s\S] classes
         return "^[\\s\\S]*?(?:" + core + ")[\\s\\S]*\\z"
 
     # ---------- python reference implementation (tests / oracle) ----------
@@ -340,7 +340,7 @@ class GrokPattern:
     def parse(self, s: str | None, anchor: bool = False) -> dict[str, str] | None:
         if s is None:
             return None
-        m = (re.fullmatch if anchor else re.search)(self.regex, s, re.S)
+        m = (re.fullmatch if anchor else re.search)(self.regex, s)
         if m is None:
             return None
         out: dict[str, str] = {}
@@ -377,13 +377,11 @@ def grok(
     # inactive rows feed the parse a null, so they skip its regex
     src = F.col(field) if active is None else F.when(active, F.col(field))
     rep = _MARK + _SEP.join(f"${g}" for g in range(1, pat._ngroups + 1))
-    marked_col, parts_col = "_grok_marked", "_grok_parts"
-    df = df.withColumn(marked_col, F.regexp_replace(src, pat.anchored(anchor), rep))
-    df = df.withColumn(parts_col, F.split(F.col(marked_col), _SEP, -1))
-    # every match rewrites to a MARK-prefixed capture join, so inequality
-    # with the source is an exact match signal (dissect.py:187-200)
-    ok = src.isNotNull() & (F.col(marked_col) != src)
+    parts_col = "_grok_parts"
+    df = once(df, parts_col, F.split(
+        F.regexp_replace(src, pat.anchored(anchor), rep), _SEP, -1))
     parts = F.col(parts_col)
+    ok = matched(src, parts)
 
     def grp(g: int) -> Column:
         v = F.element_at(parts, g)
@@ -408,7 +406,7 @@ def grok(
             ok, F.struct(*[c.alias(k) for k, c in out_cols.items()]))}
     if not ignore_failure:
         out_cols[flags_col] = flag_failures(df, ok, flags_col, PARSE_ERROR_FLAG)
-    return assign_where(df, active, out_cols).drop(marked_col, parts_col)
+    return assign_where(df, active, out_cols).drop(parts_col)
 
 
 from beats_spark.processors.base import Proc, register  # noqa: E402

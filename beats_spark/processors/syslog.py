@@ -28,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from beats_spark.conditions import assign_where
+from beats_spark.conditions import assign_where, once
+from beats_spark.dissect import matched
 
 SEVERITY_LABELS = [
     "Emergency", "Alert", "Critical", "Error",
@@ -75,11 +76,9 @@ def syslog_rfc3164(
     # inactive rows feed the parse a null, so they skip its regex
     src = F.col(field) if active is None else F.when(active, F.col(field))
     rep = _MARK + _SEP.join(f"${g}" for g in range(1, 7))
-    marked = F.regexp_replace(src, _RFC3164, rep)
-    df = df.withColumn("_sl_marked", marked)
-    df = df.withColumn("_sl_parts", F.split(F.col("_sl_marked"), _SEP, -1))
-    ok = src.isNotNull() & (F.col("_sl_marked") != src)
+    df = once(df, "_sl_parts", F.split(F.regexp_replace(src, _RFC3164, rep), _SEP, -1))
     parts = F.col("_sl_parts")
+    ok = matched(src, parts)
 
     def grp(g: int) -> Column:
         v = F.element_at(parts, g)
@@ -116,7 +115,7 @@ def syslog_rfc3164(
             src if keep_raw else F.lit(None)
         ),
     }
-    return assign_where(df, active, out).drop("_sl_marked", "_sl_parts")
+    return assign_where(df, active, out).drop("_sl_parts")
 
 
 from beats_spark.processors.base import Proc, register  # noqa: E402

@@ -14,6 +14,15 @@ mechanically:
 - no **CartesianProduct** / BroadcastNestedLoopJoin anywhere (unless
   the row's ``allow_cartesian`` says it is deliberate).
 
+Every registry row, with audit opts or without, also gets one more
+rule: no regex expression (``regexp_replace``, ``regexp_extract``,
+``regexp_extract_all``, ``rlike``) with the same input and the same
+pattern is evaluated in two operators of the executed plan, file scans
+aside (a scan's data filters repeat the Filter above it). Copies inside
+one operator may be shared by codegen's subexpression elimination;
+copies in two operators never are. The usual cause is a filter
+Catalyst pushed below a parse; the fix is ``conditions.once``.
+
 Rows that cannot build on this host (``skip_reason``) are listed as
 skipped. Writes PLANS.md with the verdict table + annotated excerpts.
 
@@ -23,9 +32,11 @@ skipped. Writes PLANS.md with the verdict table + annotated excerpts.
 from __future__ import annotations
 
 import io
+import json
 import os
 import re
 import sys
+from collections import Counter
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -63,6 +74,83 @@ def plan_text(df) -> str:
     return buf.getvalue()
 
 
+REGEX_EXPRS = {"RegExpReplace", "RegExpExtract", "RegExpExtractAll", "RLike"}
+
+
+def _trees(v):
+    """The expression trees in a plan node's field value. ``toJSON``
+    flattens a tree to its nodes in pre-order, each with its
+    ``num-children``."""
+    if isinstance(v, list) and v and isinstance(v[0], dict) and "num-children" in v[0]:
+        yield v
+    elif isinstance(v, (list, dict)):
+        for x in (v if isinstance(v, list) else v.values()):
+            yield from _trees(x)
+
+
+def _end(flat: list[dict], i: int) -> int:
+    """One past the last node of the subtree rooted at ``flat[i]``."""
+    need = 1
+    while need:
+        need += flat[i]["num-children"] - 1
+        i += 1
+    return i
+
+
+def _definitions(plan: list[dict]) -> dict:
+    """exprId → the flat tree a Project's ``Alias`` defines it as."""
+    defs = {}
+    for node in plan:
+        for flat in _trees(node.get("projectList")):
+            if flat[0]["class"].endswith(".Alias"):
+                defs[flat[0]["exprId"]["id"]] = flat[1:]
+    return defs
+
+
+def _inline(flat: list[dict], defs: dict) -> list[dict]:
+    """``flat`` with each attribute a Project defines replaced by its
+    definition (a pre-order tree stays one when a leaf becomes a
+    subtree)."""
+    out = []
+    for e in flat:
+        d = defs.get(e["exprId"]["id"]) if e["class"].endswith(
+            ".AttributeReference") else None
+        out.extend([e] if d is None else _inline(d, defs))
+    return out
+
+
+def repeated_regex(df) -> list[tuple[str, int]]:
+    """``(regex, operators)`` for each regex expression that occurs in
+    more than one operator of ``df``'s executed plan, file scans aside.
+    Two occurrences are the same expression when the pattern and the
+    input match once the input's Project-defined columns are inlined (a
+    filter pushed below a parse inlines them)."""
+    plan = json.loads(df._jdf.queryExecution().executedPlan().toJSON())
+    defs = _definitions(plan)
+    operators: Counter = Counter()
+    patterns = {}
+    for node in plan:
+        if node["class"].endswith("ScanExec"):
+            continue
+        here = set()
+        for v in node.values():
+            for flat in _trees(v):
+                for i, e in enumerate(flat):
+                    if e["class"].rsplit(".", 1)[-1] in REGEX_EXPRS:
+                        tree = flat[i:_end(flat, i)]
+                        key = json.dumps(_inline(tree, defs), sort_keys=True)
+                        here.add(key)
+                        # the input is the first child, the pattern the
+                        # second (a literal)
+                        arg, pat = tree[1], tree[_end(tree, 1)]
+                        patterns[key] = "%s(%s, %s)" % (
+                            e["class"].rsplit(".", 1)[-1],
+                            arg.get("name") or arg["class"].rsplit(".", 1)[-1],
+                            pat.get("value"))
+        operators.update(here)
+    return [(patterns[k], n) for k, n in operators.items() if n > 1]
+
+
 def audit(name: str, text: str, broadcast: bool = False,
           allow_cartesian: bool = False) -> list[str]:
     problems = []
@@ -96,8 +184,6 @@ def main() -> None:
     skipped: dict[str, str] = {}
     targets = {}
     for row in entry.REGISTRY:
-        if row.audit is None:
-            continue
         why = entry.skip_reason(row)
         if why:
             skipped[row.name] = why
@@ -106,7 +192,11 @@ def main() -> None:
     targets.update(extra_frames(spark, sf_dir))
     for name, (df, opts) in targets.items():
         text = plan_text(df)
-        results[name] = (audit(name, text, **opts), text)
+        problems = [f"regex evaluated in {n} operators: {rx[:80]}"
+                    for rx, n in repeated_regex(df)]
+        if opts is not None:
+            problems += audit(name, text, **opts)
+        results[name] = (problems, text)
 
     out = ["# PLANS — physical-plan audit of headline queries\n"]
     out.append("Generated by `python scripts/explain_audit.py` (sf=%s).\n" % sf_dir)
@@ -132,6 +222,8 @@ def main() -> None:
     bad = {n: p for n, (p, _) in results.items() if p}
     for name, why in skipped.items():
         print(f"skipped {name}: {why}")
+    names = {row.name for row in entry.REGISTRY}
+    print(f"{sum(n in names for n in results)} registry rows audited")
     print("PLANS.md written;", "ALL OK" if not bad else f"issues: {bad}")
     if bad:
         sys.exit(1)

@@ -144,6 +144,66 @@ def test_if_then_else_adds_no_regex_evaluations(spark):
     assert regex_evals(dissect, branch) == alone
 
 
+def _parse_cases():
+    """``case: (message, parser entry, drop condition on a parsed field,
+    the regex texts the parse evaluates)``; the indirect dissect is
+    counted by its Arrow Python nodes instead."""
+    from beats_spark.dissect import compile_tokenizer
+    from beats_spark.processors.cef import _EXT_TOKEN_RX, _HEADER_RX
+    from beats_spark.processors.grok import GrokPattern
+    from beats_spark.processors.syslog import _RFC3164
+
+    tok = "%{verb} %{path} %{level}"
+    grok_expr = "%{WORD:verb} %{NOTSPACE:path} %{LOGLEVEL:level}"
+    ladder = ["%{WORD:verb} %{NOTSPACE:path} %{LOGLEVEL:level}",
+              "%{WORD:verb} %{LOGLEVEL:level}"]
+    debug = {"equals": {"level": "debug"}}
+    return {
+        "dissect": ("GET /a info", {"dissect": {"tokenizer": tok, "target_prefix": ""}},
+                    debug, [compile_tokenizer(tok).regex]),
+        "dissect_indirect": ("level info", {"dissect": {"tokenizer": "%{*k} %{&k}"}},
+                             {"equals": {"dissect.level": "debug"}}, None),
+        "grok": ("GET /a info", {"grok": {"expr": grok_expr, "target_prefix": ""}},
+                 debug, [GrokPattern(grok_expr).anchored(False)]),
+        "syslog": ("<13>Oct  7 10:09:00 web1 app[7]: hi", {"syslog": {}},
+                   {"equals": {"hostname": "web9"}}, [_RFC3164]),
+        "decode_cef": ("CEF:0|v|p|1|sig|name|5|src=10.0.0.1 act=blocked",
+                       {"decode_cef": {}}, {"equals": {"cef.name": "other"}},
+                       [_HEADER_RX, _EXT_TOKEN_RX]),
+        # the ingest compiler's own drop, inside the same definition
+        "ingest_grok_ladder": ("GET /a info", {"ingest_pipeline": {"definition": {
+            "processors": [
+                {"grok": {"field": "message", "patterns": ladder}},
+                {"drop": {"if": "ctx.level == 'debug'"}},
+            ]}}}, None, [GrokPattern(p, require_captures=False).anchored(False)
+                         for p in ladder]),
+    }
+
+
+@pytest.mark.parametrize("case", list(_parse_cases()))
+def test_filter_on_parsed_field_runs_the_parse_once(spark, tmp_path, case):
+    """A filter on a parsed field stays above the parse (Catalyst would
+    otherwise push it below with the regex substituted in, once per
+    reference), while a filter on an unparsed column still reaches the
+    parquet scan."""
+    line, parser, cond, patterns = _parse_cases()[case]
+    path = str(tmp_path / "in")
+    spark.createDataFrame([(line, i, "src0") for i in range(4)],
+                          "message string, offset long, source string") \
+        .write.parquet(path)
+    entries = [parser] + ([{"drop_event": {"when": cond}}] if cond else [])
+    out = build_pipeline(entries)(spark.read.parquet(path)).filter(F.col("offset") > 1)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert out.count() == 2
+    lines = [ln for ln in plan.splitlines() if "FileScan" not in ln]
+    if patterns is None:
+        assert sum(ln.count("ArrowEvalPython") for ln in lines) == 1
+    for rx in patterns or []:
+        assert sum(ln.count(rx) for ln in lines) == 1, rx
+    scan = next(ln for ln in plan.splitlines() if "FileScan" in ln)
+    assert "GreaterThan(offset,1)" in scan.split("PushedFilters: ")[1]
+
+
 # -- regressions of the duplicated guard code -------------------------------
 
 

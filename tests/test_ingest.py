@@ -282,6 +282,89 @@ def test_rename_fails_when_target_exists(spark):
     assert "already exists" in out["r2"]["error.message"]
 
 
+def test_rename_never_moves_onto_an_occupied_uncastable_target(spark):
+    # the string target cannot hold a bigint column's type: the merged
+    # column nulls "abc", but the row must still read as occupied, so
+    # under ignore_failure the source stays where it is
+    cfg = {"processors": [
+        {"rename": {"field": "a", "target_field": "b", "ignore_failure": True}}]}
+    got, _ = _run(spark, cfg, [("r1", 5, "abc"), ("r2", 7, None)],
+                  "message string, a bigint, b string")
+    assert got["r1"]["a"] == 5 and got["r1"]["b"] is None
+    assert got["r2"]["b"] == 7 and got["r2"]["a"] is None
+    assert got["r1"]["error.message"] is None
+
+
+def test_dot_expander_object_rename_honors_if(spark):
+    cfg = {"processors": [
+        {"dot_expander": {"field": "node.id", "path": "es.audit"}},
+        {"dot_expander": {"field": "node.name", "path": "es.audit"}},
+        # the condition reads a member the rename moves: it must be read
+        # once, before the first member moves
+        {"rename": {"field": "es.audit.node", "target_field": "es.node",
+                    "if": "ctx.es?.audit?.node?.id == 'i1'"}},
+    ]}
+    got, _ = _run(spark, cfg, [("go", "i1", "n1"), ("stay", "i2", "n2")],
+                  "message string, `es.audit.node.id` string, "
+                  "`es.audit.node.name` string")
+    go, stay = got["go"], got["stay"]
+    assert (go["es.node.id"], go["es.node.name"]) == ("i1", "n1")
+    assert (go["es.audit.node.id"], go["es.audit.node.name"]) == (None, None)
+    assert (stay["es.node.id"], stay["es.node.name"]) == (None, None)
+    assert (stay["es.audit.node.id"], stay["es.audit.node.name"]) == ("i2", "n2")
+
+
+def _object_rename(**opts):
+    return {"processors": [
+        {"dot_expander": {"field": "node.id", "path": "es.audit"}},
+        {"dot_expander": {"field": "node.name", "path": "es.audit"}},
+        {"rename": {"field": "es.audit.node", "target_field": "es.node",
+                    **opts}},
+    ]}
+
+
+_OBJ_ROWS = [("taken", "i1", "n1", "old_id", "old_name"),
+             ("half", "i2", "n2", None, "old_name"),
+             ("free", "i3", "n3", None, None)]
+_OBJ_SCHEMA = ("message string, `es.audit.node.id` string, "
+               "`es.audit.node.name` string, `es.node.id` string, "
+               "`es.node.name` string")
+
+
+def _node(row, at):
+    return row[f"{at}.id"], row[f"{at}.name"]
+
+
+def test_dot_expander_object_rename_fails_as_one_processor(spark):
+    # two member targets taken: on_failure runs ONCE for the object, and
+    # no member moves (one occupied member target is enough to fail)
+    cfg = _object_rename(on_failure=[
+        {"append": {"field": "tags", "value": "rename_failed"}}])
+    got, _ = _run(spark, cfg, _OBJ_ROWS, _OBJ_SCHEMA)
+    assert got["taken"]["tags"] == ["rename_failed"]
+    assert got["half"]["tags"] == ["rename_failed"]
+    assert got["free"]["tags"] is None
+    assert _node(got["taken"], "es.audit.node") == ("i1", "n1")
+    assert _node(got["half"], "es.audit.node") == ("i2", "n2")
+    assert all(r["error.message"] is None for r in got.values())
+    assert _node(got["taken"], "es.node") == ("old_id", "old_name")
+    assert _node(got["half"], "es.node") == (None, "old_name")
+    assert _node(got["free"], "es.node") == ("i3", "n3")
+    assert _node(got["free"], "es.audit.node") == (None, None)
+
+
+def test_dot_expander_object_rename_ignore_failure_moves_nothing(spark):
+    got, _ = _run(spark, _object_rename(ignore_failure=True),
+                  _OBJ_ROWS, _OBJ_SCHEMA)
+    assert _node(got["half"], "es.audit.node") == ("i2", "n2")
+    assert _node(got["half"], "es.node") == (None, "old_name")
+    assert _node(got["free"], "es.node") == ("i3", "n3")
+    assert all(r["error.message"] is None for r in got.values())
+    got, _ = _run(spark, _object_rename(), _OBJ_ROWS, _OBJ_SCHEMA)
+    assert got["half"]["error.message"] == "field [es.node] already exists"
+    assert got["free"]["error.message"] is None
+
+
 def test_single_projection_plan_stays_narrow(spark):
     # the whole compiled chain must be projections over one scan:
     # no shuffle, no UDF, nothing outside whole-stage codegen

@@ -1,7 +1,8 @@
 """CI gate for the physical-plan audit: every audited plan must be
 free of cartesian products (outside the whitelisted small-n baseline),
 keep broadcast joins broadcast, stay inside whole-stage codegen, and
-carry no row-at-a-time Python UDFs. Runs the audit script as a
+carry no row-at-a-time Python UDFs; no registry row's plan may evaluate
+the same regex expression in two operators. Runs the audit script as a
 subprocess (it needs its own AQE-disabled session)."""
 
 from __future__ import annotations
@@ -20,3 +21,7 @@ def test_explain_audit_gate():
     )
     assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
     assert "ALL OK" in r.stdout
+    import __spark_entry__ as entry
+
+    built = sum(1 for row in entry.REGISTRY if not entry.skip_reason(row))
+    assert f"{built} registry rows audited" in r.stdout

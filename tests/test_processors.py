@@ -628,6 +628,21 @@ def test_grok_anchor_requires_full_match(spark):
     assert out["ERROR trailing"] is None
 
 
+def test_grok_dot_stops_at_newline_anchored_or_not(spark):
+    """joni never runs a grok pattern in DOTALL: `.` stops at a newline
+    whether the match is anchored or a search."""
+    from beats_spark.processors.grok import GrokPattern, grok
+
+    expr = "%{LOGLEVEL:lvl} %{GREEDYDATA:rest}"
+    df = spark.createDataFrame([("ERROR first\nsecond",)], "message string")
+    searched = grok(df, expr).collect()[0]["grok"]
+    assert (searched["lvl"], searched["rest"]) == ("ERROR", "first")
+    assert grok(df, expr, anchor=True).collect()[0]["grok"] is None
+    pat = GrokPattern(expr)
+    assert pat.parse("ERROR first\nsecond")["rest"] == "first"
+    assert pat.parse("ERROR first\nsecond", anchor=True) is None
+
+
 def test_grok_nested_semantics_and_custom_definitions(spark):
     from beats_spark.processors.grok import grok
 
