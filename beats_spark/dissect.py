@@ -30,6 +30,7 @@ Failure semantics match the reference's processor
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 from dataclasses import dataclass, field as dc_field
 
 import pandas as pd
@@ -177,52 +178,32 @@ class DissectPattern:
                 return f.dtype
         return None
 
-    # single-pass capture separator: one regexp_replace rewrites the (anchored,
-    # whole-string) match into "\x02$1<SEP>$2<SEP>..." so ALL capture groups AND
-    # the match/no-match signal come out of ONE regex evaluation per row (vs
-    # rlike + one regexp_extract per key = k+1 evaluations). \x01/\x02 never
-    # occur in log text; a captured value containing \x01 would misalign the
-    # split (the reference reads raw text lines, where control chars are absent).
-    SEP = "\x01"
-    MARK = "\x02"
-
-    def parts_column(self, src: Column) -> Column:
-        """One regex evaluation → the captured group values (group g =
-        element_at(parts, g)). A match is rewritten to "\\x02" + captures
-        joined by SEP and split on SEP; an unmatched line passes through
-        unchanged. The MARK prefix stays on element 1 (see
-        :func:`matched`); ``extract_columns`` strips it there, so only
-        the first field is copied, never the whole line."""
+    def captures(self, df: DataFrame, name: str, src: Column,
+                 where: Column | None = None):
+        """:func:`captures` of this tokenizer's regex."""
         assert self._regex is not None
         ngroups = max((f.group for f in self.fields if f.group), default=0)
-        rep = self.MARK + self.SEP.join(f"${g}" for g in range(1, ngroups + 1))
         # dissect allows (ignores) trailing text after the last delimiter;
-        # the replacement form must swallow it so only captures remain.
-        pattern = self._regex if self._regex.endswith("$") else self._regex + ".*"
-        return F.split(F.regexp_replace(src, pattern, rep), self.SEP, -1)
+        # the whole-line form must swallow it so only captures remain.
+        rx = self._regex if self._regex.endswith("$") else self._regex + ".*"
+        return captures(df, name, src, rx, ngroups, where)
 
-    def extract_columns(self, parts: Column,
-                        trim=None) -> dict[str, Column]:
+    def extract_columns(self, group, trim=None) -> dict[str, Column]:
         """Static path: one Column per output key (string-typed; caller
-        casts), built from the shared ``parts_column`` array — no further
+        casts), read through the capture reader ``group`` — no further
         regex work per key. ``trim`` (Column → Column) applies to each
         CAPTURED part before append-joins, matching the reference's
         per-capture trim (dissect.go:71-73)."""
         by_key: dict[str, list[_Field]] = {}
         for f in self.output_fields():
             by_key.setdefault(f.name, []).append(f)
-        def grp(g: int) -> Column:
-            v = F.element_at(parts, g)
-            # group 1 carries the match MARK prefix (see parts_column)
-            v = F.substring(v, 2, 2**30) if g == 1 else v
-            return trim(v) if trim is not None else v
-
+        read = group if trim is None else (lambda g: trim(group(g)))
         out: dict[str, Column] = {}
         for key, fs in by_key.items():
-            col = grp(fs[0].group)
+            col = read(fs[0].group)
             for f in fs[1:]:
                 join = f.delim_before if f.delim_before else DEFAULT_JOIN
-                col = F.concat(col, F.lit(join), grp(f.group))
+                col = F.concat(col, F.lit(join), read(f.group))
             out[key] = col
         return out
 
@@ -377,17 +358,13 @@ def dissect(
             f"trim_values must be one of {TRIM_MODES}, got {trim_values!r}"
         )
     pat = compile_tokenizer(tokenizer)
-    # inactive rows feed the parse a null, so they skip its regex or UDF
-    src = F.col(field) if active is None else F.when(active, F.col(field))
 
     if pat.regex is not None:
         # ONE regex evaluation per row total, independent of key count
         parts_col = "_dissect_parts"
-        df = once(df, parts_col, pat.parts_column(src))
-        ok = matched(src, F.col(parts_col))
+        df, ok, group = pat.captures(df, parts_col, F.col(field), active)
         raw_cols = pat.extract_columns(
-            F.col(parts_col), trim=_trim_column_fn(trim_values, trim_chars)
-        )
+            group, trim=_trim_column_fn(trim_values, trim_chars))
         out_cols: dict[str, Column] = {}
         for key, col in raw_cols.items():
             dtype = pat.key_dtype(key)
@@ -410,6 +387,8 @@ def dissect(
         def dissect_map(s: pd.Series) -> pd.Series:
             return s.map(lambda v: parse(v, trim=trim_s))
 
+        # inactive rows feed the UDF a null, so it skips them
+        src = F.col(field) if active is None else F.when(active, F.col(field))
         df = once(df, "_dissect_map", dissect_map(src))
         ok = F.col("_dissect_map").isNotNull()
         out_cols = {target_prefix or "dissect": F.col("_dissect_map")}
@@ -422,13 +401,52 @@ def dissect(
     return assign_where(df, active, out_cols).drop(*drop_cols)
 
 
-def matched(src: Column, parts: Column) -> Column:
-    """Never-null match flag of a parser's capture array: the one regex
-    rewrites a match to MARK + captures joined by SEP, so element 1
-    starts with MARK (which log text never does) exactly on a match,
-    and no second regex evaluation is needed."""
-    return src.isNotNull() & F.coalesce(
-        F.element_at(parts, 1).startswith(DissectPattern.MARK), F.lit(False))
+_SEP = "\x01"
+_MARK = "\x02"
+
+
+def captures(df: DataFrame, name: str, src: Column, regex: str, ngroups: int,
+             where: Column | None = None
+             ) -> tuple[DataFrame, Column, Callable[[int], Column]]:
+    """Every capture group of ``regex`` over ``src`` from ONE regex
+    evaluation per row: ``(df, ok, group)``.
+
+    ``regex`` must consume the whole line (anchor it with ``^``, and end
+    it with ``$``, ``\\z`` or a catch-all). One ``regexp_replace``
+    rewrites a matching line to MARK (\\x02) + the captures joined by
+    SEP (\\x01); an unmatched line passes through unchanged. The
+    result, split on SEP, is appended as column ``name`` through
+    :func:`~beats_spark.conditions.once`, so no consumer and no
+    pushed-down filter evaluates the regex again. Match detection and
+    every group then read that one array: the cost is independent of
+    the number of groups, and the parse stays in whole-stage codegen.
+
+    ``ok`` is the never-null match flag: element 1 starts with MARK
+    exactly on a match. A line that itself starts with MARK gets the
+    whole match ($0) appended on a match, so for those rows (and only
+    those, no second regex) ``ok`` is "the line changed".
+    ``group(g)`` reads capture ``g`` (1-based, MARK stripped) and never
+    throws; on an unmatched row it reads arbitrary text or null, so
+    gate it with ``ok``. An empty capture reads as "" — what it means
+    is the caller's policy. Rows where ``where`` is false skip the
+    regex and read as unmatched. A captured value containing SEP would
+    misalign the groups (log text holds no control characters)."""
+    groups = _SEP.join(f"${g}" for g in range(1, ngroups + 1))
+    line = src if where is None else F.when(where, src)
+    rep = F.when(src.startswith(_MARK), F.lit(f"{_MARK}{groups}{_SEP}$0")) \
+        .otherwise(F.lit(_MARK + groups))
+    df = once(df, name, F.split(F.regexp_replace(line, regex, rep), _SEP, -1))
+    parts = F.col(name)
+    ok = F.coalesce(
+        F.when(src.startswith(_MARK), F.array_join(parts, _SEP) != src)
+        .otherwise(F.try_element_at(parts, F.lit(1)).startswith(_MARK)),
+        F.lit(False))
+
+    def group(g: int) -> Column:
+        v = F.try_element_at(parts, F.lit(g))
+        return F.substring(v, 2, 2**30) if g == 1 else v
+
+    return df, ok, group
 
 
 def flag_failures(df: DataFrame, ok: Column, flags_col: str, flag: str) -> Column:

@@ -59,7 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from beats_spark.conditions import keep_old, masked_assigns, once, try_cast_or_null
-from beats_spark.dissect import matched as matched_parts
+from beats_spark.dissect import captures
 
 __all__ = [
     "IngestCompileError",
@@ -1286,6 +1286,12 @@ class IngestPipeline:
         self.__dict__["_tmp_n"] = n + 1
         return f"_ingest_{kind}_{n}"
 
+    def _captures(self, df: DataFrame, name: str, capture, *args) -> tuple:
+        """``capture(frame, name, *args)`` — :func:`dissect.captures` or
+        a pattern's own — on the real frame and the shadow."""
+        self._sh = capture(self._sh, name, *args)[0]
+        return capture(df, name, *args)
+
     def _resync(self, df: DataFrame) -> None:
         """Re-derive the shadow from the real frame (after a script
         handler's arbitrary transformations) — one real analysis."""
@@ -1371,7 +1377,7 @@ class IngestPipeline:
                 self._guard(active, cfg.get("if")),
                 cfg.get("ignore_failure", False), cfg.get("on_failure"), idx)
         if name == "geoip":
-            return self._geoip(df, cfg, active)
+            return self._geoip(df, cfg, self._guard(active, cfg.get("if")))
         if name == "drop":
             # row-level only: the shadow's schema is unchanged
             return df.filter(~F.coalesce(self._guard(active, cfg.get("if")), F.lit(False)))
@@ -1488,34 +1494,12 @@ class IngestPipeline:
                         d, pname, F.when(~matched, src.rlike(rx))))
                     matched = matched | F.coalesce(_c(pname), F.lit(False))
                     continue
-                rep = "\x02" + "\x01".join(
-                    f"${g}" for g in range(1, pat._ngroups + 1))
-                df = self._tx(df, lambda d: once(d, pname, F.when(~matched, F.split(
-                    F.regexp_replace(src, rx, rep), "\x01", -1))))
-                parts = _c(pname)
-                ok = matched_parts(src, parts)
-
-                def grp(g: int, parts=parts) -> Column:
-                    # try_element_at: unmatched rows keep a 1-element
-                    # array; ANSI element_at would throw if a consumer
-                    # ever evaluates a group ref unguarded
-                    v = F.try_element_at(parts, F.lit(g))
-                    v = F.substring(v, 2, 2**30) if g == 1 else v
-                    return F.when(v != "", v)
-
-                by_key: dict[str, list] = {}
-                for s in pat.semantics:
-                    by_key.setdefault(s.name, []).append(s)
-                for key, sems in by_key.items():
-                    col = (F.coalesce(*[grp(s.group) for s in sems])
-                           if len(sems) > 1 else grp(sems[0].group))
-                    dtype = sems[0].dtype
-                    if dtype != "string":
-                        col = col.try_cast(dtype)
-                    prev = assigns.get(key)
+                df, ok, group = self._captures(df, pname, captures, src, rx,
+                                               pat.ngroups, ~matched)
+                for key, col in pat.fields(group).items():
                     cur = F.when(ok, col)
-                    assigns[key] = (F.coalesce(prev, cur)
-                                    if prev is not None else cur)
+                    prev = assigns.get(key)
+                    assigns[key] = cur if prev is None else F.coalesce(prev, cur)
                 matched = matched | ok
             fails = ~matched
             if ignore_missing:
@@ -1525,26 +1509,18 @@ class IngestPipeline:
             # joni kernel — never writes a field whose named group did
             # not participate in the match (an alternation branch that
             # lost): pre-existing values survive a null capture
-            out_assigns = {}
+            new = {}
             for k, v in assigns.items():
-                cur = F.when(matched, v)
-                if _has(self._sh, k):
-                    odt = _dtype(self._sh, k)
-                    if isinstance(odt, T.ArrayType):
-                        # another branch (e.g. a split processor) holds
-                        # this column as an array; a string capture
-                        # can't coerce — wrap the rare participating
-                        # capture as a 1-element array, keep the rest
-                        cur = F.when(matched & v.isNotNull(),
-                                     F.array(v.cast(odt.elementType)))
-                    try:
-                        merged = F.coalesce(cur, _c(k))
-                        self._sh.select(merged)  # analysis-only type probe
-                        cur = merged
-                    except Exception:
-                        pass  # un-coercible type pair: overwrite wins
-                out_assigns[k] = cur
-            assigns = out_assigns
+                odt = _dtype(self._sh, k) if _has(self._sh, k) else None
+                # another branch (e.g. a split processor) may hold the
+                # column as an array: the capture lands as 1 element
+                new[k] = (F.array(v.cast(odt.elementType))
+                          if isinstance(odt, T.ArrayType) else v)
+            have = [k for k in new if _has(self._sh, k)]
+            ndts = self._sh.select(*(new[k] for k in have)).schema if have else []
+            types = {k: f.dataType for k, f in zip(have, ndts)}
+            assigns = {k: keep_old(self._sh, matched & v.isNotNull(), new[k], k,
+                                   types.get(k)) for k, v in assigns.items()}
             df = self._apply(df, assigns, fails, msg, act,
                              ignore_failure, on_failure, idx)
             return self._tx(df, lambda d: d.drop(*grok_tmps))
@@ -1559,10 +1535,8 @@ class IngestPipeline:
                 f"supported in the ingest compiler: {cfg['pattern']!r}"
             )
         pname = self._tmp_name("dissect")
-        df = self._tx(df, lambda d: once(d, pname, pat.parts_column(src)))
-        parts = _c(pname)
-        matched = matched_parts(src, parts)
-        tmp_cols = pat.extract_columns(parts)
+        df, matched, group = self._captures(df, pname, pat.captures, src)
+        tmp_cols = pat.extract_columns(group)
         # ES dissect types via %{key} only (no :type); apply declared casts
         for key in list(tmp_cols):
             dtype = pat.key_dtype(key)

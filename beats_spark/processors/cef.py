@@ -17,13 +17,12 @@ grammar ``cef/cef.rl``:
   (``cef/keys.go``; ``WithFullExtensionNames`` — the processor always
   passes it, decode_cef.go:89).
 
-Spark-first shape: the header is ONE ``regexp_replace`` per row into a
-marker/capture join + ``split`` (the grok idiom, grok.py module doc);
-extensions are ONE ``regexp_extract_all`` whose lazy value + lookahead
-reproduces the grammar's value/recovery semantics, folded to a
-last-wins map JVM-side. No Python UDF anywhere; every expression is
-whole-stage-codegen-able and narrow — at 10^12 rows the plan is a pure
-projection with zero shuffles.
+Spark-first shape: the header is ONE regex evaluation per row
+(``dissect.captures``); extensions are ONE ``regexp_extract_all``
+whose lazy value + lookahead reproduces the grammar's value/recovery
+semantics, folded to a last-wins map JVM-side. No Python UDF
+anywhere; every expression is whole-stage-codegen-able and narrow — at
+10^12 rows the plan is a pure projection with zero shuffles.
 """
 
 from __future__ import annotations
@@ -32,14 +31,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from beats_spark.conditions import assign_where, once
-from beats_spark.dissect import flag_failures, matched
+from beats_spark.dissect import captures, flag_failures
 
 from beats_spark.processors.base import Proc, register
 
 CEF_PARSE_ERROR_FLAG = "_cef_parse_failure"
-
-_SEP = "\x01"
-_MARK = "\x02"
 
 #: header: CEF:version|vendor|product|device_version|class_id|name|severity|ext
 #: ``\\.`` keeps escape pairs opaque so an escaped pipe never delimits.
@@ -189,36 +185,24 @@ def decode_cef(
     a ``_cef_parse_failure`` flag (unless ``ignore_failure``). Rows
     outside the mask ``active`` keep every field, unflagged.
     """
-    # inactive rows feed the parse a null, so they skip its regex
-    src = F.col(field) if active is None else F.when(active, F.col(field))
+    src = F.col(field)
     # leading syslog data before the header is ignored (decode_cef.go:78)
     body = F.when(
         F.locate("CEF:", src) > 0,
         F.substring(src, F.locate("CEF:", src), 2**30),
     )
-    marked = F.regexp_replace(
-        body, _HEADER_RX, _MARK + _SEP.join(f"${g}" for g in range(1, 9))
-    )
     # every header field and the ok probe read this one regex result
-    df = once(df, "_cef_parts", F.split(marked, _SEP, -1))
-    parts = F.col("_cef_parts")
-    df = df.withColumn("_cef_ok", matched(body, parts))
+    df, ok, group = captures(df, "_cef_parts", body, _HEADER_RX, 8, active)
+    df = df.withColumn("_cef_ok", ok)
     ok = F.col("_cef_ok")
 
-    def grp(g: int) -> Column:
-        # try_element_at: an unmatched row's parts array has ONE element
-        # (the line unchanged), and the materialized extension tokenizer
-        # below evaluates grp(8) unguarded — ANSI element_at would throw
-        v = F.try_element_at(parts, F.lit(g))
-        return F.substring(v, 2, 2**30) if g == 1 else v
-
-    version = grp(1).cast("int")
+    version = group(1).cast("int")
     header = {
-        name: _unescape_header(grp(i + 2))
+        name: _unescape_header(group(i + 2))
         for i, name in enumerate(_HEADER_FIELDS)
     }
-    severity = grp(7)
-    ext_blob = grp(8)
+    severity = group(7)
+    ext_blob = group(8)
 
     # the entries / dedup / map stages and every ECS column hang off
     # this one extension tokenizer result

@@ -10,14 +10,9 @@ convention; every regex below is written from scratch, simplified to
 the subset that is valid in BOTH Java (Spark JVM) and RE2 (DuckDB
 oracle) dialects — no lookaround, no atomic groups, no backrefs).
 
-Execution model (same single-eval scheme as ``dissect.py``): the grok
-expression compiles to ONE regex in which every named semantic is one
-capturing group (all library-internal groups are rewritten to
-non-capturing). One ``regexp_replace`` rewrites a matching line to
-``MARK + captures joined by \\x01``; match detection and every field
-then come out of that single regex evaluation — cost is independent of
-the number of extracted fields, and the whole parse stays inside
-whole-stage codegen (no Python in the hot path).
+The grok expression compiles to ONE regex in which every named
+semantic is one capturing group (all library-internal groups are
+rewritten to non-capturing), parsed by ``dissect.captures``.
 
 Grok semantics kept:
 
@@ -42,8 +37,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from beats_spark.conditions import assign_where, once
-from beats_spark.dissect import flag_failures, matched
+from beats_spark.conditions import assign_where
+from beats_spark.dissect import captures, flag_failures
 
 PARSE_ERROR_FLAG = "_grok_parse_failure"
 
@@ -143,9 +138,6 @@ GROK_PATTERNS: dict[str, str] = {
 
 _GROK_REF = re.compile(r"%\{(\w+)(?::([\w@.\[\]]+))?(?::(\w+))?\}")
 _TYPE_CAST = {"int": "long", "long": "long", "float": "double", "double": "double"}
-
-_SEP = "\x01"
-_MARK = "\x02"
 
 
 def _noncapture(rx: str, named=None) -> str:
@@ -270,7 +262,7 @@ class GrokPattern:
         if pattern_definitions:
             self.defs.update(pattern_definitions)
         self.semantics: list[_Semantic] = []
-        self._ngroups = 0
+        self.ngroups = 0
         self.regex = self._compile(expr, depth=0)
         if not self.semantics and require_captures:
             # the ES ingest grok accepts capture-less patterns as pure
@@ -286,8 +278,8 @@ class GrokPattern:
             raise ValueError("grok pattern recursion too deep (cycle?)")
         def register_named(name: str) -> bool:
             # joni captures named groups as fields (ES grok semantics)
-            self._ngroups += 1
-            self.semantics.append(_Semantic(name, self._ngroups, "string"))
+            self.ngroups += 1
+            self.semantics.append(_Semantic(name, self.ngroups, "string"))
             return True
 
         out: list[str] = []
@@ -299,9 +291,9 @@ class GrokPattern:
                 raise KeyError(f"unknown grok pattern %{{{syntax}}}")
             body = _simplify_star_alternation(self.defs[syntax])
             if field:
-                self._ngroups += 1
+                self.ngroups += 1
                 self.semantics.append(
-                    _Semantic(field, self._ngroups, _TYPE_CAST.get(dtype or "", "string"))
+                    _Semantic(field, self.ngroups, _TYPE_CAST.get(dtype or "", "string"))
                 )
                 out.append("(")
                 out.append(self._compile(body, depth + 1))
@@ -335,6 +327,21 @@ class GrokPattern:
         # skip and the tail are explicit [\s\S] classes
         return "^[\\s\\S]*?(?:" + core + ")[\\s\\S]*\\z"
 
+    def fields(self, group) -> dict[str, Column]:
+        """One Column per output key from the capture reader ``group``
+        (see ``dissect.captures``): an empty capture is null, duplicate
+        names coalesce to the first non-empty capture, typed semantics
+        try_cast. Gate the result with the match flag."""
+        by_key: dict[str, list[_Semantic]] = {}
+        for s in self.semantics:
+            by_key.setdefault(s.name, []).append(s)
+        out: dict[str, Column] = {}
+        for key, sems in by_key.items():
+            vals = [F.when(group(s.group) != "", group(s.group)) for s in sems]
+            col = F.coalesce(*vals) if len(vals) > 1 else vals[0]
+            out[key] = col if sems[0].dtype == "string" else col.try_cast(sems[0].dtype)
+        return out
+
     # ---------- python reference implementation (tests / oracle) ----------
 
     def parse(self, s: str | None, anchor: bool = False) -> dict[str, str] | None:
@@ -359,8 +366,6 @@ def grok(
     target_prefix: str = "grok",
     pattern_definitions: dict[str, str] | None = None,
     anchor: bool = False,
-    keep_empty: bool = False,
-    convert_types: bool = True,
     flags_col: str = "log_flags",
     ignore_failure: bool = False,
     active: Column | None = None,
@@ -369,38 +374,15 @@ def grok(
 
     Output fields land as a struct column ``target_prefix`` (or as
     top-level columns when ``target_prefix == ""``). One regex
-    evaluation per row regardless of field count (see module doc).
-    Empty captures surface as null unless ``keep_empty``. Rows outside
-    the mask ``active`` keep every field, unflagged.
+    evaluation per row regardless of field count. Empty captures
+    surface as null. Rows outside the mask ``active`` keep every field,
+    unflagged.
     """
     pat = GrokPattern(expr, pattern_definitions)
-    # inactive rows feed the parse a null, so they skip its regex
-    src = F.col(field) if active is None else F.when(active, F.col(field))
-    rep = _MARK + _SEP.join(f"${g}" for g in range(1, pat._ngroups + 1))
     parts_col = "_grok_parts"
-    df = once(df, parts_col, F.split(
-        F.regexp_replace(src, pat.anchored(anchor), rep), _SEP, -1))
-    parts = F.col(parts_col)
-    ok = matched(src, parts)
-
-    def grp(g: int) -> Column:
-        v = F.element_at(parts, g)
-        v = F.substring(v, 2, 2**30) if g == 1 else v
-        return v if keep_empty else F.when(v != "", v)
-
-    by_key: dict[str, list[_Semantic]] = {}
-    for s in pat.semantics:
-        by_key.setdefault(s.name, []).append(s)
-    out_cols: dict[str, Column] = {}
-    for key, sems in by_key.items():
-        col = F.coalesce(*[grp(s.group) for s in sems]) if len(sems) > 1 else grp(
-            sems[0].group
-        )
-        dtype = sems[0].dtype
-        if convert_types and dtype != "string":
-            col = col.try_cast(dtype)
-        out_cols[key] = F.when(ok, col)
-
+    df, ok, group = captures(df, parts_col, F.col(field), pat.anchored(anchor),
+                             pat.ngroups, active)
+    out_cols = {k: F.when(ok, c) for k, c in pat.fields(group).items()}
     if target_prefix:
         out_cols = {target_prefix: F.when(
             ok, F.struct(*[c.alias(k) for k, c in out_cols.items()]))}

@@ -3,9 +3,7 @@
 Re-expresses the reference's ragel syslog parser + event mapping
 (``filebeat/input/syslog/parser.rl``, ``event.go:25-26,224-238``,
 ``input.go:49-85,181-233``) as ONE anchored regex evaluated once per
-row (the dissect marked-column trick: the whole match rewrites to
-MARK + captures joined by \\x01, so match detection and all captures
-cost a single regexp evaluation).
+row (``dissect.captures``).
 
 Output columns (flat analogues of the reference's nested fields):
 
@@ -28,8 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from beats_spark.conditions import assign_where, once
-from beats_spark.dissect import matched
+from beats_spark.conditions import assign_where
+from beats_spark.dissect import captures
 
 SEVERITY_LABELS = [
     "Emergency", "Alert", "Critical", "Error",
@@ -53,9 +51,6 @@ _RFC3164 = (
     r"(.*?)\n?$"
 )
 
-_SEP = "\x01"
-_MARK = "\x02"
-
 
 def _label(idx: Column, labels: list[str]) -> Column:
     arr = F.array(*[F.lit(x) for x in labels])
@@ -73,29 +68,22 @@ def syslog_rfc3164(
 ) -> DataFrame:
     """Parse ``df[field]`` as RFC-3164 syslog lines (see module doc);
     rows outside the mask ``active`` keep every field."""
-    # inactive rows feed the parse a null, so they skip its regex
-    src = F.col(field) if active is None else F.when(active, F.col(field))
-    rep = _MARK + _SEP.join(f"${g}" for g in range(1, 7))
-    df = once(df, "_sl_parts", F.split(F.regexp_replace(src, _RFC3164, rep), _SEP, -1))
-    parts = F.col("_sl_parts")
-    ok = matched(src, parts)
-
-    def grp(g: int) -> Column:
-        v = F.element_at(parts, g)
-        v = F.substring(v, 2, 2**30) if g == 1 else v
-        return F.when(v != "", v)  # empty capture = absent optional part
+    src = F.col(field)
+    df, ok, group = captures(df, "_sl_parts", src, _RFC3164, 6, active)
+    # an empty capture is an absent optional part
+    grp = {g: F.when(group(g) != "", group(g)) for g in range(1, 7)}
 
     # the reference validates priority <= 191 (severity 0-7 × facility
     # 0-23) and treats the whole line as unparseable otherwise
     # (parser.rl priority machine); <999> must not parse as pri=999
-    pri0 = grp(1).try_cast("int")
+    pri0 = grp[1].try_cast("int")
     ok = ok & (pri0.isNull() | (pri0 <= 191))
     pri = F.when(ok, pri0)
     ts = F.when(
         ok,
         F.to_timestamp(
             F.concat(F.lit(f"{assume_year} "),
-                     F.regexp_replace(grp(2), r"\s+", " ")),
+                     F.regexp_replace(grp[2], r"\s+", " ")),
             "yyyy MMM d HH:mm:ss",
         ),
     )
@@ -108,10 +96,10 @@ def syslog_rfc3164(
         "syslog_facility": fac,
         "syslog_facility_label": _label(fac, FACILITY_LABELS),
         "syslog_ts": ts,
-        "hostname": F.when(ok, grp(3)),
-        "process_program": F.when(ok, grp(4)),
-        "process_pid": F.when(ok, grp(5).try_cast("int")),
-        "syslog_message": F.when(ok, F.rtrim(grp(6))).otherwise(
+        "hostname": F.when(ok, grp[3]),
+        "process_program": F.when(ok, grp[4]),
+        "process_pid": F.when(ok, grp[5].try_cast("int")),
+        "syslog_message": F.when(ok, F.rtrim(grp[6])).otherwise(
             src if keep_raw else F.lit(None)
         ),
     }

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from beats_spark.dissect import captures
+
 
 def read_log_lines(
     spark: SparkSession,
@@ -257,7 +259,9 @@ _DOCKER_SCHEMA = T.StructType(
     ]
 )
 
-_CRI_RE = r"^([^ ]+) (stdout|stderr) ([PF]) (.*)$"
+# `$` may stop before a final line terminator; the tail swallows it, so
+# the whole line is consumed and the payload ends where `$` put it
+_CRI_RE = r"^([^ ]+) (stdout|stderr) ([PF]) (.*)$[\s\S]*"
 
 
 def docker_json_reader(
@@ -279,12 +283,14 @@ def docker_json_reader(
     sessionization (match=before on the partial marker).
     """
     if cri:
-        df = (
-            df.withColumn("ts_raw", F.regexp_extract(F.col(line_col), _CRI_RE, 1))
-            .withColumn("stream", F.regexp_extract(F.col(line_col), _CRI_RE, 2))
-            .withColumn("_partial", F.regexp_extract(F.col(line_col), _CRI_RE, 3) == "P")
-            .withColumn(line_col, F.regexp_extract(F.col(line_col), _CRI_RE, 4))
-        )
+        # one regex evaluation; a line not in CRI format reads as nulls
+        df, ok, group = captures(df, "_cri_parts", F.col(line_col), _CRI_RE, 4)
+        df = df.withColumns({
+            "ts_raw": F.when(ok, group(1)),
+            "stream": F.when(ok, group(2)),
+            "_partial": F.when(ok, group(3) == "P"),
+            line_col: F.when(ok, group(4)),
+        }).drop("_cri_parts")
     else:
         parsed = F.from_json(F.col(line_col), _DOCKER_SCHEMA)
         df = (

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import contextlib
+import logging
+
 import pytest
 
 from beats_spark.session import get_spark
@@ -37,3 +40,31 @@ def registry_frames(spark, tmp_path_factory):
                    str(tmp_path_factory.mktemp("no_reference") / "absent"))
         return {r.name: r.build(spark, sf_dir)
                 for r in entry.REGISTRY if not entry.skip_reason(r)}
+
+
+@contextlib.contextmanager
+def error_records():
+    """ERROR records from the root logger and PySpark's query-context
+    loggers (which do not propagate)."""
+    from pyspark.logger import PySparkLogger
+
+    class Collect(logging.Handler):
+        def __init__(self):
+            super().__init__(logging.ERROR)
+            self.records: list[logging.LogRecord] = []
+
+        def emit(self, record):
+            self.records.append(record)
+
+    h = Collect()
+    loggers = [logging.getLogger()] + [
+        PySparkLogger.getLogger(n)
+        for n in ("DataFrameQueryContextLogger", "SQLQueryContextLogger")
+    ]
+    for lg in loggers:
+        lg.addHandler(h)
+    try:
+        yield h.records
+    finally:
+        for lg in loggers:
+            lg.removeHandler(h)

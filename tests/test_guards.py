@@ -8,8 +8,8 @@ row set without a ``Union`` in the plan."""
 
 from __future__ import annotations
 
-import contextlib
-import logging
+import ast
+import pathlib
 
 import pandas as pd
 import pytest
@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from beats_spark.conditions import compile_condition
 from beats_spark.pipeline import build_pipeline
 from beats_spark.processors import build_processor
-from tests.conftest import rows
+from tests.conftest import error_records, rows
 
 ERROR = {"equals": {"level": "error"}}
 
@@ -204,6 +204,81 @@ def test_filter_on_parsed_field_runs_the_parse_once(spark, tmp_path, case):
     assert "GreaterThan(offset,1)" in scan.split("PushedFilters: ")[1]
 
 
+MARK = "\x02"  # the capture kernel's match marker, as the first input byte
+
+
+def _mark_cases():
+    """``case: (entries, a matching line or None, a parsed column and its
+    value on that line, the per-row failure column)``. Both lines start
+    with the kernel's MARK; a syslog line cannot both start with it
+    and match."""
+    tok = "%{verb} %{path}"
+    grok_expr = "%{WORD:verb} %{NOTSPACE:path}"
+
+    def flagged(flag):
+        return F.coalesce(F.array_contains(F.col("log_flags"), flag), F.lit(False))
+
+    ingest_failed = F.col("`error.message`").isNotNull()
+    dissect = {"dissect": {"tokenizer": tok, "target_prefix": ""}}
+    return {
+        "dissect": ([dissect], MARK + "GET /a", "path", "/a",
+                    flagged("dissect_parsing_error")),
+        "grok": ([{"grok": {"expr": grok_expr, "target_prefix": ""}}],
+                 MARK + "GET /a", "path", "/a", flagged("_grok_parse_failure")),
+        "syslog": ([{"syslog": {}}], None, "hostname", None,
+                   F.col("hostname").isNull()
+                   & (F.col("syslog_message") == F.col("message"))),
+        "decode_cef": ([{"decode_cef": {}}], MARK + "CEF:0|v|p|1|sig|name|5|src=10.0.0.1",
+                       "cef.name", "name", flagged("_cef_parse_failure")),
+        "ingest_grok": ([{"ingest_pipeline": {"definition": {"processors": [
+            {"grok": {"field": "message", "patterns": [grok_expr]}}]}}}],
+            MARK + "GET /a", "path", "/a", ingest_failed),
+        "ingest_dissect": ([{"ingest_pipeline": {"definition": {"processors": [
+            {"dissect": {"field": "message", "pattern": tok}}]}}}],
+            MARK + "GET /a", "path", "/a", ingest_failed),
+        # the flagship's shape: a drop on a parsed field above the parse
+        "dissect_drop_event": ([dissect, {"drop_event": {"when": {
+            "equals": {"path": "/drop"}}}}], MARK + "GET /a", "path", "/a",
+            flagged("dissect_parsing_error")),
+    }
+
+
+@pytest.mark.parametrize("case", ["dissect", "grok", "syslog", "decode_cef", "ingest_grok",
+                                  "ingest_dissect", "dissect_drop_event"])
+def test_line_starting_with_the_capture_mark(spark, case):
+    """An unmatched line that starts with the kernel's MARK is kept and
+    reads as unmatched (it used to read as matched, and every group
+    read past the end of its capture array failed the job); a matching
+    one parses."""
+    entries, hit, col, want, failed = _mark_cases()[case]
+    miss = MARK + "oops"
+    lines = [miss] + ([hit] if hit else [])
+    df = spark.createDataFrame([(ln, i) for i, ln in enumerate(lines)],
+                               "message string, offset long")
+    out = build_pipeline(entries)(df)
+    got = {r[0]: (r[1], r[2]) for r in out.select(
+        "message", F.col(col), failed).collect()}
+    assert got[miss] == (None, True)
+    if hit:
+        assert got[hit] == (want, False)
+    assert len(got) == len(lines)
+
+
+def test_capture_format_is_spelled_in_one_module():
+    """The capture kernel's MARK/SEP control characters occur in one
+    module's string constants: every parser reads its captures through
+    ``dissect.captures``."""
+    root = pathlib.Path(__file__).resolve().parents[1] / "beats_spark"
+    spelled = {
+        path.relative_to(root).as_posix()
+        for path in root.rglob("*.py")
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        and ("\x01" in node.value or "\x02" in node.value)
+    }
+    assert spelled == {"dissect.py"}
+
+
 # -- regressions of the duplicated guard code -------------------------------
 
 
@@ -290,38 +365,10 @@ def test_if_then_else_reads_the_condition_before_either_branch(spark):
 # -- no caught analysis errors while compiling a guard ----------------------
 
 
-@contextlib.contextmanager
-def _error_records():
-    """ERROR records from the root logger and PySpark's query-context
-    loggers (which do not propagate)."""
-    from pyspark.logger import PySparkLogger
-
-    class Collect(logging.Handler):
-        def __init__(self):
-            super().__init__(logging.ERROR)
-            self.records: list[logging.LogRecord] = []
-
-        def emit(self, record):
-            self.records.append(record)
-
-    h = Collect()
-    loggers = [logging.getLogger()] + [
-        PySparkLogger.getLogger(n)
-        for n in ("DataFrameQueryContextLogger", "SQLQueryContextLogger")
-    ]
-    for lg in loggers:
-        lg.addHandler(h)
-    try:
-        yield h.records
-    finally:
-        for lg in loggers:
-            lg.removeHandler(h)
-
-
 def test_guarded_convert_skips_excluded_rows_without_error_logs(spark):
     df = spark.createDataFrame([("error", "5"), ("info", "x"), ("info", "7")],
                                "level string, n string")
-    with _error_records() as records:
+    with error_records() as records:
         out = build_pipeline([{"convert": {"fields": [{"from": "n", "type": "integer"}],
                                            "when": ERROR}}])(df)
     assert records == []
@@ -334,7 +381,7 @@ def test_guarded_ingest_split_compiles_without_error_logs(spark):
     from beats_spark.ingest import compile_ingest_pipeline
 
     df = spark.createDataFrame([("error", "a,b"), ("info", "c,d")], "level string, msg string")
-    with _error_records() as records:
+    with error_records() as records:
         out = compile_ingest_pipeline({"processors": [
             {"split": {"field": "msg", "separator": ",", "if": "ctx.level == 'error'"}},
         ]})(df)

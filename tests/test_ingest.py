@@ -19,6 +19,7 @@ from beats_spark.ingest import (
     compile_ingest_pipeline,
     painless_condition,
 )
+from tests.conftest import error_records
 
 
 def _run(spark, cfg, rows, schema, **kw):
@@ -363,6 +364,53 @@ def test_dot_expander_object_rename_ignore_failure_moves_nothing(spark):
     got, _ = _run(spark, _object_rename(), _OBJ_ROWS, _OBJ_SCHEMA)
     assert got["half"]["error.message"] == "field [es.node] already exists"
     assert got["free"]["error.message"] is None
+
+
+@pytest.mark.parametrize("case", ["bigint", "bigint_string", "array", "struct"])
+def test_grok_onto_an_existing_typed_column(spark, case):
+    """A grok field written onto a column of another type keeps the old
+    value where its group took no part in the match, with the types
+    merged by Spark's cast rules (no caught analysis error). bigint and
+    array<string> give the same output as the earlier coalesce probe;
+    that probe cast a string capture onto bigint (failing the job on
+    "abc") and dropped a struct's old value on a matched row."""
+    typed = "%{WORD:verb} (?:%{NUMBER:n:int}|-)"
+    optional = "%{WORD:verb}(?: %{NOTSPACE:n})?"
+    fail = "Provided Grok expressions do not match field value"
+    pattern, data, schema, want_type, want = {
+        "bigint": (typed, [("GET 5", 7), ("PUT -", 8), ("x", 9)], "bigint", "bigint",
+                   {"GET 5": ("GET", 5, None), "PUT -": ("PUT", 8, None),
+                    "x": (None, 9, fail)}),
+        "bigint_string": (optional, [("GET abc", 7), ("PUT", 8), ("!", 9)], "bigint",
+                          "string", {"GET abc": ("GET", "abc", None),
+                                     "PUT": ("PUT", "8", None), "!": (None, "9", fail)}),
+        "array": (optional, [("GET a", ["x"]), ("PUT", ["y", "z"]), ("!", None)],
+                  "array<string>", "array<string>",
+                  {"GET a": ("GET", ["a"], None), "PUT": ("PUT", ["y", "z"], None),
+                   "!": (None, None, fail)}),
+        "struct": (optional, [("GET a", (1, "p")), ("PUT", (2, "q")), ("!", (3, "r"))],
+                   "struct<a:int,b:string>", "string",
+                   {"GET a": ("GET", "a", None), "PUT": ("PUT", "{2, q}", None),
+                    "!": (None, "{3, r}", fail)}),
+    }[case]
+    cfg = {"processors": [{"grok": {"field": "message", "patterns": [pattern]}}]}
+    with error_records() as records:
+        got, out = _run(spark, cfg, data, f"message string, n {schema}")
+    assert records == []
+    assert dict(out.dtypes)["n"] == want_type
+    assert {m: (r["verb"], r["n"], r["error.message"]) for m, r in got.items()} == want
+
+
+def test_geoip_honors_its_if(spark):
+    geo = spark.createDataFrame([("1.1.1.1", "AU"), ("8.8.8.8", "US")],
+                                "ip string, country_iso_code string")
+    cfg = {"processors": [{"geoip": {"field": "source.ip", "target_field": "source.geo",
+                                     "if": "ctx.kind == 'ext'"}}]}
+    got, _ = _run(spark, cfg, [("a", "1.1.1.1", "ext"), ("b", "1.1.1.1", "int"),
+                               ("c", "8.8.8.8", "ext"), ("d", "8.8.8.8", "int")],
+                  "message string, `source.ip` string, kind string", geoip_table=geo)
+    assert {m: r["source.geo.country_iso_code"] for m, r in got.items()} == {
+        "a": "AU", "b": None, "c": "US", "d": None}
 
 
 def test_single_projection_plan_stays_narrow(spark):

@@ -96,6 +96,24 @@ def test_cri_reader(spark):
     assert rows(out, "stream", "message") == [("stderr", "oops"), ("stdout", "begin end")]
 
 
+@pytest.mark.parametrize("stream", ["all", "stdout"])
+def test_cri_reader_parses_once_and_reads_garbage_as_nulls(spark, stream):
+    """One evaluation of the CRI regex per row, also with the stream
+    filter above it; a line not in CRI format reads as nulls (as a
+    non-JSON line does on the docker path) instead of failing the job."""
+    from beats_spark.readers import _CRI_RE
+
+    lines = [("c1", 0, "2026-01-01T00:00:00.000Z stdout F ok"),
+             ("c1", 10, "not a cri line")]
+    df = spark.createDataFrame(lines, "source string, offset long, message string")
+    out = docker_json_reader(df, cri=True, stream=stream)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count(_CRI_RE) == 1
+    got = [(r.stream, r.message, r.ts is None) for r in out.orderBy("offset").collect()]
+    assert got == [("stdout", "ok", False)] + (
+        [(None, "", True)] if stream == "all" else [])
+
+
 def test_read_stdin_frames_lines(spark):
     import io
 
