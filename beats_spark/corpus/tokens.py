@@ -512,16 +512,6 @@ def token_stats(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _pair_mask(t: Column, a: int, b: int) -> Column:
-    """Boolean mask m[i] = (t[i], t[i+1]) == (a, b), built from shifted
-    slices (never element_at inside a lambda — see :func:`shingles`)."""
-    m = F.greatest(F.size(t) - 1, F.lit(0))
-    return F.zip_with(
-        F.slice(t, 1, m), F.slice(t, 2, m),
-        lambda x, y: (x == a) & (y == b),
-    )
-
-
 def _apply_merges_udf(merges: list[tuple[int, int, int]]):
     """Arrow-batched merge rewriter: the whole batch flattens into ONE
     numpy array with ``-1`` separators between sequences (ids must be

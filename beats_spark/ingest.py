@@ -515,12 +515,12 @@ def painless_condition(src: str, df: DataFrame) -> Column:
 _MUSTACHE_RE = re.compile(r"\{\{\{?\s*([^}\s]+)\s*\}?\}\}")
 
 
-def _template(value: Any, df: DataFrame, failure_msg: str | None = None) -> Column:
+def _template(value: Any, df: DataFrame) -> Column:
     """A ``set``/``append`` value → Column. Strings compile their
     mustache refs to concat-of-columns; other scalars pass through."""
     if not isinstance(value, str):
         if isinstance(value, list):
-            return F.array(*[_template(v, df, failure_msg) for v in value])
+            return F.array(*[_template(v, df) for v in value])
         return F.lit(value)
     parts: list[Column] = []
     pos = 0
@@ -534,7 +534,7 @@ def _template(value: Any, df: DataFrame, failure_msg: str | None = None) -> Colu
         elif ref == "_ingest.on_failure_message":
             parts.append(F.coalesce(
                 _c(ERRMSG) if _has(df, ERRMSG) else F.lit(None),
-                F.lit(failure_msg or "ingest failure"),
+                F.lit("ingest failure"),
             ))
         else:
             # mustache renders a missing/null field ref as the EMPTY
@@ -555,10 +555,10 @@ def _template(value: Any, df: DataFrame, failure_msg: str | None = None) -> Colu
 # ---------------------------------------------------------------------------
 # per-processor compilers
 # ---------------------------------------------------------------------------
-# Each returns (assigns, fails, fail_msg, row_filter):
-#   assigns: {col: expr} applied where active & ~fails
-#   fails:   boolean Column over INPUT columns (None = can't fail)
-#   row_filter: rows to KEEP where active (drop processor), else None
+# Each returns (assigns, fails, fail_msg):
+#   assigns:  {col: expr} applied where active & ~fails
+#   fails:    boolean Column over INPUT columns (None = can't fail)
+#   fail_msg: the error.message of a failed row (str or Column)
 
 
 def _map_entry(df: DataFrame, fld: str) -> tuple[str, str] | None:
@@ -663,14 +663,14 @@ def _missing(df: DataFrame, fld: str) -> Column:
     return F.lit(True) if col is None else col.isNull()
 
 
-def _p_set(df, cfg, fmsg):
+def _p_set(df, cfg):
     fld = cfg["field"]
     if "copy_from" in cfg:
         src = cfg["copy_from"]
         val = _get(df, src)
         val = F.lit(None) if val is None else val
     else:
-        val = _template(cfg["value"], df, fmsg)
+        val = _template(cfg["value"], df)
         # ES coerces a scalar literal to the field's existing mapping
         # type ('-1' onto a long field stores -1): when the target
         # column is typed and the literal parses, keep the column type
@@ -693,7 +693,7 @@ def _p_set(df, cfg, fmsg):
     return {fld: val}, None, None
 
 
-def _p_remove(df, cfg, fmsg):
+def _p_remove(df, cfg):
     flds = cfg["field"] if isinstance(cfg["field"], list) else [cfg["field"]]
     # an object name removes the whole subtree: `remove: tempcsv` in the
     # flat-column model means every `tempcsv.*` column
@@ -728,7 +728,7 @@ def _p_remove(df, cfg, fmsg):
     return assigns, fails, f"field [{flds}] not present"
 
 
-def _p_rename(df, cfg, fmsg):
+def _p_rename(df, cfg):
     src, dst = cfg["field"], cfg["target_field"]
     ignore_missing = cfg.get("ignore_missing", False)
     entry = None if _has(df, src) else _map_entry(df, src)
@@ -776,9 +776,9 @@ def _p_rename(df, cfg, fmsg):
     return assigns, fails, msg
 
 
-def _p_append(df, cfg, fmsg):
+def _p_append(df, cfg):
     fld = cfg["field"]
-    val = _template(cfg["value"], df, fmsg)
+    val = _template(cfg["value"], df)
     if isinstance(cfg["value"], list):
         addition = val
     else:
@@ -800,7 +800,7 @@ def _p_append(df, cfg, fmsg):
     return {fld: out}, None, None
 
 
-def _p_lowercase(df, cfg, fmsg, fn=F.lower):
+def _p_lowercase(df, cfg, fn=F.lower):
     fld = cfg["field"]
     tgt = cfg.get("target_field", fld)
     if cfg.get("ignore_missing", False) and not _has(df, fld):
@@ -817,7 +817,7 @@ def _p_lowercase(df, cfg, fmsg, fn=F.lower):
     return {tgt: out}, fails, f"field [{fld}] not present"
 
 
-def _p_gsub(df, cfg, fmsg):
+def _p_gsub(df, cfg):
     fld = cfg["field"]
     tgt = cfg.get("target_field", fld)
     if cfg.get("ignore_missing", False) and not _has(df, fld):
@@ -840,7 +840,7 @@ def _strip_trailing_empties(arr: Column) -> Column:
     return F.slice(arr, F.lit(1), F.greatest(F.size(arr) - trail, F.lit(0)))
 
 
-def _p_split(df, cfg, fmsg):
+def _p_split(df, cfg):
     fld = cfg["field"]
     tgt = cfg.get("target_field", fld)
     if cfg.get("ignore_missing", False) and not _has(df, fld):
@@ -853,7 +853,7 @@ def _p_split(df, cfg, fmsg):
     return {tgt: arr}, fails, f"field [{fld}] not present"
 
 
-def _p_join(df, cfg, fmsg):
+def _p_join(df, cfg):
     fld = cfg["field"]
     tgt = cfg.get("target_field", fld)
     src = _c(fld) if _has(df, fld) else F.lit(None).cast("array<string>")
@@ -871,7 +871,7 @@ _IP_RE = (
 )
 
 
-def _p_convert(df, cfg, fmsg):
+def _p_convert(df, cfg):
     fld = cfg["field"]
     tgt = cfg.get("target_field", fld)
     typ = cfg["type"]
@@ -905,7 +905,7 @@ def _p_convert(df, cfg, fmsg):
     return {tgt: out}, fails, f"convert of [{fld}] to {typ} failed"
 
 
-def _p_date(df, cfg, fmsg):
+def _p_date(df, cfg):
     fld = cfg["field"]
     tgt = cfg.get("target_field", "@timestamp")
     src = (_get(df, fld) if _get(df, fld) is not None
@@ -953,7 +953,7 @@ def _p_date(df, cfg, fmsg):
     )
 
 
-def _p_urldecode(df, cfg, fmsg):
+def _p_urldecode(df, cfg):
     fld = cfg["field"]
     tgt = cfg.get("target_field", fld)
     if cfg.get("ignore_missing", False) and not _has(df, fld):
@@ -965,7 +965,7 @@ def _p_urldecode(df, cfg, fmsg):
     return {tgt: out}, fails, f"field [{fld}] not present"
 
 
-def _p_json(df, cfg, fmsg):
+def _p_json(df, cfg):
     fld = cfg["field"]
     tgt = cfg.get("target_field", fld)
     if cfg.get("add_to_root", False):
@@ -983,7 +983,7 @@ def _p_json(df, cfg, fmsg):
     return {tgt: parsed}, fails, f"field [{fld}] is not valid JSON"
 
 
-def _p_kv(df, cfg, fmsg):
+def _p_kv(df, cfg):
     fld = cfg["field"]
     tgt = cfg.get("target_field", fld)
     if cfg.get("ignore_missing", False) and not _has(df, fld):
@@ -1056,7 +1056,7 @@ def _p_kv(df, cfg, fmsg):
     return ({tgt: new_map}, fails, f"field [{fld}] not present")
 
 
-def _p_csv(df, cfg, fmsg):
+def _p_csv(df, cfg):
     from beats_spark.processors.parsers import DecodeCsvFields
 
     fld = cfg["field"]
@@ -1114,7 +1114,7 @@ _UA_OS = [
 ]
 
 
-def _p_user_agent(df, cfg, fmsg):
+def _p_user_agent(df, cfg):
     fld = cfg.get("field", "user_agent.original")
     tgt = cfg.get("target_field", "user_agent")
     src = (_c(fld) if _has(df, fld) else F.lit(None)).cast("string")
@@ -1163,7 +1163,7 @@ def _p_user_agent(df, cfg, fmsg):
     return assigns, fails, f"field [{fld}] not present"
 
 
-def _p_fingerprint(df, cfg, fmsg):
+def _p_fingerprint(df, cfg):
     flds = cfg["fields"]
     tgt = cfg.get("target_field", "fingerprint")
     method = cfg.get("method", "SHA-1").lower().replace("-", "")
@@ -1190,8 +1190,8 @@ _SIMPLE = {
     "rename": _p_rename,
     "append": _p_append,
     "lowercase": _p_lowercase,
-    "uppercase": lambda df, cfg, m: _p_lowercase(df, cfg, m, fn=F.upper),
-    "trim": lambda df, cfg, m: _p_lowercase(df, cfg, m, fn=F.trim),
+    "uppercase": lambda df, cfg: _p_lowercase(df, cfg, fn=F.upper),
+    "trim": lambda df, cfg: _p_lowercase(df, cfg, fn=F.trim),
     "gsub": _p_gsub,
     "split": _p_split,
     "join": _p_join,
@@ -1362,7 +1362,7 @@ class IngestPipeline:
             for mem in mems:
                 assigns.update(_p_rename(self._sh, {
                     "field": f"{src0}.{mem}", "target_field": f"{dst0}.{mem}",
-                    "ignore_missing": True}, None)[0])
+                    "ignore_missing": True})[0])
             present = [_c(f"{src0}.{m}").isNotNull() for m in mems
                        if _has(self._sh, f"{src0}.{m}")]
             taken = [_c(f"{dst0}.{m}").isNotNull() for m in mems
@@ -1403,10 +1403,9 @@ class IngestPipeline:
         on_failure = cfg.pop("on_failure", None)
         cfg.pop("tag", None)
         cfg.pop("description", None)
-        fmsg = None
         # the per-processor compilers only READ schema and build
         # name-based expressions — hand them the cheap shadow
-        assigns, fails, msg = fn(self._sh, cfg, fmsg)
+        assigns, fails, msg = fn(self._sh, cfg)
         return self._apply(df, assigns, fails, msg, act,
                            ignore_failure, on_failure, idx)
 

@@ -33,17 +33,3 @@ class PipelineMetrics:
             except Exception:
                 out[name] = -1  # frame never materialized
         return out
-
-
-def instrument(df: DataFrame, metrics: PipelineMetrics, stage: str) -> DataFrame:
-    """Counter point: ``events.total`` at read, ``events.published`` at
-    sink, etc."""
-    return metrics.observe_count(df, stage)
-
-
-def output_metrics(df: DataFrame, sink_col: str = "sink") -> DataFrame:
-    """Per-output acked/bytes counters as a metrics table."""
-    return df.groupBy(sink_col).agg(
-        F.count(F.lit(1)).alias("events_acked"),
-        F.sum(F.octet_length(F.to_json(F.struct(*df.columns)))).alias("write_bytes"),
-    )

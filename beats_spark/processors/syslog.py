@@ -14,7 +14,7 @@ Output columns (flat analogues of the reference's nested fields):
 - ``syslog_ts`` — RFC-3164 timestamps carry no year; the parse
   supplies ``assume_year`` (the reference applies the host clock's
   year the same way).
-- ``syslog_message`` — the message tail, trailing newline trimmed.
+- ``syslog_message`` — the message tail, trailing ``\\n`` or ``\\r\\n`` trimmed.
 
 Unparseable rows keep the raw line and null syslog fields (the
 reference logs "can't parse event as syslog rfc3164" and forwards the
@@ -48,7 +48,7 @@ _RFC3164 = (
     r"([A-Z][a-z]{2}\s{1,2}\d{1,2} \d{2}:\d{2}:\d{2}) "
     r"(\S+) "
     r"(?:([^:\[\s]+)(?:\[(\d+)\])?: ?)?"
-    r"(.*?)\n?$"
+    r"(.*?)(?:\r?\n)?\z"
 )
 
 

@@ -315,6 +315,7 @@ def docker_json_reader(
         lines = F.array_sort(
             F.collect_list(F.struct(F.col(order_col).alias("o"), F.col(line_col).alias("l")))
         )
+        texts = F.transform(F.col("_lines"), lambda x: x["l"])
         df = (
             grouped.groupBy(*partition_cols, "stream", "_grp")
             .agg(
@@ -322,7 +323,10 @@ def docker_json_reader(
                 F.min("ts").alias("ts"),
                 lines.alias("_lines"),
             )
-            .withColumn(line_col, F.concat_ws("", F.transform(F.col("_lines"), lambda x: x["l"])))
+            # concat_ws skips null lines: a group of only unparsable
+            # lines must read null, while an empty payload reads ''
+            .withColumn(line_col, F.when(
+                F.exists(texts, lambda t: t.isNotNull()), F.concat_ws("", texts)))
             .drop("_lines", "_grp")
         )
     return df.drop("_partial") if "_partial" in df.columns else df

@@ -18,22 +18,17 @@ that are fully implementable in-sandbox with the stdlib:
   ``url_field`` query-param rewrite, or the raw value as the URL) or
   from a response header (Link-style regex) — until the chain ends.
 
-Spark-first design mirrors the repo's other socket inputs
-(``udp_source.py``, ``unix_source.py``): the Python Data Source API's
-``SimpleDataSourceStreamReader`` is the documented tool for a
-low-volume driver-prefetched source. The listen-side server owns its
-port on a daemon thread and appends validated bodies to a buffer;
-each microbatch drains rows past the committed sequence offset, and
-rows are retained until COMMITTED so a failed batch replays from the
-buffer — within-run effectively-once, strictly stronger than the
-reference's stateless http_endpoint input (no acks: an event is lost
-if Beats dies between publish and delivery).
+The listen-side server owns its port on a daemon thread and hands
+each validated body to the replay buffer of
+:class:`beats_spark.streaming.sources.BufferedStreamReader`, like the
+repo's other socket inputs (``udp_source.py``, ``unix_source.py``):
+within-run effectively-once, strictly stronger than the reference's
+stateless http_endpoint input (no acks: an event is lost if Beats dies
+between publish and delivery).
 
 The poll-side client is a plain driver-side function
 (``httpjson_fetch``) so the pagination walk is testable without
-Spark, wrapped either as a batch DataFrame (``httpjson_scan``) or as
-a streaming source (``HttpJsonDataSource``) where each microbatch is
-one interval tick of the reference's poll loop.
+Spark, wrapped as a batch DataFrame (``httpjson_scan``).
 
 Scale note: one webhook port / one API poll loop is one driver-side
 ingest point — the same single-process shape as the reference input.
@@ -49,12 +44,13 @@ import re
 import threading
 import urllib.parse
 import urllib.request
-from collections import deque
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.datasource import DataSource
+
+from beats_spark.streaming.sources import BufferedStreamReader
 
 SCHEMA = "value string, sender string, recv_seq long"
 
@@ -128,8 +124,9 @@ class HttpEndpointDataSource(DataSource):
         return _HttpEndpointReader(self.options)
 
 
-class _HttpEndpointReader(SimpleDataSourceStreamReader):
+class _HttpEndpointReader(BufferedStreamReader):
     def __init__(self, options):
+        super().__init__(options)
         self.host = options.get("host", "127.0.0.1")
         self.port = int(options["port"])
         self.path = options.get("url", "/")
@@ -141,28 +138,8 @@ class _HttpEndpointReader(SimpleDataSourceStreamReader):
         self.content_type = options.get("contenttype", "application/json")
         self.response_code = int(options.get("responsecode", 200) or 200)
         self.response_body = options.get("responsebody", _SUCCESS)
-        self.max_batch = int(options.get("maxbatchsize", 10_000) or 10_000)
-        self._buf: deque[tuple[str, str, int]] = deque()
-        self._seq = 0
-        self._lock = threading.Lock()
-        self._server: ThreadingHTTPServer | None = None
 
-    def __getstate__(self) -> dict:
-        # same discipline as udp_source: the live server, lock, and
-        # buffer stay on the driver; the pickled executor copy never
-        # binds (normal batches come from the driver prefetch cache).
-        return {k: v for k, v in self.__dict__.items()
-                if k not in ("_server", "_lock", "_buf")}
-
-    def __setstate__(self, state: dict) -> None:
-        self.__dict__.update(state)
-        self._buf = deque()
-        self._lock = threading.Lock()
-        self._server = None
-
-    def _ensure_bound(self) -> None:
-        if self._server is not None:
-            return
+    def _start(self) -> ThreadingHTTPServer:
         reader = self
 
         class _Handler(BaseHTTPRequestHandler):
@@ -200,9 +177,7 @@ class _HttpEndpointReader(SimpleDataSourceStreamReader):
                     self._reply(status, json.dumps({"message": err}))
                     return
                 sender = f"{self.client_address[0]}:{self.client_address[1]}"
-                with reader._lock:
-                    reader._seq += 1
-                    reader._buf.append((text, sender, reader._seq))
+                reader._push(text, sender)
                 self._reply(reader.response_code, reader.response_body)
 
             # the reference validates method INSIDE the ladder so a
@@ -210,33 +185,11 @@ class _HttpEndpointReader(SimpleDataSourceStreamReader):
             # through the same path.
             do_POST = do_GET = do_PUT = do_DELETE = do_PATCH = _serve
 
-        self._server = ThreadingHTTPServer((self.host, self.port), _Handler)
-        self._server.daemon_threads = True
-        t = threading.Thread(target=self._server.serve_forever, daemon=True,
-                             name=f"http-endpoint-{self.port}")
-        t.start()
-
-    def initialOffset(self) -> dict:  # noqa: N802
-        return {"seq": 0}
-
-    def read(self, start: dict):
-        self._ensure_bound()
-        s = start["seq"]
-        with self._lock:
-            rows = [r for r in self._buf if r[2] > s][: self.max_batch]
-        end = rows[-1][2] if rows else s
-        return iter(rows), {"seq": end}
-
-    def readBetweenOffsets(self, start: dict, end: dict):  # noqa: N802
-        with self._lock:
-            return iter(
-                [r for r in self._buf if start["seq"] < r[2] <= end["seq"]]
-            )
-
-    def commit(self, end: dict) -> None:
-        with self._lock:
-            while self._buf and self._buf[0][2] <= end["seq"]:
-                self._buf.popleft()
+        server = ThreadingHTTPServer((self.host, self.port), _Handler)
+        server.daemon_threads = True
+        threading.Thread(target=server.serve_forever, daemon=True,
+                         name=f"http-endpoint-{self.port}").start()
+        return server
 
 
 def http_endpoint_events(
@@ -469,51 +422,3 @@ def httpjson_scan(spark: SparkSession, url: str,
     rows = [(p, i, v) for i, (p, v) in enumerate(httpjson_fetch(url, **kw))]
     raw = spark.createDataFrame(rows, "page int, seq long, value string")
     return httpjson_events(raw, url, message_key)
-
-
-class HttpJsonDataSource(DataSource):
-    """``spark.readStream.format("httpjson")`` — each microbatch is
-    one interval tick of the reference's poll loop: a full pagination
-    walk appended to the buffer. Offsets are the monotone event
-    sequence; uncommitted rows are retained for replay. Options:
-    ``url`` (required) plus the ``httpjson_fetch`` kwargs JSON-encoded
-    under ``config``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "httpjson"
-
-    def schema(self) -> str:
-        return "value string, page int, recv_seq long"
-
-    def simpleStreamReader(self, schema):  # noqa: N802
-        return _HttpJsonReader(self.options)
-
-
-class _HttpJsonReader(SimpleDataSourceStreamReader):
-    def __init__(self, options):
-        self.url = options["url"]
-        self.cfg = json.loads(options.get("config", "{}"))
-        self._buf: deque[tuple[str, int, int]] = deque()
-        self._seq = 0
-
-    def initialOffset(self) -> dict:  # noqa: N802
-        return {"seq": 0}
-
-    def read(self, start: dict):
-        for page, text in httpjson_fetch(self.url, **self.cfg):
-            self._seq += 1
-            self._buf.append((text, page, self._seq))
-        s = start["seq"]
-        rows = [r for r in self._buf if r[2] > s]
-        end = rows[-1][2] if rows else s
-        return iter(rows), {"seq": end}
-
-    def readBetweenOffsets(self, start: dict, end: dict):  # noqa: N802
-        return iter(
-            [r for r in self._buf if start["seq"] < r[2] <= end["seq"]]
-        )
-
-    def commit(self, end: dict) -> None:
-        while self._buf and self._buf[0][2] <= end["seq"]:
-            self._buf.popleft()

@@ -73,7 +73,12 @@ def streaming_multiline_pattern(
     so under a one-shot ``availableNow`` trigger the final open event of
     each stream can remain in state (no later batch arrives to fire the
     timeout). Continuous triggers flush it after ``timeout_ms``; tests
-    that need the tail on availableNow send a sentinel line.
+    that need the tail on availableNow send a sentinel line. The same
+    timeout makes Spark schedule a no-data batch on every trigger, so
+    an ``availableNow`` query never terminates on its own and
+    ``processAllAvailable`` never returns: stop the query once
+    ``lastProgress`` reports a batch with ``numInputRows == 0`` (all
+    input is committed by then).
     """
     if match not in ("after", "before"):
         raise ValueError(f"match must be after|before, got {match!r}")

@@ -12,14 +12,101 @@ Provided here:
 - ``stream_parquet_dir`` — file-arrival source over an events
   directory (the "log directory being written to" analogue; new files
   = new harvester work).
+- ``BufferedStreamReader`` — the replay buffer behind every
+  listen-side Python Data Source (``udp_source``, ``unix_source``,
+  ``http_source``).
 """
 
 from __future__ import annotations
 
+import threading
+from collections import deque
+from itertools import islice
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import SimpleDataSourceStreamReader
 
 from beats_spark.datagen import event_exprs
+
+
+class BufferedStreamReader(SimpleDataSourceStreamReader):
+    """The offset/replay/commit protocol of the listen-side inputs.
+
+    Each received row waits in a driver-side buffer until Spark commits
+    an offset at or past it. A listener thread hands rows to
+    ``_push(*values)``, which appends the next monotone ``recv_seq``
+    (every listen-side schema ends in ``recv_seq long``). Offsets are
+    ``{"seq": n}``: ``read`` serves at most ``maxBatchSize`` rows past
+    ``start``, ``readBetweenOffsets`` replays any uncommitted range, and
+    ``commit`` drops the rows at or below its offset. A failed batch
+    therefore replays from the buffer (within-run effectively-once);
+    rows received while the query is down are lost, as in the
+    reference's socket inputs.
+
+    A subclass parses its options into public attributes and implements
+    ``_start()``: bind, start the listener thread(s) and return the
+    live socket or server, which the base keeps in ``_sock``. ``_start``
+    runs once, on the first ``read`` and never at construction: Spark
+    instantiates the reader for plan resolution and again for the
+    running stream, and only the running one may own the port or path.
+
+    Pickling: Spark ships the reader to executors as the replay
+    fallback. A pickled copy carries the public (option) attributes
+    only; it starts empty and unbound, and Spark only replays through
+    it, which never binds. Normal batches come from the driver's
+    prefetch cache.
+    """
+
+    def __init__(self, options) -> None:
+        self.max_batch = int(options.get("maxBatchSize", 10_000) or 10_000)
+        self._reset()
+
+    def _reset(self) -> None:
+        self._buf: deque[tuple] = deque()  # schema-ordered, recv_seq last
+        self._seq = 0
+        self._lock = threading.Lock()
+        self._sock = None
+
+    def __getstate__(self) -> dict:
+        return {k: v for k, v in self.__dict__.items() if not k.startswith("_")}
+
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state)
+        self._reset()
+
+    def _start(self):
+        raise NotImplementedError
+
+    def _ensure_bound(self) -> None:
+        if self._sock is None:
+            self._sock = self._start()
+
+    def _push(self, *values) -> None:
+        with self._lock:
+            self._seq += 1
+            self._buf.append((*values, self._seq))
+
+    def initialOffset(self) -> dict:  # noqa: N802 (API name)
+        return {"seq": 0}
+
+    def read(self, start: dict):
+        self._ensure_bound()
+        s = start["seq"]
+        with self._lock:
+            rows = list(islice((r for r in self._buf if r[-1] > s), self.max_batch))
+        return iter(rows), {"seq": rows[-1][-1] if rows else s}
+
+    def readBetweenOffsets(self, start: dict, end: dict):  # noqa: N802
+        with self._lock:
+            return iter(
+                [r for r in self._buf if start["seq"] < r[-1] <= end["seq"]]
+            )
+
+    def commit(self, end: dict) -> None:
+        with self._lock:
+            while self._buf and self._buf[0][-1] <= end["seq"]:
+                self._buf.popleft()
 
 
 def stream_events(

@@ -3,16 +3,12 @@
 Data Source — listen-side ingestion, unlike the TCP source whose
 ``readStream.format("socket")`` must connect out.
 
-Spark-first design: the Python Data Source API's
-``SimpleDataSourceStreamReader`` is the documented tool for exactly
-this shape — a low-volume, driver-prefetched, non-replayable source.
-A background thread owns the bound socket and appends datagram lines
-to a buffer; each microbatch drains the buffer and advances a
-monotone sequence offset. Rows are retained until their offset is
-COMMITTED by the streaming engine, so a failed batch replays from the
-buffer (``readBetweenOffsets``) — within-run effectively-once, which
-is STRONGER than the reference's UDP input (at-most-once, no state:
-datagrams during downtime are lost in both systems; that is UDP).
+Each datagram line (``udp_lines``) or whole datagram (``udp_packets``)
+is one row; delivery is the replay
+buffer of :class:`beats_spark.streaming.sources.BufferedStreamReader`,
+within-run effectively-once, which is STRONGER than the reference's
+UDP input (at-most-once, no state: datagrams during downtime are lost
+in both systems; that is UDP).
 
 Scale note: one listening port is one driver-side ingest point — the
 same single-process bottleneck as the reference's UDP input. This
@@ -25,11 +21,12 @@ from __future__ import annotations
 
 import socket
 import threading
-from collections import deque
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.datasource import DataSource
+
+from beats_spark.streaming.sources import BufferedStreamReader
 
 SCHEMA = "value string, sender string, recv_seq long"
 
@@ -50,83 +47,33 @@ class UdpLineDataSource(DataSource):
         return _UdpSimpleReader(self.options)
 
 
-class _UdpSimpleReader(SimpleDataSourceStreamReader):
+class _UdpSimpleReader(BufferedStreamReader):
     def __init__(self, options):
+        super().__init__(options)
         self.host = options.get("host", "127.0.0.1")
         self.port = int(options["port"])
-        self.max_batch = int(options.get("maxBatchSize", 10_000) or 10_000)
-        # rows: (value, sender, recv_seq) — SCHEMA order
-        self._buf: deque[tuple[str, str, int]] = deque()
-        self._seq = 0
-        self._lock = threading.Lock()
-        self._sock: socket.socket | None = None
 
-    def __getstate__(self) -> dict:
-        """Spark pickles the reader into the executor-side replay
-        fallback; the live socket, lock, and buffer stay on the driver
-        (the unpickled copy starts empty and never binds — normal
-        microbatches are served from Spark's driver-side prefetch
-        cache, and datagrams that fell out of every cache are gone:
-        UDP is at-most-once, same as the reference input)."""
-        return {k: v for k, v in self.__dict__.items()
-                if k not in ("_sock", "_lock", "_buf")}
+    def _start(self) -> socket.socket:
+        sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+        sock.bind((self.host, self.port))
+        threading.Thread(target=self._listen, args=(sock,), daemon=True,
+                         name=f"udp-{self.port}").start()
+        return sock
 
-    def __setstate__(self, state: dict) -> None:
-        self.__dict__.update(state)
-        self._buf = deque()
-        self._lock = threading.Lock()
-        self._sock = None
-
-    def _ensure_bound(self) -> None:
-        """Bind + start the listener on FIRST read, not construction:
-        Spark instantiates the reader once for plan/schema resolution
-        and again for the running stream — only the running one reads,
-        so only it may own the port."""
-        if self._sock is not None:
-            return
-        self._sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
-        self._sock.bind((self.host, self.port))
-        t = threading.Thread(target=self._listen, daemon=True,
-                             name=f"udp-lines-{self.port}")
-        t.start()
-
-    def _listen(self) -> None:
+    def _listen(self, sock: socket.socket) -> None:
         while True:
             try:
-                data, addr = self._sock.recvfrom(65535)
+                data, addr = sock.recvfrom(65535)
             except OSError:  # socket closed at shutdown
                 return
-            text = data.decode("utf-8", errors="replace")
-            sender = f"{addr[0]}:{addr[1]}"
-            with self._lock:
-                # one event per line, like the reference's line-framed
-                # datagram handling; empty datagrams/lines are dropped
-                for line in text.split("\n"):
-                    if line:
-                        self._seq += 1
-                        self._buf.append((line, sender, self._seq))
+            self._datagram(data, f"{addr[0]}:{addr[1]}")
 
-    def initialOffset(self) -> dict:  # noqa: N802
-        return {"seq": 0}
-
-    def read(self, start: dict):
-        self._ensure_bound()
-        s = start["seq"]
-        with self._lock:
-            rows = [r for r in self._buf if r[2] > s][: self.max_batch]
-        end = rows[-1][2] if rows else s
-        return iter(rows), {"seq": end}
-
-    def readBetweenOffsets(self, start: dict, end: dict):  # noqa: N802
-        with self._lock:
-            return iter(
-                [r for r in self._buf if start["seq"] < r[2] <= end["seq"]]
-            )
-
-    def commit(self, end: dict) -> None:
-        with self._lock:
-            while self._buf and self._buf[0][2] <= end["seq"]:
-                self._buf.popleft()
+    def _datagram(self, data: bytes, sender: str) -> None:
+        # one event per line, like the reference's line-framed
+        # datagram handling; empty datagrams/lines are dropped
+        for line in data.decode("utf-8", errors="replace").split("\n"):
+            if line:
+                self._push(line, sender)
 
 
 PACKET_SCHEMA = "packet binary, exporter string, recv_seq long"
@@ -154,18 +101,9 @@ class UdpPacketDataSource(DataSource):
 
 
 class _UdpPacketReader(_UdpSimpleReader):
-    def _listen(self) -> None:
-        while True:
-            try:
-                data, addr = self._sock.recvfrom(65535)
-            except OSError:  # socket closed at shutdown
-                return
-            if not data:
-                continue
-            exporter = f"udp://{addr[0]}:{addr[1]}"
-            with self._lock:
-                self._seq += 1
-                self._buf.append((data, exporter, self._seq))
+    def _datagram(self, data: bytes, sender: str) -> None:
+        if data:
+            self._push(data, f"udp://{sender}")
 
 
 def stream_udp_packets(

@@ -11,24 +11,26 @@ line-split); each message becomes one event carrying just the text
 default 20 MiB) truncates oversize stream messages instead of growing
 the frame buffer without bound.
 
-Delivery: same as :mod:`beats_spark.streaming.udp_source` — rows are
-retained until their monotone arrival offset is committed, so a failed
-microbatch replays (within-run effectively-once, stronger than the
-reference's fire-and-forget publish). Scale note as there: one socket
-path is one driver-side ingest point; the 100 TB path is kafka with
-relays in front.
+Delivery is the replay buffer of
+:class:`beats_spark.streaming.sources.BufferedStreamReader` (within-run
+effectively-once, stronger than the reference's fire-and-forget
+publish). Scale note as in :mod:`beats_spark.streaming.udp_source`:
+one socket path is one driver-side ingest point; the 100 TB path is
+kafka with relays in front.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import socket
 import threading
-from collections import deque
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.datasource import DataSource
+
+from beats_spark.streaming.sources import BufferedStreamReader
 
 SCHEMA = "value string, conn long, recv_seq long"
 
@@ -50,8 +52,9 @@ class UnixLineDataSource(DataSource):
         return _UnixSimpleReader(self.options)
 
 
-class _UnixSimpleReader(SimpleDataSourceStreamReader):
+class _UnixSimpleReader(BufferedStreamReader):
     def __init__(self, options):
+        super().__init__(options)
         self.path = options["path"]
         self.socket_type = options.get("socketType", "stream")
         if self.socket_type not in ("stream", "datagram"):
@@ -60,62 +63,29 @@ class _UnixSimpleReader(SimpleDataSourceStreamReader):
             )
         self.delim = options.get("lineDelimiter", "\n")
         self.max_message = int(options.get("maxMessageSize", 20 * 1024 * 1024))
-        self.max_batch = int(options.get("maxBatchSize", 10_000) or 10_000)
-        # rows: (value, conn, recv_seq) — SCHEMA order
-        self._buf: deque[tuple[str, int, int]] = deque()
-        self._seq = 0
-        self._conn_seq = 0
-        self._lock = threading.Lock()
-        self._sock: socket.socket | None = None
 
-    def __getstate__(self) -> dict:
-        # same contract as the UDP reader: the live socket stays on the
-        # driver; a pickled copy starts empty and never binds
-        return {k: v for k, v in self.__dict__.items()
-                if k not in ("_sock", "_lock", "_buf")}
-
-    def __setstate__(self, state: dict) -> None:
-        self.__dict__.update(state)
-        self._buf = deque()
-        self._lock = threading.Lock()
-        self._sock = None
-
-    def _ensure_bound(self) -> None:
-        # bind on FIRST read, not construction — Spark instantiates the
-        # reader twice (plan resolution + the running stream) and only
-        # the running one may own the socket path
-        if self._sock is not None:
-            return
+    def _start(self) -> socket.socket:
         if os.path.exists(self.path):
             os.unlink(self.path)
         kind = (socket.SOCK_STREAM if self.socket_type == "stream"
                 else socket.SOCK_DGRAM)
-        self._sock = socket.socket(socket.AF_UNIX, kind)
-        self._sock.bind(self.path)
+        sock = socket.socket(socket.AF_UNIX, kind)
+        sock.bind(self.path)
         if self.socket_type == "stream":
-            self._sock.listen(16)
+            sock.listen(16)
             target = self._accept_loop
         else:
             target = self._datagram_loop
-        threading.Thread(target=target, daemon=True,
+        threading.Thread(target=target, args=(sock,), daemon=True,
                          name=f"unix-lines-{self.path}").start()
+        return sock
 
-    def _push(self, text: str, conn: int) -> None:
-        with self._lock:
-            for line in text.split(self.delim):
-                if line:
-                    self._seq += 1
-                    self._buf.append((line, conn, self._seq))
-
-    def _accept_loop(self) -> None:
-        while True:
+    def _accept_loop(self, sock: socket.socket) -> None:
+        for cid in itertools.count(1):
             try:
-                c, _ = self._sock.accept()
+                c, _ = sock.accept()
             except OSError:  # socket closed at shutdown
                 return
-            with self._lock:
-                self._conn_seq += 1
-                cid = self._conn_seq
             threading.Thread(target=self._conn_loop, args=(c, cid),
                              daemon=True).start()
 
@@ -169,35 +139,15 @@ class _UnixSimpleReader(SimpleDataSourceStreamReader):
         if tail and not discarding:
             self._push(tail.decode("utf-8", errors="replace"), cid)
 
-    def _datagram_loop(self) -> None:
+    def _datagram_loop(self, sock: socket.socket) -> None:
         while True:
             try:
-                data = self._sock.recv(65535)
+                data = sock.recv(65535)
             except OSError:
                 return
-            self._push(data.decode("utf-8", errors="replace"), 0)
-
-    def initialOffset(self) -> dict:  # noqa: N802
-        return {"seq": 0}
-
-    def read(self, start: dict):
-        self._ensure_bound()
-        s = start["seq"]
-        with self._lock:
-            rows = [r for r in self._buf if r[2] > s][: self.max_batch]
-        end = rows[-1][2] if rows else s
-        return iter(rows), {"seq": end}
-
-    def readBetweenOffsets(self, start: dict, end: dict):  # noqa: N802
-        with self._lock:
-            return iter(
-                [r for r in self._buf if start["seq"] < r[2] <= end["seq"]]
-            )
-
-    def commit(self, end: dict) -> None:
-        with self._lock:
-            while self._buf and self._buf[0][2] <= end["seq"]:
-                self._buf.popleft()
+            for line in data.decode("utf-8", errors="replace").split(self.delim):
+                if line:
+                    self._push(line, 0)
 
 
 def unix_events(raw: DataFrame, path: str, message_key: str = "message") -> DataFrame:

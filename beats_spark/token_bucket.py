@@ -158,6 +158,13 @@ def streaming_token_bucket(
     ``gc_timeout_ms`` to keep buckets longer (only affects memory, not
     results). ProcessingTimeTimeout carries the same wall-clock caveat
     as the reference's GC clock.
+
+    Caveat: that timeout makes Spark schedule a no-data batch on every
+    trigger, so an ``availableNow`` query never terminates on its own
+    and ``processAllAvailable`` never returns. Stop the query once
+    ``lastProgress`` reports a batch with ``numInputRows == 0``: every
+    allowed row is committed by then (the timeout only drops full
+    buckets, it emits nothing).
     """
     n, period = parse_limit(limit)
     rate_per_us = n / (period * 1e6)

@@ -128,19 +128,15 @@ def main() -> None:
             print(f"skipped {row.name}: {why}", file=sys.stderr)
             continue
         reps = []
-        # min-of-reps: the host stalls runs at random. Sub-second
-        # queries drift 1.3-1.8x on host windows alone, so they get
-        # min-of-5; anything slower amortizes the stall and min-of-2
-        # suffices (r3 verdict ask #6).
-        for i in range(5):
+        # min-of-5 for every query: the host stalls runs at random, and
+        # a min-of-2 read such stalls as 5-8x regressions
+        for _ in range(5):
             # build INSIDE the timer: eager operators (the connected-
             # components loop, the auto-gate count) do real work at
             # plan-build time and must be charged
             t0 = time.time()
             materialize(row.build(spark, sf_dir))
             reps.append(time.time() - t0)
-            if i >= 1 and min(reps) >= 1.0:
-                break
         times[row.name] = round(min(reps), 3)
         query_reps[row.name] = len(reps)
 

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import contextlib
 import logging
+import time
 
 import pytest
 
@@ -21,6 +22,27 @@ def rows(df, *cols):
         (tuple(r) for r in sel.collect()),
         key=lambda t: tuple((v is None, str(v)) for v in t),
     )
+
+
+def drain(q, timeout: float = 120.0) -> None:
+    """Stop streaming query ``q`` once it has run a batch with no new
+    input: every earlier batch, all the input there was, is committed.
+
+    For queries whose ``ProcessingTimeTimeout`` state keeps scheduling
+    no-data batches: those never terminate under ``availableNow`` and
+    never go idle, so neither ``awaitTermination`` nor
+    ``processAllAvailable`` returns before its timeout."""
+    deadline = time.monotonic() + timeout
+    try:
+        while q.isActive and time.monotonic() < deadline:
+            p = q.lastProgress
+            if p is not None and p["numInputRows"] == 0:
+                return
+            time.sleep(0.2)
+        assert q.exception() is None
+        raise AssertionError(f"no idle batch within {timeout} s")
+    finally:
+        q.stop()
 
 
 @pytest.fixture(scope="session")

@@ -170,7 +170,7 @@ def test_v9_streaming_template_state_across_batches(spark, tmp_path):
          .format("parquet").option("path", str(out_dir))
          .option("checkpointLocation", str(cp))
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = spark.read.parquet(str(out_dir))
     assert sorted(r.first_uptime for r in got.collect()) == list(range(10))
 

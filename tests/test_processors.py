@@ -529,6 +529,21 @@ def test_syslog_rfc3164_full_line(spark):
     assert r["syslog_message"] == "totally not syslog"
 
 
+def test_syslog_message_trims_one_line_terminator(spark):
+    """One trailing "\\n" or "\\r\\n" is the line terminator, not message
+    text; a bare "\\r" and inner newlines stay in the message."""
+    from beats_spark.processors.syslog import syslog_rfc3164
+
+    cases = [("", "hi"), ("\n", "hi"), ("\r\n", "hi"), ("\r", "hi\r"),
+             ("\nnext\r\n", "hi\nnext")]
+    df = spark.createDataFrame(
+        [(i, "<13>Oct  7 10:09:00 web1 app[7]: hi" + tail)
+         for i, (tail, _) in enumerate(cases)], "i int, message string")
+    out = syslog_rfc3164(df).orderBy("i").collect()
+    assert all(r["hostname"] == "web1" and r["process_pid"] == 7 for r in out)
+    assert [r["syslog_message"] for r in out] == [want for _, want in cases]
+
+
 def test_syslog_priority_over_191_is_unparseable(spark):
     """The reference's parser validates priority <= 191; <999> is not a
     syslog line — raw message kept, all syslog fields null."""

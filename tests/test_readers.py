@@ -111,7 +111,26 @@ def test_cri_reader_parses_once_and_reads_garbage_as_nulls(spark, stream):
     assert plan.count(_CRI_RE) == 1
     got = [(r.stream, r.message, r.ts is None) for r in out.orderBy("offset").collect()]
     assert got == [("stdout", "ok", False)] + (
-        [(None, "", True)] if stream == "all" else [])
+        [(None, None, True)] if stream == "all" else [])
+
+
+@pytest.mark.parametrize("cri", [False, True])
+def test_partial_join_keeps_empty_payload_and_nulls_garbage(spark, cri):
+    """After the partial-line join, an unparsable line is a null
+    message while a legitimately empty payload still reads ''."""
+    if cri:
+        good = ["2026-01-01T00:00:00.000Z stdout F ",
+                "2026-01-01T00:00:01.000Z stdout F x"]
+    else:
+        good = [json.dumps({"log": "\n", "stream": "stdout",
+                            "time": "2026-01-01T00:00:00Z"}),
+                json.dumps({"log": "x\n", "stream": "stdout",
+                            "time": "2026-01-01T00:00:01Z"})]
+    lines = [("c1", 0, good[0]), ("c1", 10, good[1]), ("c1", 20, "garbage{")]
+    df = spark.createDataFrame(lines, "source string, offset long, message string")
+    out = docker_json_reader(df, cri=cri)
+    assert [(r.offset, r.message) for r in out.orderBy("offset").collect()] == \
+        [(0, ""), (10, "x"), (20, None)]
 
 
 def test_read_stdin_frames_lines(spark):

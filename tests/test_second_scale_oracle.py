@@ -83,7 +83,7 @@ def test_netflow_v9_streaming_second_scale(spark, tmp_path):
          .format("parquet").option("path", str(out_dir))
          .option("checkpointLocation", str(cp))
          .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
     got = spark.read.parquet(str(out_dir))
     want = parse_netflow_v9(pkts)
     cols = sorted(set(got.columns) & set(want.columns))

@@ -87,7 +87,7 @@ def test_session_agg_streaming_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     want = set(rows(
         session_agg(ev.withColumn("ts", F.col("ts").cast("timestamp")),

@@ -20,7 +20,7 @@ from beats_spark.multiline import multiline_pattern
 from beats_spark.processors.enrich import LookupJoin
 from beats_spark.streaming import StreamingLogPipeline, streaming_multiline_pattern
 from beats_spark.streaming.sources import stream_parquet_dir
-from tests.conftest import rows
+from tests.conftest import drain, rows
 
 N = 2000
 
@@ -67,7 +67,7 @@ def test_stream_fanout_matches_batch(spark, pipe, tmp_path):
         counts_dir=str(tmp_path / "counts"),
     )
     q = s.start(stream_parquet_dir(spark, src))
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     got = _read_sinks(spark, str(tmp_path / "sinks"))
     want = pipe.routed(spark.read.parquet(src))
@@ -97,10 +97,10 @@ def test_stream_restart_no_dup_no_loss(spark, pipe, tmp_path):
     s = StreamingLogPipeline(pipe, sinks, cp)
 
     _write_events(spark, src, N)
-    s.start(stream_parquet_dir(spark, src)).awaitTermination(120)
+    assert s.start(stream_parquet_dir(spark, src)).awaitTermination(120)
 
     _write_events(spark, src, N, start=N)
-    s.start(stream_parquet_dir(spark, src)).awaitTermination(120)
+    assert s.start(stream_parquet_dir(spark, src)).awaitTermination(120)
 
     got = _read_sinks(spark, sinks)
     assert got.count() == got.select("doc_id").distinct().count()
@@ -142,7 +142,7 @@ def test_streaming_multiline_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    drain(q)  # the state timeout keeps the availableNow run alive
 
     got = spark.read.parquet(out_dir)
     want = multiline_pattern(lines, pattern=r"^\s+at ", match="after")
@@ -201,7 +201,7 @@ def test_streaming_multiline_before_spans_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    drain(q)  # the state timeout keeps the availableNow run alive
 
     got = spark.read.parquet(out_dir)
     want = multiline_pattern(
@@ -231,7 +231,7 @@ def test_stream_window_counts(spark, pipe, tmp_path):
         window="10 minutes",
         watermark="10 minutes",
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     got = spark.read.parquet(agg_dir)
     assert got.count() > 0
@@ -269,7 +269,7 @@ def test_dedup_stream_drops_replays(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     got = spark.read.parquet(out_dir)
     assert got.count() == 200
@@ -699,7 +699,7 @@ def test_corpus_quality_filters_streaming_parity(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     got = sorted(
         (r["doc_id"], r["passes_quality"])
@@ -748,7 +748,7 @@ def test_corpus_ops_on_stream_match_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     cols = ("doc_id", "text", "email_redactions", "ipv4_redactions",
             "n_words", "passes_quality")
@@ -780,7 +780,7 @@ def test_fim_on_stream_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     cols = ("doc_id", "tokens", "n_tok", "fim_applied")
     got = sorted(rows(spark.read.parquet(out_dir), *cols))
@@ -809,7 +809,7 @@ def test_span_corrupt_on_stream_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     cols = ("doc_id", "inputs", "targets", "n_spans", "corrupted")
     got = sorted(rows(spark.read.parquet(out_dir), *cols))
@@ -849,7 +849,7 @@ def test_stream_dedup_exact_across_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     got = spark.read.parquet(out_dir)
     assert got.count() == 3
@@ -891,7 +891,7 @@ def test_stream_dedup_within_watermark_bounds_state(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     got = spark.read.parquet(out_dir)
     assert got.count() == 2
@@ -911,14 +911,14 @@ def test_streaming_snapshot_sink_atomic_batches_no_dup(spark, pipe, tmp_path):
     s = StreamingLogPipeline(pipe, sink_dir="", checkpoint_dir=cp)
 
     _write_events(spark, src, N)
-    s.start_snapshot(stream_parquet_dir(spark, src), t).awaitTermination(120)
+    assert s.start_snapshot(stream_parquet_dir(spark, src), t).awaitTermination(120)
     first_rows = t.read(spark).count()
     snaps_after_first = t.snapshots()
     assert first_rows > 0 and len(snaps_after_first) >= 1
 
     # restart: new data arrives; the old batches must not re-commit
     _write_events(spark, src, N, start=N)
-    s.start_snapshot(stream_parquet_dir(spark, src), t).awaitTermination(120)
+    assert s.start_snapshot(stream_parquet_dir(spark, src), t).awaitTermination(120)
 
     got = t.read(spark)
     want = pipe.routed(spark.read.parquet(src))
@@ -961,7 +961,7 @@ def test_streaming_ingest_cross_batch_neardup_suppression(spark, tmp_path):
         "doc_id long, text string",
     )
     b1.coalesce(1).write.mode("append").parquet(src)
-    ing.start(stream()).awaitTermination(120)
+    assert ing.start(stream()).awaitTermination(120)
     got1 = {r["doc_id"] for r in corpus.read(spark).collect()}
     assert got1 == {0, 1}
 
@@ -972,7 +972,7 @@ def test_streaming_ingest_cross_batch_neardup_suppression(spark, tmp_path):
         "doc_id long, text string",
     )
     b2.coalesce(1).write.mode("append").parquet(src)
-    ing.start(stream()).awaitTermination(120)
+    assert ing.start(stream()).awaitTermination(120)
     got2 = {r["doc_id"] for r in corpus.read(spark).collect()}
     assert got2 == {0, 1, 12}, got2
 
@@ -984,5 +984,5 @@ def test_streaming_ingest_cross_batch_neardup_suppression(spark, tmp_path):
 
     # restart with no new data: no new batch, nothing re-commits
     snaps = corpus.snapshots()
-    ing.start(stream()).awaitTermination(120)
+    assert ing.start(stream()).awaitTermination(120)
     assert corpus.snapshots() == snaps

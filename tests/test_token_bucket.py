@@ -20,7 +20,7 @@ from beats_spark.token_bucket import (
     token_bucket,
 )
 
-from tests.conftest import rows
+from tests.conftest import drain, rows
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -123,7 +123,7 @@ def test_streaming_matches_batch_across_microbatches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    drain(q)  # the state timeout keeps the availableNow run alive
 
     want = rows(token_bucket(ev, "10/m", ["key"]), "key", "offset")
     got = rows(spark.read.parquet(out), "key", "offset")
