@@ -26,9 +26,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 DEFAULT_MAX_LINES = 500
 
@@ -51,20 +54,17 @@ def multiline_pattern(
     Output: partition cols + ``offset`` (first line's order value),
     ``message`` (joined), ``n_lines`` (pre-cap line count).
 
-    ``merge`` picks the second phase (the window phase is shared).
-    BOTH are single-shuffle plans — the window's hash partitioning on
-    the stream key satisfies the compound-key aggregate's clustered
-    distribution, so no second exchange exists (verified in the
-    physical plan; bench.py ``multiline_scale`` measures both):
+    ``merge`` picks the second phase; the window phase is shared, and
+    so is its one exchange (its hash partitioning on the stream key
+    satisfies the compound-key aggregate):
 
     - ``"agg"`` (default): groupBy(stream, group) + ordered
-      ``collect_list`` — ObjectHashAggregate in place, pure JVM, the
-      faster mode in-sandbox (no Arrow round-trip).
-    - ``"stream"``: one ``mapInPandas`` forward pass over the window's
-      (stream, order)-sorted output, carrying the open group across
-      Arrow batches. Same rows; trades the JVM object agg for an
-      Arrow pass — an alternative when collect_list's per-group struct
-      arrays pressure executor memory on pathological group sizes.
+      ``collect_list`` — ObjectHashAggregate in place, pure JVM.
+    - ``"stream"``: an Arrow forward pass (``mapInArrow``) over the
+      window's (stream, order)-sorted output — ``forward_merge`` per
+      Arrow batch, carrying the open event across batches. Same rows.
+      Both take 1.0 s on 400k lines at ``local[4]`` (bench.py
+      ``multiline_scale``, min of 5).
     """
     if match not in ("after", "before"):
         raise ValueError(f"match must be after|before, got {match!r}")
@@ -118,6 +118,63 @@ def multiline_count(
     )
 
 
+def _key_breaks(rows: pa.RecordBatch, cols: Sequence[str]) -> np.ndarray:
+    """True where a row's ``cols`` differ from the row before; null
+    equals null, as in a Spark group key."""
+    starts = np.zeros(rows.num_rows, dtype=bool)
+    for c in cols:
+        cur, prev = rows.column(c).slice(1), rows.column(c).slice(0, rows.num_rows - 1)
+        ne = pc.or_(pc.fill_null(pc.not_equal(cur, prev), False),
+                    pc.not_equal(cur.is_null(), prev.is_null()))
+        starts[1:] |= ne.to_numpy(zero_copy_only=False)
+    return starts
+
+
+def with_carry(carry: pa.RecordBatch | None, rows: pa.RecordBatch) -> pa.RecordBatch:
+    """``rows`` behind the open event that ``forward_merge`` carried."""
+    if carry is None:
+        return rows
+    cols = [pa.concat_arrays([a, b]) for a, b in zip(carry.columns, rows.columns)]
+    return pa.RecordBatch.from_arrays(cols, schema=rows.schema)
+
+
+def forward_merge(
+    rows: pa.RecordBatch, starts: np.ndarray, extra: int, line_col: str,
+    max_lines: int, separator: str, final: bool = False,
+) -> tuple[pa.RecordBatch, pa.RecordBatch | None, int]:
+    """The multiline forward pass over ordered ``rows``: an event starts
+    at row 0 and at each row where ``starts`` is true; row 0's event
+    also has ``extra`` earlier lines that an earlier call dropped.
+
+    Returns ``(closed, carry, carry_extra)``. ``closed`` holds each
+    closed event's first row, with ``line_col`` replaced by the join of
+    its non-null lines of rank below ``max_lines`` (``concat_ws(slice)``
+    as in ``merge="agg"``) and ``n_lines`` (all its lines) appended. The
+    last event stays open unless ``final``: the carry is its first
+    ``max_lines`` rows (at least one), the rest only a count, so an
+    event spanning many calls costs O(max_lines) per call."""
+    n = rows.num_rows
+    starts[0] = True
+    first = np.flatnonzero(starts)
+    lens = np.diff(first, append=n)
+    n_lines = lens.astype(np.int64)
+    n_lines[0] += extra
+    line = rows.column(line_col)
+    keep = (np.arange(n) - np.repeat(first, lens) < max_lines) & ~np.asarray(
+        line.is_null(), dtype=bool)
+    offsets = np.concatenate(([0], np.cumsum(keep)))[np.append(first, n)]
+    lists = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), line.filter(pa.array(keep)))
+    done = len(first) if final else len(first) - 1
+    closed = rows.take(first[:done]).set_column(
+        rows.schema.get_field_index(line_col), line_col,
+        pc.binary_join(lists.slice(0, done), separator),
+    ).append_column("n_lines", pa.array(n_lines[:done]))
+    if final:
+        return closed, None, 0
+    carry = rows.slice(first[-1], max(max_lines, 1))
+    return closed, carry, int(n_lines[-1]) - carry.num_rows
+
+
 def _merge_groups_stream(
     df: DataFrame,
     partition_cols: Sequence[str],
@@ -128,64 +185,29 @@ def _merge_groups_stream(
     group_col: str,
 ) -> DataFrame:
     """Shuffle-free merge: the window already leaves each physical
-    partition holding whole streams, sorted by (stream, order) — so a
-    group's lines are contiguous and one forward pass merges them.
-    ``sortWithinPartitions`` re-states the ordering contract; the
-    planner elides the sort because the window's output ordering
-    already satisfies it. The open group carries across Arrow batches
-    (a group can span any number of batches) and flushes at
-    end-of-partition."""
-    pcols = list(partition_cols)
-    df = df.sortWithinPartitions(*pcols, order_col)
-    fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_schema = ", ".join(
-        [f"{c} {fields[c]}" for c in pcols]
-        + [f"{order_col} {fields[order_col]}", f"{line_col} string", "n_lines bigint"]
-    )
-    gcols = pcols + [group_col]
+    partition holding whole streams, sorted by (stream, order), so an
+    event's lines are contiguous. ``sortWithinPartitions`` re-states
+    that contract; the planner elides it. The open event carries across
+    Arrow batches and flushes at end-of-partition."""
+    gcols = [*partition_cols, group_col]
+    out_cols = [*partition_cols, order_col, line_col, "n_lines"]
+    df = df.sortWithinPartitions(*partition_cols, order_col).select(*gcols, order_col, line_col)
+    out_schema = T.StructType([df.schema[c] for c in out_cols[:-2]] + [
+        T.StructField(line_col, T.StringType()), T.StructField("n_lines", T.LongType())])
 
     def runner(batches):
-        carry: tuple | None = None  # (key, order, lines, n)
-
-        def finish(c):
-            key, order, lines, n = c
-            return (*key[:-1], order, separator.join(lines[:max_lines]), n)
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = []
-            agg = (
-                # dropna=False: null partition keys must form a group,
-                # matching merge='agg' (Spark groupBy keeps null keys)
-                pdf.groupby(gcols, sort=False, dropna=False)
-                .agg(
-                    o=(order_col, "min"),
-                    n=(order_col, "size"),
-                    m=(line_col, list),
-                )
-                .reset_index()
-            )[[*gcols, "o", "n", "m"]]
-            nk = len(gcols)
-            for tup in agg.itertuples(index=False, name=None):
-                key, (o, n, m) = tup[:nk], tup[nk:]
-                if carry is not None and carry[0] == key:
-                    carry = (key, carry[1], carry[2] + m, carry[3] + n)
-                else:
-                    if carry is not None:
-                        out.append(finish(carry))
-                    carry = (key, o, list(m), int(n))
-            # hold back the open tail group; emit the closed ones
-            if out:
-                yield pd.DataFrame(
-                    out, columns=[*pcols, order_col, line_col, "n_lines"]
-                )
+        carry, extra = None, 0
+        for batch in batches:
+            rows = with_carry(carry, batch)
+            if rows.num_rows:
+                closed, carry, extra = forward_merge(
+                    rows, _key_breaks(rows, gcols), extra, line_col, max_lines, separator)
+                yield closed.select(out_cols)
         if carry is not None:
-            yield pd.DataFrame(
-                [finish(carry)], columns=[*pcols, order_col, line_col, "n_lines"]
-            )
+            yield forward_merge(carry, np.zeros(len(carry), bool), extra, line_col,
+                                max_lines, separator, final=True)[0].select(out_cols)
 
-    return df.mapInPandas(runner, schema=out_schema)
+    return df.mapInArrow(runner, schema=out_schema)
 
 
 def _merge_groups(

@@ -10,21 +10,27 @@ timeout, exactly the reference reader's 5 s timeout flush
 we buffer the open event across batches and flush on start-of-next,
 end-of-stream timeout, or ``max_lines``.
 
-Arrow-batched per group — no per-row Python UDF. State is one open
-event: (buffered lines, first offset, line count).
+Each key's rows go through the batch operator's Arrow forward pass
+(``multiline.forward_merge``) with the state as its carry; no per-row
+Python loop. State is one open event: (its first ``max_lines`` lines,
+first offset, line count, last line's match flag).
 """
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from beats_spark.multiline import DEFAULT_MAX_LINES
+from beats_spark.multiline import DEFAULT_MAX_LINES, forward_merge, with_carry
+
+ROWS = pa.schema([("offset", pa.int64()), ("message", pa.string())])
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -41,11 +47,8 @@ STATE_SCHEMA = T.StructType(
         T.StructField("buf", T.ArrayType(T.StringType())),
         T.StructField("first_offset", T.LongType()),
         T.StructField("n_lines", T.IntegerType()),
-        # whether the LAST line seen matched the pattern — needed so
-        # match="before" survives micro-batch boundaries (the first line
-        # of the next batch continues the open event iff the previous
-        # batch's final line matched, exactly like the batch operator's
-        # lag()).
+        # whether the batch's last line matched: under match="before"
+        # the next batch's first line continues the event iff it did
         T.StructField("last_matched", T.BooleanType()),
     ]
 )
@@ -82,82 +85,59 @@ def streaming_multiline_pattern(
     """
     if match not in ("after", "before"):
         raise ValueError(f"match must be after|before, got {match!r}")
-    rx = re.compile(pattern)
+    # Java rlike, as in the batch operator; a null line never starts an
+    # event there (the null start flag drops out of its running sum)
+    m = F.col("message").rlike(pattern)
+    m = F.coalesce(~m if negate else m, F.lit(True))
+
+    def merge(key, rows, starts, extra, final=False):
+        closed, carry, extra = forward_merge(
+            rows, starts, extra, "message", max_lines, separator, final)
+        return closed.to_pandas().assign(source=key[0], part_id=key[1]), carry, extra
 
     def proc(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: Any
     ) -> Iterator[pd.DataFrame]:
-        source, part_id = key
+        carry, extra, last_matched = None, 0, False
+        if state.exists:
+            buf, first_offset, n, last_matched = state.get
+            carry = pa.RecordBatch.from_pydict(
+                {"offset": [first_offset] * len(buf), "message": list(buf)}, schema=ROWS
+            )
+            extra = n - len(buf)
         if state.hasTimedOut:
             # idle flush (reader timeout): emit the open event.
-            buf, first_offset, n, _last = state.get
             state.remove()
-            yield pd.DataFrame(
-                {
-                    "source": [source],
-                    "part_id": [part_id],
-                    "offset": [first_offset],
-                    "message": [separator.join(buf)],
-                    "n_lines": [n],
-                }
-            )
+            yield merge(key, carry, np.zeros(len(carry), bool), extra, True)[0]
             return
 
         rows = pd.concat(list(pdfs), ignore_index=True)
         if rows.empty:
             return
         rows = rows.sort_values("offset")
-
-        buf: list[str] = []
-        first_offset = 0
-        n = 0
-        last_matched = False
-        if state.exists:
-            buf, first_offset, n, last_matched = state.get
-            buf = list(buf)
-
-        out: dict[str, list] = {
-            "source": [], "part_id": [], "offset": [], "message": [], "n_lines": []
-        }
-
-        def emit() -> None:
-            out["source"].append(source)
-            out["part_id"].append(part_id)
-            out["offset"].append(first_offset)
-            out["message"].append(separator.join(buf))
-            out["n_lines"].append(n)
-
-        matched = rows["message"].map(lambda s: bool(rx.search(s)) != negate)
-        prev_m = None
-        if match == "before":
-            # the fill value for the first row is the stored match flag of
-            # the previous batch's final line — an event spanning the
-            # micro-batch boundary keeps accumulating instead of splitting.
-            prev_m = matched.shift(1, fill_value=bool(last_matched))
-        for i, (off, line) in enumerate(zip(rows["offset"], rows["message"])):
-            # after: matching lines continue the open event; before: a line
-            # continues the event the PREVIOUS matching line opened.
-            cont = bool(matched.iloc[i]) if match == "after" else bool(prev_m.iloc[i])
-            if n and not cont:
-                emit()
-                buf, n = [], 0
-            if n == 0:
-                first_offset = int(off)
-            # past max_lines the event stays open but extra lines are
-            # discarded from the content (reference messageBuffer.addLine,
-            # multiline/message_buffer.go:72-110) — state stays bounded;
-            # n_lines keeps the pre-cap count like the batch operator.
-            if len(buf) < max_lines:
-                buf.append(line)
-            n += 1
-
-        state.update((buf, first_offset, n, bool(matched.iloc[-1])))
+        matched = rows["_m"].to_numpy(bool)
+        # after: a matching line continues the open event; before: a line
+        # continues the event iff the PREVIOUS line matched — for the first
+        # row, the stored flag of the previous batch's final line
+        starts = ~(matched if match == "after" else np.append(last_matched, matched[:-1]))
+        if carry is not None:
+            starts = np.concatenate((np.zeros(len(carry), bool), starts))
+        batch = pa.RecordBatch.from_pandas(rows[["offset", "message"]], ROWS, preserve_index=False)
+        # past max_lines the event stays open but extra lines are
+        # discarded from the content (reference messageBuffer.addLine,
+        # multiline/message_buffer.go:72-110) — state stays bounded;
+        # n_lines keeps the pre-cap count like the batch operator.
+        closed, carry, extra = merge(key, with_carry(carry, batch), starts, extra)
+        state.update((
+            carry.column("message").to_pylist(), carry.column("offset")[0].as_py(),
+            len(carry) + extra, bool(matched[-1]),
+        ))
         state.setTimeoutDuration(timeout_ms)
-        if out["source"]:
-            yield pd.DataFrame(out)
+        if len(closed):
+            yield closed
 
     return (
-        df.groupBy("source", "part_id")
+        df.withColumn("_m", m).groupBy("source", "part_id")
         .applyInPandasWithState(
             proc,
             outputStructType=OUTPUT_SCHEMA,

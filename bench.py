@@ -80,9 +80,10 @@ def run_pipeline_throughput(spark) -> tuple[float, int, list[float]]:
 
 def run_multiline_scale(spark, n_rows: int) -> dict:
     """Multiline merge at scale, both second-phase strategies (the
-    window phase is shared): 'agg' re-shuffles on the compound group
-    key, 'stream' merges in-partition with no second shuffle. Min-of-2
-    after an untimed warm-up, per the stall-resistant protocol."""
+    window phase is shared, and both plans have its one exchange):
+    'agg' is the JVM collect_list aggregate, 'stream' the Arrow forward
+    pass. Min-of-5 after an untimed warm-up, as for the headline
+    queries."""
     from pyspark.sql import functions as F
 
     from beats_spark.datagen import generate_events
@@ -99,7 +100,7 @@ def run_multiline_scale(spark, n_rows: int) -> dict:
         df = multiline_pattern(ev, pattern=r"^\s+at ", match="after", merge=mode)
         materialize(df)
         reps = []
-        for _ in range(2):
+        for _ in range(5):
             t0 = time.time()
             materialize(df)
             reps.append(round(time.time() - t0, 3))

@@ -3,10 +3,13 @@ libbeat/reader/multiline/pattern.go + multiline_test.go model)."""
 
 from __future__ import annotations
 
+import random
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.multiline import multiline_count, multiline_pattern
+from beats_spark.multiline import DEFAULT_MAX_LINES, multiline_count, multiline_pattern
 from tests.conftest import rows
 
 STACK = [
@@ -151,3 +154,74 @@ def test_stream_merge_max_lines_cap(spark):
         "offset", "message", "n_lines",
     )
     assert got == [(0, "start\n  cont\n  cont", 6)]
+
+
+ML_COLS = ("source", "part_id", "offset", "message", "n_lines")
+
+
+def _both_modes(df, **kw):
+    return [rows(multiline_pattern(df, merge=m, **kw), *ML_COLS) for m in ("agg", "stream")]
+
+
+def test_stream_merge_skips_null_lines(spark):
+    """A null line inside an event is skipped in the join but counted in
+    n_lines, as concat_ws does in merge='agg'; an event whose lines are
+    all null merges to ''."""
+    lines = spark.createDataFrame(
+        [("s", 0, 0, "start"), ("s", 0, 1, None), ("s", 0, 2, "  cont"),
+         ("t", 0, 0, None), ("t", 0, 1, None)],
+        "source string, part_id int, offset long, message string",
+    )
+    agg, stream = _both_modes(lines, pattern=r"^\s+cont", match="after")
+    assert stream == agg == [("s", 0, 0, "start\n  cont", 3), ("t", 0, 0, "", 2)]
+
+
+def _random_streams(seed: int) -> list[tuple]:
+    """Streams with null keys, null lines and unique offsets per stream,
+    plus one 250-line event; row order is shuffled so the window sorts."""
+    rnd = random.Random(seed)
+    kinds = ["START a", "START b \\", "  cont", "  cont \\", "END", None]
+    out = [("long", 0, i, "START \\" if i == 0 else "  cont \\") for i in range(250)]
+    for key in [("a", 0), ("a", 1), ("b", 0), (None, None), (None, 0), ("c", None)]:
+        offsets = rnd.sample(range(1000), rnd.randint(1, 60))
+        out += [(*key, o, rnd.choice(kinds)) for o in offsets]
+    rnd.shuffle(out)
+    return out
+
+
+@pytest.mark.parametrize("batch_rows,seed", [(1, 71), (3, 72), (37, 73)])
+def test_stream_merge_equals_agg_merge_on_random_streams(spark, batch_rows, seed):
+    """merge='stream' equals merge='agg' for every pattern mode, with
+    Arrow batches so small that events span batches (the 250-line event
+    spans more than 5 even at 37 rows), which exercises the trimmed carry."""
+    lines = spark.createDataFrame(
+        _random_streams(seed), "source string, part_id int, offset long, message string"
+    )
+    configs = [
+        dict(pattern=r"^\s", match="after"),
+        dict(pattern=r"^START", negate=True, match="after"),
+        dict(pattern=r"\\$", match="before"),
+        dict(pattern=r"^START", negate=True, match="after", flush_pattern=r"^END"),
+        dict(pattern=r"\\$", match="before", flush_pattern=r"^END"),
+    ]
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
+    try:
+        for kw in configs:
+            for cap in (DEFAULT_MAX_LINES, 2):
+                agg, stream = _both_modes(lines, max_lines=cap, **kw)
+                assert stream == agg, (kw, cap)
+                assert ("long", 0, 250) in [(r[0], r[2], r[4]) for r in agg]
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def test_stream_merge_plan_is_one_arrow_pass(lines):
+    """The stream merge is one MapInArrow over the window's output: no
+    pandas pass, the window's one Exchange and its one Sort."""
+    out = multiline_pattern(lines, pattern=r"^\[", negate=True, merge="stream")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    nodes = re.findall(r"^[\s:+\-|]*(?:\*\(\d+\)\s*)?(\w+)", plan, re.M)
+    assert "MapInArrow" in nodes and "MapInPandas" not in nodes
+    assert nodes.count("Exchange") == 1
+    assert nodes.count("Sort") == 1

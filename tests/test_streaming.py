@@ -216,6 +216,63 @@ def test_streaming_multiline_before_spans_batches(spark, tmp_path):
     assert got_rows >= set(rows(want_closed, *cols))
 
 
+def _stream_and_batch_merges(spark, tmp_path, data, **kw):
+    """Every stream's events from the streaming operator (two files, so
+    two micro-batches) and from both batch merge modes. A final 'START'
+    line per stream closes its last real event, so the comparison leaves
+    out only that sentinel event, which streaming holds for its timeout."""
+    src = str(tmp_path / "lines")
+    schema = "source string, part_id int, offset long, message string"
+    ends = {}
+    for s, p, o, _ in data:
+        ends[(s, p)] = max(ends.get((s, p), -1), o)
+    data = data + [(s, p, o + 1, "START") for (s, p), o in ends.items()]
+    lines = spark.createDataFrame(data, schema)
+    half = max(o for *_, o, _ in data) // 2
+    lines.filter(F.col("offset") <= half).coalesce(1).write.parquet(src)
+    lines.filter(F.col("offset") > half).coalesce(1).write.mode("append").parquet(src)
+    q = (
+        streaming_multiline_pattern(stream_parquet_dir(spark, src, max_files_per_trigger=1), **kw)
+        .writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    drain(q)
+    cols = ("source", "part_id", "offset", "message", "n_lines")
+    sentinel = F.col("message") != "START"
+    got = rows(spark.read.parquet(str(tmp_path / "out")), *cols)
+    return got, [rows(multiline_pattern(lines, merge=m, **kw).filter(sentinel), *cols)
+                 for m in ("agg", "stream")]
+
+
+def test_streaming_multiline_skips_null_lines(spark, tmp_path):
+    """A null line inside an event is skipped in the join and counted in
+    n_lines by the streaming operator and both batch modes alike."""
+    data = [("s", 0, 0, "start"), ("s", 0, 1, None), ("s", 0, 2, "  cont"),
+            ("s", 0, 3, "next"), ("s", 0, 4, None), ("t", 0, 0, None), ("t", 0, 1, None)]
+    got, (agg, stream) = _stream_and_batch_merges(
+        spark, tmp_path, data, pattern=r"^\s+cont", match="after")
+    assert got == agg == stream == [
+        ("s", 0, 0, "start\n  cont", 3), ("s", 0, 3, "next", 2), ("t", 0, 0, "", 2),
+    ]
+
+
+def test_streaming_multiline_uses_java_regex(spark, tmp_path):
+    """Streaming matches with Java rlike, as batch does: Java's \\s is
+    ASCII whitespace, so NBSP- and em-space-indented lines start events
+    in both (Python's re would continue them)."""
+    data = [("s", 0, 0, "ERR a"), ("s", 0, 1, "  at ascii"), ("s", 0, 2, "\xa0at nbsp"),
+            ("s", 0, 3, "\u2003at em"), ("s", 0, 4, " at space")]
+    got, (agg, stream) = _stream_and_batch_merges(
+        spark, tmp_path, data, pattern=r"^\s+at ", match="after")
+    assert got == agg == stream == [
+        ("s", 0, 0, "ERR a\n  at ascii", 2), ("s", 0, 2, "\xa0at nbsp", 1),
+        ("s", 0, 3, "\u2003at em\n at space", 2),
+    ]
+
+
 def test_stream_window_counts(spark, pipe, tmp_path):
     src = str(tmp_path / "in")
     # two files → two batches, so the watermark advances and closes windows
