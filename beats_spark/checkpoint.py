@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from beats_spark.session import local_frame
+
 STATE_KEY = ("source", "part_id")
 
 CHECKPOINT_SCHEMA = T.StructType(
@@ -56,13 +58,19 @@ def load_state(spark: SparkSession, path: str) -> DataFrame:
     and re-publishing the whole file once per run, forever. Ties on
     ``updated_at`` (same-instant commits) break toward the larger
     offset, which is the no-truncation fast path.
+
+    A missing checkpoint is tested for through the Hadoop
+    ``FileSystem``, so a first run never asks ``spark.read`` for a path
+    that is not there (Spark logs that failure as an ERROR even when
+    it is caught). The read takes ``CHECKPOINT_SCHEMA`` as given: a
+    directory that holds no commit yet reads as empty.
     """
-    try:
-        cp = spark.read.parquet(path)
-    except Exception:
-        return spark.createDataFrame([], CHECKPOINT_SCHEMA).select(
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        return local_frame(spark, [], CHECKPOINT_SCHEMA).select(
             *STATE_KEY, "committed_offset"
         )
+    cp = spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
     return (
         cp.groupBy(*STATE_KEY)
         .agg(F.max(F.struct("updated_at", "committed_offset")).alias("_latest"))

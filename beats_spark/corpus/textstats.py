@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from beats_spark.corpus.hashing import h32, shingles, word_tokens
+from beats_spark.session import local_frame
 
 #: BPE-ish token regex: letter runs, digit runs, single other non-space.
 BPE_TOKEN_RE = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
@@ -979,8 +980,8 @@ def ppl_tercile_buckets(df: DataFrame, by: str = "lang",
     if not offsets:  # empty/unscored corpus: all buckets NULL
         return scored.withColumn("ppl_bucket", F.lit(None).cast("string"))
     gtype = dict(scored.dtypes)[by]
-    off = spark.createDataFrame(
-        [(g, p, b, counts[g]) for g, p, b in offsets],
+    off = local_frame(
+        spark, [(g, p, b, counts[g]) for g, p, b in offsets],
         f"{by} {gtype}, _rg int, _base long, _n long",
     )
     w = Window.partitionBy(by, "_rg").orderBy("bits_per_token", id_col)

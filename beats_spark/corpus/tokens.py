@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from beats_spark.corpus.hashing import h32, shingles, word_tokens
+from beats_spark.session import local_frame
 
 
 def tokenize_ids(df: DataFrame, text_col: str = "text",
@@ -201,7 +202,7 @@ def _global_starts(sel: DataFrame, n_parts: int | None) -> DataFrame:
     for pid in range(len(bounds) + 1):
         offsets.append((pid, base))
         base += int(totals.get(pid, 0) or 0)
-    off = spark.createDataFrame(offsets, "_rg int, _base long")
+    off = local_frame(spark, offsets, "_rg int, _base long")
     w = (
         Window.partitionBy("_rg").orderBy("_id")
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -634,8 +635,8 @@ def learn_bpe_merges(df: DataFrame, n_merges: int = 8,
         c = new_id_start + r
         rows.append((r, a, b, c, nn))
         learned.append((a, b, c))
-    return spark.createDataFrame(
-        rows, "rank int, t1 long, t2 long, new_id long, n_pairs long"
+    return local_frame(
+        spark, rows, "rank int, t1 long, t2 long, new_id long, n_pairs long"
     )
 
 
@@ -1695,8 +1696,8 @@ def token_budget_sample(df: DataFrame, budget,
         "cum_tok", (F.col("_off") + F.sum("n_tok").over(w)).cast("long")
     )
     if isinstance(budget, dict):
-        b = df.sparkSession.createDataFrame(
-            list(budget.items()), "source string, _budget long"
+        b = local_frame(
+            df.sparkSession, list(budget.items()), "source string, _budget long"
         )
         cum = cum.join(F.broadcast(b), "source")
         kept = F.col("cum_tok") <= F.col("_budget")

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from beats_spark.session import local_frame
+
 LEVELS = ["info", "warn", "error", "debug"]
 PHRASES = [
     "Starting OK",
@@ -109,7 +111,12 @@ def generate_events(
 
 
 def host_dim(spark: SparkSession, n_sources: int = 10) -> DataFrame:
-    """Small enrichment dim (FIXTURES.md §2) — always broadcast."""
+    """Small enrichment dim (FIXTURES.md §2) — always broadcast.
+
+    Built by :func:`local_frame`, so it plans as a JVM ``LocalTableScan``:
+    a plan that broadcasts it stays all-JVM, with no Python worker tasks
+    to unpickle its rows on every execution (Beats' ``add_host_metadata``
+    likewise builds its cache once and reuses it)."""
     rows = [("src_hot", "host-hot", "linux", "prod", "us-east")]
     for s in range(n_sources):
         rows.append(
@@ -121,6 +128,6 @@ def host_dim(spark: SparkSession, n_sources: int = 10) -> DataFrame:
                 "us-east" if s % 2 == 0 else "eu-west",
             )
         )
-    return spark.createDataFrame(
-        rows, "source string, host_name string, host_os string, env string, geo_region string"
+    return local_frame(
+        spark, rows, "source string, host_name string, host_os string, env string, geo_region string"
     )

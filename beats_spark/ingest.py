@@ -60,6 +60,7 @@ from pyspark.sql import types as T
 
 from beats_spark.conditions import keep_old, masked_assigns, once, try_cast_or_null
 from beats_spark.dissect import captures
+from beats_spark.session import local_frame
 
 __all__ = [
     "IngestCompileError",
@@ -1127,8 +1128,11 @@ def _p_user_agent(df, cfg):
         if ngroups == 0:
             return F.lit(None).cast("string")
         v = F.regexp_extract(src, rx, 1)
-        v2 = F.regexp_extract(src, rx, 2) if ngroups > 1 else F.lit("")
-        return F.when(v != "", v).when(v2 != "", v2)
+        ver = F.when(v != "", v)
+        if ngroups > 1:
+            v2 = F.regexp_extract(src, rx, 2)
+            ver = ver.when(v2 != "", v2)
+        return ver
 
     for fam, rx in reversed(_UA_FAMILIES):
         if rx is None:
@@ -1237,7 +1241,7 @@ class IngestPipeline:
         # Expressions are name-based (F.col), so anything built
         # against the shadow applies verbatim to the real frame.
         self._sp = df.sparkSession
-        self._sh = self._sp.createDataFrame([], df.schema)
+        self._sh = local_frame(self._sp, [], df.schema)
         had_failed = _has(self._sh, FAILED)
         if not had_failed:
             df = self._tx(df, lambda d: d.withColumns({
@@ -1272,7 +1276,7 @@ class IngestPipeline:
         """Apply a schema-changing transformation to the real frame AND
         the shadow. The shadow chain is rooted in an empty
         LocalRelation, so its analysis stays cheap as it grows (a
-        createDataFrame-per-step re-flatten costs more in py4j round
+        local_frame-per-step re-flatten costs more in py4j round
         trips than the deeper-but-trivial plan costs in analysis)."""
         self._sh = fn(self._sh)
         return fn(df)
@@ -1295,7 +1299,7 @@ class IngestPipeline:
     def _resync(self, df: DataFrame) -> None:
         """Re-derive the shadow from the real frame (after a script
         handler's arbitrary transformations) — one real analysis."""
-        self._sh = self._sp.createDataFrame([], df.schema)
+        self._sh = local_frame(self._sp, [], df.schema)
 
     def _guard(self, active: Column, cond: str | None) -> Column:
         """``active`` narrowed by a processor's painless ``if``."""

@@ -36,6 +36,7 @@ import re
 from dataclasses import dataclass, field
 
 from beats_spark.module_scripts import REFERENCE_MODULE_ROOT as REF, load_module_pipeline
+from beats_spark.session import local_frame
 
 __all__ = ["FIXTURE_INPUT", "FixtureInput", "run_fixture", "diff_rows",
            "fixture_names", "EXCLUDED_FIELDS"]
@@ -193,7 +194,10 @@ def fixture_names(module: str, fileset: str) -> list[str]:
 def run_fixture(spark, module: str, fileset: str, log_name: str,
                 spec: FixtureInput | None = None):
     """Run one shipped fixture through the compiled pipeline; returns
-    (rows-by-id, expected-list, spec)."""
+    (rows-by-id, expected-list, spec). The fixture lines are a
+    :func:`local_frame`, so the pipeline's deterministic projections
+    over them run on the driver (a fixture is at most a few hundred
+    lines)."""
     spec = spec or FIXTURE_INPUT.get((module, fileset)) or FixtureInput()
     log = f"{REF}/{module}/{fileset}/test/{log_name}"
     expected = json.load(open(log + "-expected.json"))
@@ -215,8 +219,8 @@ def run_fixture(spark, module: str, fileset: str, log_name: str,
     # OUTPUT to the expected length below
     tz = next((e.get("event.timezone") for e in expected
                if "event.timezone" in e), None)
-    df = spark.createDataFrame(
-        [(i, ln, tz, "2030-01-01T00:00:00.000Z", "1.8.0") for i, ln in
+    df = local_frame(
+        spark, [(i, ln, tz, "2030-01-01T00:00:00.000Z", "1.8.0") for i, ln in
          enumerate(lines)],
         "row_id long, message string, `event.timezone` string, "
         "`@timestamp` string, `ecs.version` string",

@@ -224,18 +224,16 @@ def _merge_groups(
     lines = F.array_sort(F.collect_list(F.struct(F.col(order_col).alias("o"), F.col(line_col).alias("l"))))
     agg = (
         df.groupBy(*partition_cols, group_col)
-        .agg(
-            F.min(order_col).alias(order_col),
-            lines.alias("_lines"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-        .withColumn(
-            line_col,
-            F.concat_ws(
+        .agg(lines.alias("_lines"), F.count(F.lit(1)).alias("n_lines"))
+        .withColumns({
+            # the first line's order value, null included (as the
+            # window sorts it: nulls first)
+            order_col: F.col("_lines")[0]["o"],
+            line_col: F.concat_ws(
                 separator,
                 F.transform(F.slice(F.col("_lines"), 1, max_lines), lambda x: x["l"]),
             ),
-        )
+        })
         .drop("_lines", group_col)
     )
     return agg.select(*partition_cols, order_col, line_col, "n_lines")

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from beats_spark.dissect import captures
+from beats_spark.session import local_frame
 
 
 def read_log_lines(
@@ -73,7 +74,7 @@ def read_log_lines(
     )
     bom_paths = _bom_file_paths(spark, paths) if bom_probe else []
     if bom_paths:
-        dim = spark.createDataFrame([(p,) for p in bom_paths], "_bom_path string")
+        dim = local_frame(spark, [(p,) for p in bom_paths], "_bom_path string")
         key = _normalize_uri(F.col("source"))
         df = (
             df.join(
@@ -359,10 +360,12 @@ def read_stdin(
 
     stdin is inherently a driver-side, single-process feed (the
     reference starts exactly one harvester); the driver reads and
-    ``createDataFrame``-distributes the lines, and ``partitions``
-    (default: session shuffle parallelism) spreads the downstream
-    parse/enrich work across executors. Not a 100 TB path — edge
-    collection parity, same as the socket inputs.
+    turns the lines into one :func:`local_frame`. With ``partitions``
+    unset, Spark folds the deterministic parse/enrich projections over
+    that frame into a new local relation on the driver at optimization
+    time, which suits a stdin-sized feed; ``partitions`` repartitions
+    the lines first, so the downstream work runs on executors. Not a
+    100 TB path — edge collection parity, same as the socket inputs.
 
     ``stream`` defaults to ``sys.stdin``; pass any text iterable for
     tests.
@@ -374,7 +377,7 @@ def read_stdin(
         (ln[:-1] if ln.endswith("\n") else ln, i)
         for i, ln in enumerate(src)
     ]
-    df = spark.createDataFrame(rows or [], "value string, offset long")
+    df = local_frame(spark, rows, "value string, offset long")
     if partitions:
         df = df.repartition(partitions)
     return df.select(
@@ -434,7 +437,7 @@ def file_identity(
         else:
             fid = f"{os.stat(p).st_ino}-{marker}"
         out.append((uri, fid))
-    return spark.createDataFrame(out or [], "source string, file_id string")
+    return local_frame(spark, out, "source string, file_id string")
 
 
 def attach_file_identity(

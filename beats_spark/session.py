@@ -10,8 +10,12 @@ session timezone (deterministic vs the DuckDB oracle).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _make_type_verifier, _parse_datatype_string
 
 JVM_PERF_FLAGS = "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=1g"
 
@@ -64,3 +68,42 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable, schema: StructType | str) -> DataFrame:
+    """A constant frame of driver-side ``rows`` that plans as a JVM
+    ``LocalTableScan`` with exactly ``schema``.
+
+    ``spark.createDataFrame(list)`` pickles the rows into a Python RDD
+    (``Scan ExistingRDD``): every execution of a plan that reads it then
+    starts Python worker tasks to unpickle them, even when the rest of
+    the plan is all JVM (a broadcast dim is re-read by every run). Here
+    the rows cross once, as one Arrow table, and the JVM keeps them as a
+    ``LocalRelation``.
+
+    ``rows`` are what ``createDataFrame`` takes (tuples, ``Row``s or
+    dicts); ``schema`` is a ``StructType`` or a DDL string. Each row is
+    checked and converted as ``createDataFrame(list)`` checks and
+    converts it (``_make_type_verifier``, then ``StructType.toInternal``),
+    so both give the same rows and reject the same ones. One Arrow
+    limit: under pyarrow < 17 a null map whose values are nested comes
+    back as an empty map (SPARK-48302).
+
+    A ``LocalRelation`` also changes where work over it runs: Catalyst
+    folds deterministic projections and filters stacked directly on it
+    into a new ``LocalRelation`` on the driver, at optimization time.
+    That suits dims and other small inputs; a caller whose rows feed
+    heavy per-row work should ``repartition`` the frame first.
+    """
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    verify = _make_type_verifier(schema)
+
+    def internal(row):
+        verify(row)
+        return schema.toInternal(row)
+
+    cols = list(zip(*map(internal, rows))) or [()] * len(arrow)
+    table = pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)

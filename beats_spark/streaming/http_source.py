@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource
 
+from beats_spark.session import local_frame
 from beats_spark.streaming.sources import BufferedStreamReader
 
 SCHEMA = "value string, sender string, recv_seq long"
@@ -417,8 +418,9 @@ def httpjson_scan(spark: SparkSession, url: str,
                   message_key: str = "message", **kw) -> DataFrame:
     """Batch form: one pagination walk → DataFrame of events. The
     fetch is driver-side (one API, one client — same as the
-    reference); the returned frame is distributed for everything
-    downstream."""
+    reference), and so is the frame: a :func:`local_frame`, over which
+    Spark folds deterministic projections on the driver at optimization
+    time. ``repartition`` the result before heavy per-event work."""
     rows = [(p, i, v) for i, (p, v) in enumerate(httpjson_fetch(url, **kw))]
-    raw = spark.createDataFrame(rows, "page int, seq long, value string")
+    raw = local_frame(spark, rows, "page int, seq long, value string")
     return httpjson_events(raw, url, message_key)

@@ -23,6 +23,12 @@ one operator may be shared by codegen's subexpression elimination;
 copies in two operators never are. The usual cause is a filter
 Catalyst pushed below a parse; the fix is ``conditions.once``.
 
+And no plan scans a Python RDD (``Scan ExistingRDD`` over a
+``PythonRDD``, which ``createDataFrame(list)`` builds): such a scan
+starts Python worker tasks on every execution of the plan. Constant
+frames come from ``session.local_frame``, a JVM ``LocalTableScan``.
+This rule has no exemption key.
+
 Rows that cannot build on this host (``skip_reason``) are listed as
 skipped. Writes PLANS.md with the verdict table + annotated excerpts.
 
@@ -151,6 +157,17 @@ def repeated_regex(df) -> list[tuple[str, int]]:
     return [(patterns[k], n) for k, n in operators.items() if n > 1]
 
 
+def python_rdd_scans(df) -> int:
+    """How many leaves of ``df``'s physical plan scan an RDD whose
+    lineage holds a ``PythonRDD``. A ``localCheckpoint`` plans as
+    ``Scan ExistingRDD`` too, but its RDD is the JVM's own, so the rule
+    reads the lineage, not the node name."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())]
+    return sum("PythonRDD[" in s.rdd().toDebugString() for s in scans
+               if s.getClass().getSimpleName() == "RDDScanExec")
+
+
 def audit(name: str, text: str, broadcast: bool = False,
           allow_cartesian: bool = False) -> list[str]:
     problems = []
@@ -194,6 +211,8 @@ def main() -> None:
         text = plan_text(df)
         problems = [f"regex evaluated in {n} operators: {rx[:80]}"
                     for rx, n in repeated_regex(df)]
+        if python_rdd_scans(df):
+            problems.append("Python-RDD scan (Scan ExistingRDD) in plan")
         if opts is not None:
             problems += audit(name, text, **opts)
         results[name] = (problems, text)

@@ -428,3 +428,43 @@ def test_single_projection_plan_stays_narrow(spark):
     plan = compile_ingest_pipeline(cfg)(df)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "Exchange" not in plan and "BatchEvalPython" not in plan
+
+
+def _literal_comparisons(df) -> list[str]:
+    """Every ``EqualTo`` in ``df``'s analyzed plan whose two sides are
+    both literals (Spark warns "Constructing trivially true equals
+    predicate" when a Column builds one)."""
+    import json
+
+    def trees(v):
+        if isinstance(v, list) and v and isinstance(v[0], dict) and "num-children" in v[0]:
+            yield v
+        elif isinstance(v, (list, dict)):
+            for x in (v if isinstance(v, list) else v.values()):
+                yield from trees(x)
+
+    lit = lambda e: e["class"].endswith(".Literal")  # noqa: E731
+    found = []
+    for node in json.loads(df._jdf.queryExecution().analyzed().toJSON()):
+        for flat in trees(node):
+            for i, e in enumerate(flat[:-2]):
+                if e["class"].endswith(".EqualTo") and lit(flat[i + 1]) and lit(flat[i + 2]):
+                    found.append(f"{flat[i + 1].get('value')!r} == {flat[i + 2].get('value')!r}")
+    return found
+
+
+def test_user_agent_builds_no_literal_comparison(spark):
+    """A one-group version pattern gets no second-group branch: the
+    compiled expressions compare no literal with a literal, and the
+    versions are unchanged (a two-group pattern still takes group 2)."""
+    cfg = {"processors": [{"user_agent": {"field": "ua"}}]}
+    got, out = _run(spark, cfg, [
+        ("ff", "Mozilla/5.0 (X11; Linux x86_64; rv:120.0) Gecko/20100101 Firefox/120.0"),
+        ("ie", "Mozilla/5.0 (Windows NT 10.0; Trident/7.0; rv:11.0) like Gecko"),
+        ("none", None),
+    ], "message string, ua string")
+    assert _literal_comparisons(out) == []
+    assert {m: (r["user_agent.name"], r["user_agent.version"], r["user_agent.os.name"])
+            for m, r in got.items()} == {
+        "ff": ("Firefox", "120.0", "Linux"), "ie": ("IE", "11.0", "Windows"),
+        "none": (None, None, None)}

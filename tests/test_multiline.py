@@ -178,12 +178,14 @@ def test_stream_merge_skips_null_lines(spark):
 
 def _random_streams(seed: int) -> list[tuple]:
     """Streams with null keys, null lines and unique offsets per stream,
-    plus one 250-line event; row order is shuffled so the window sorts."""
+    one of them null (the window sorts it first, so it is the offset of
+    its stream's first event), plus one 250-line event; row order is
+    shuffled so the window sorts."""
     rnd = random.Random(seed)
     kinds = ["START a", "START b \\", "  cont", "  cont \\", "END", None]
     out = [("long", 0, i, "START \\" if i == 0 else "  cont \\") for i in range(250)]
     for key in [("a", 0), ("a", 1), ("b", 0), (None, None), (None, 0), ("c", None)]:
-        offsets = rnd.sample(range(1000), rnd.randint(1, 60))
+        offsets = [None, *rnd.sample(range(1000), rnd.randint(1, 60))]
         out += [(*key, o, rnd.choice(kinds)) for o in offsets]
     rnd.shuffle(out)
     return out

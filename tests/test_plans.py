@@ -2,8 +2,9 @@
 free of cartesian products (outside the whitelisted small-n baseline),
 keep broadcast joins broadcast, stay inside whole-stage codegen, and
 carry no row-at-a-time Python UDFs; no registry row's plan may evaluate
-the same regex expression in two operators. Runs the audit script as a
-subprocess (it needs its own AQE-disabled session)."""
+the same regex expression in two operators or scan a Python RDD. Runs
+the audit script as a subprocess (it needs its own AQE-disabled
+session)."""
 
 from __future__ import annotations
 

@@ -193,6 +193,31 @@ def test_file_identity_strategies(spark, tmp_path):
         file_identity(spark, glob, "bogus")
 
 
+def test_load_state_never_reads_a_missing_checkpoint(spark, tmp_path):
+    """A first run (no checkpoint yet) gets the empty state without
+    asking ``spark.read`` for the missing path, which Spark would log as
+    an ERROR; a directory with no commit in it reads as empty."""
+    from beats_spark.checkpoint import load_state
+
+    reads = []
+
+    class Watched:
+        def __getattr__(self, name):
+            return getattr(spark, name)
+
+        @property
+        def read(self):
+            reads.append(1)
+            return spark.read
+
+    st = load_state(Watched(), str(tmp_path / "missing"))
+    assert reads == []
+    assert st.columns == ["source", "part_id", "committed_offset"]
+    assert st.collect() == []
+    (tmp_path / "empty").mkdir()
+    assert load_state(spark, str(tmp_path / "empty")).collect() == []
+
+
 def test_native_identity_survives_rotation_resume(spark, tmp_path):
     """Log rotation with native (inode-device) identity: the registrar
     state follows the RENAMED file, so resume re-reads nothing from it

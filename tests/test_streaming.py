@@ -220,7 +220,9 @@ def _stream_and_batch_merges(spark, tmp_path, data, **kw):
     """Every stream's events from the streaming operator (two files, so
     two micro-batches) and from both batch merge modes. A final 'START'
     line per stream closes its last real event, so the comparison leaves
-    out only that sentinel event, which streaming holds for its timeout."""
+    out only that sentinel event, which streaming holds for its timeout.
+    The timeout is one the test never reaches, so a slow micro-batch
+    cannot flush the sentinel and a streaming row 'START' is a bug."""
     src = str(tmp_path / "lines")
     schema = "source string, part_id int, offset long, message string"
     ends = {}
@@ -232,7 +234,8 @@ def _stream_and_batch_merges(spark, tmp_path, data, **kw):
     lines.filter(F.col("offset") <= half).coalesce(1).write.parquet(src)
     lines.filter(F.col("offset") > half).coalesce(1).write.mode("append").parquet(src)
     q = (
-        streaming_multiline_pattern(stream_parquet_dir(spark, src, max_files_per_trigger=1), **kw)
+        streaming_multiline_pattern(stream_parquet_dir(spark, src, max_files_per_trigger=1),
+                                    timeout_ms=600_000, **kw)
         .writeStream.format("parquet")
         .option("path", str(tmp_path / "out"))
         .option("checkpointLocation", str(tmp_path / "cp"))
