@@ -2,12 +2,14 @@
 
 Re-expresses the reference's streaming multiline readers
 (``libbeat/reader/multiline/pattern.go:43-160`` pattern mode, defaults
-at ``:52-58``; ``counter.go`` count mode) as a windowed DataFrame
-program: an ``is_start`` boolean per line → running-sum group id within
-each ``(source, part_id)`` stream → group-by concat. The per-stream
-window shuffle is keyed on the stream identity, which is exactly the
-reference's one-goroutine-per-file ordering guarantee; at 100 TB the
-key cardinality is #files × #parts, so the shuffle is wide and even.
+at ``:52-58``; ``counter.go`` count mode) as DataFrame programs: an
+event-start flag per line → events within each ``(source, part_id)``
+stream → one joined row per event, either by a running-sum group id and
+a group-by concat (``merge="agg"``) or by one keyed Arrow forward pass
+(``merge="stream"``). Either way the one shuffle is keyed on the stream
+identity, which is exactly the reference's one-goroutine-per-file
+ordering guarantee; at 100 TB the key cardinality is #files × #parts,
+so the shuffle is wide and even.
 
 Pattern-mode semantics (matching the reference):
 
@@ -29,9 +31,11 @@ from collections.abc import Sequence
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from beats_spark.keyed import keyed_pass, with_carry
 
 DEFAULT_MAX_LINES = 500
 
@@ -54,49 +58,70 @@ def multiline_pattern(
     Output: partition cols + ``offset`` (first line's order value),
     ``message`` (joined), ``n_lines`` (pre-cap line count).
 
-    ``merge`` picks the second phase; the window phase is shared, and
-    so is its one exchange (its hash partitioning on the stream key
-    satisfies the compound-key aggregate):
+    ``order_col`` must be unique within a stream (a null counts once):
+    the two merges order tied lines differently, and ``agg``'s RANGE
+    running sum puts tied lines in one event.
 
-    - ``"agg"`` (default): groupBy(stream, group) + ordered
-      ``collect_list`` — ObjectHashAggregate in place, pure JVM.
-    - ``"stream"``: an Arrow forward pass (``mapInArrow``) over the
-      window's (stream, order)-sorted output — ``forward_merge`` per
-      Arrow batch, carrying the open event across batches. Same rows.
-      Both take 1.0 s on 400k lines at ``local[4]`` (bench.py
-      ``multiline_scale``, min of 5).
+    Both merges read the same JVM flags per line: ``match_flag`` and the
+    flush flag. ``merge`` picks the engine:
+
+    - ``"agg"`` (default): window functions (``lag`` for ``before`` and
+      the flush, a running ``sum`` of event starts) number the events,
+      then groupBy(stream, event) + ordered ``collect_list`` —
+      ObjectHashAggregate on the window's exchange, pure JVM.
+    - ``"stream"``: a keyed forward pass (``keyed.keyed_pass``): one
+      exchange and sort on (stream, order), then one ``mapInArrow`` that
+      finds event starts (``event_starts``) and merges them
+      (``forward_merge``) per Arrow batch, carrying the open event and
+      the previous line's flags across batches. No window. Same rows.
     """
     if match not in ("after", "before"):
         raise ValueError(f"match must be after|before, got {match!r}")
     if merge not in ("agg", "stream"):
         raise ValueError(f"merge must be agg|stream, got {merge!r}")
 
+    m = match_flag(F.col(line_col), pattern, negate)
+    # a null line never flushes
+    flush = (F.coalesce(F.col(line_col).rlike(flush_pattern), F.lit(False))
+             if flush_pattern else None)
+    if merge == "stream":
+        return _merge_stream(df, m, flush, match, partition_cols, order_col,
+                             line_col, separator, max_lines)
+
+    # the stream's leading run of continuation lines sums to 0: its own event
     w = Window.partitionBy(*partition_cols).orderBy(order_col)
-    m = F.col(line_col).rlike(pattern)
-    if negate:
-        m = ~m
-
-    if match == "after":
-        is_start = ~m
-    else:  # before: new event when the previous line did not match
-        prev_m = F.lag(m, 1, False).over(w)
-        is_start = ~prev_m
-
-    if flush_pattern:
-        flushed_prev = F.lag(F.col(line_col).rlike(flush_pattern), 1, False).over(w)
-        is_start = is_start | flushed_prev
-
-    # first line of each stream always starts an event
-    rn = F.row_number().over(w)
-    is_start = is_start | (rn == 1)
-
-    grouped = df.withColumn(
-        "_ml_group", F.sum(is_start.cast("long")).over(w)
-    )
-    merger = _merge_groups_stream if merge == "stream" else _merge_groups
-    return merger(
+    is_start = ~(m if match == "after" else F.lag(m, 1, False).over(w))
+    if flush is not None:
+        is_start = is_start | F.lag(flush, 1, False).over(w)
+    grouped = df.withColumn("_ml_group", F.sum(is_start.cast("long")).over(w))
+    return _merge_groups(
         grouped, partition_cols, order_col, line_col, separator, max_lines, "_ml_group"
     )
+
+
+def match_flag(line: Column, pattern: str, negate: bool) -> Column:
+    """A line's pattern flag ``m``: Java ``rlike``, inverted if
+    ``negate``. A null line counts as matched, so it continues the open
+    event under ``after`` and glues the next line to it under
+    ``before``."""
+    m = line.rlike(pattern)
+    return F.coalesce(~m if negate else m, F.lit(True))
+
+
+def event_starts(
+    m: np.ndarray, flush: np.ndarray | None, match: str,
+    prev_m: bool = True, prev_flush: bool = False,
+) -> np.ndarray:
+    """Where events start among one stream's ordered lines, from their
+    ``match_flag`` values ``m`` and flush flags (``None`` without a
+    flush pattern). ``prev_m``/``prev_flush`` are the flags of the line
+    before ``m[0]``: under ``after`` a line starts an event where it does
+    not match, under ``before`` where the previous line did not match,
+    and under both after a flushing line."""
+    starts = ~(m if match == "after" else np.append(prev_m, m)[:-1])
+    if flush is not None:
+        starts |= np.append(prev_flush, flush)[:-1]
+    return starts
 
 
 def multiline_count(
@@ -116,26 +141,6 @@ def multiline_count(
     return _merge_groups(
         grouped, partition_cols, order_col, line_col, separator, max_lines, "_ml_group"
     )
-
-
-def _key_breaks(rows: pa.RecordBatch, cols: Sequence[str]) -> np.ndarray:
-    """True where a row's ``cols`` differ from the row before; null
-    equals null, as in a Spark group key."""
-    starts = np.zeros(rows.num_rows, dtype=bool)
-    for c in cols:
-        cur, prev = rows.column(c).slice(1), rows.column(c).slice(0, rows.num_rows - 1)
-        ne = pc.or_(pc.fill_null(pc.not_equal(cur, prev), False),
-                    pc.not_equal(cur.is_null(), prev.is_null()))
-        starts[1:] |= ne.to_numpy(zero_copy_only=False)
-    return starts
-
-
-def with_carry(carry: pa.RecordBatch | None, rows: pa.RecordBatch) -> pa.RecordBatch:
-    """``rows`` behind the open event that ``forward_merge`` carried."""
-    if carry is None:
-        return rows
-    cols = [pa.concat_arrays([a, b]) for a, b in zip(carry.columns, rows.columns)]
-    return pa.RecordBatch.from_arrays(cols, schema=rows.schema)
 
 
 def forward_merge(
@@ -175,39 +180,44 @@ def forward_merge(
     return closed, carry, int(n_lines[-1]) - carry.num_rows
 
 
-def _merge_groups_stream(
+def _merge_stream(
     df: DataFrame,
+    m: Column,
+    flush: Column | None,
+    match: str,
     partition_cols: Sequence[str],
     order_col: str,
     line_col: str,
     separator: str,
     max_lines: int,
-    group_col: str,
 ) -> DataFrame:
-    """Shuffle-free merge: the window already leaves each physical
-    partition holding whole streams, sorted by (stream, order), so an
-    event's lines are contiguous. ``sortWithinPartitions`` re-states
-    that contract; the planner elides it. The open event carries across
-    Arrow batches and flushes at end-of-partition."""
-    gcols = [*partition_cols, group_col]
+    """``merge="stream"``: one keyed forward pass. The open event and
+    the previous line's flags carry across Arrow batches; the open event
+    flushes at end-of-partition."""
     out_cols = [*partition_cols, order_col, line_col, "n_lines"]
-    df = df.sortWithinPartitions(*partition_cols, order_col).select(*gcols, order_col, line_col)
     out_schema = T.StructType([df.schema[c] for c in out_cols[:-2]] + [
         T.StructField(line_col, T.StringType()), T.StructField("n_lines", T.LongType())])
+    flags = [m.alias("_m")] + ([] if flush is None else [flush.alias("_f")])
+    flushes = flush is not None  # the Column itself cannot ship to workers
 
-    def runner(batches):
-        carry, extra = None, 0
-        for batch in batches:
-            rows = with_carry(carry, batch)
-            if rows.num_rows:
-                closed, carry, extra = forward_merge(
-                    rows, _key_breaks(rows, gcols), extra, line_col, max_lines, separator)
-                yield closed.select(out_cols)
+    def kernel(parts):
+        carry, extra, prev = None, 0, (True, False)
+        for rows, breaks in parts:
+            matched = rows.column("_m").to_numpy(zero_copy_only=False)
+            flushed = rows.column("_f").to_numpy(zero_copy_only=False) if flushes else None
+            starts = breaks | event_starts(matched, flushed, match, *prev)
+            prev = (matched[-1], flushes and flushed[-1])
+            if carry is not None:
+                starts = np.concatenate((np.zeros(len(carry), bool), starts))
+            closed, carry, extra = forward_merge(
+                with_carry(carry, rows), starts, extra, line_col, max_lines, separator)
+            yield closed.select(out_cols)
         if carry is not None:
             yield forward_merge(carry, np.zeros(len(carry), bool), extra, line_col,
                                 max_lines, separator, final=True)[0].select(out_cols)
 
-    return df.mapInArrow(runner, schema=out_schema)
+    return keyed_pass(df, partition_cols, [order_col],
+                      [*partition_cols, order_col, line_col, *flags], out_schema, kernel)
 
 
 def _merge_groups(

@@ -62,7 +62,9 @@ class LookupJoin(Proc):
         sel = [F.col(self.dim_key).alias("_lk_key")] + [
             F.col(c).alias(private[n]) for c, n in renames.items()
         ]
-        dim_slim = self.dim.select(*sel).dropDuplicates(["_lk_key"])
+        # the broadcast collects the dim anyway: dedup it in one task, not
+        # behind a shuffle stage of its own
+        dim_slim = self.dim.select(*sel).coalesce(1).dropDuplicates(["_lk_key"])
         key = self.key() if active is None else F.when(active, self.key())
         out = df.join(F.broadcast(dim_slim), key == dim_slim["_lk_key"], "left")
         hit = F.col("_lk_key").isNotNull()

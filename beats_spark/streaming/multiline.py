@@ -1,7 +1,7 @@
 """Stateful streaming multiline: pattern merge with flush timeout.
 
-The batch implementation (``beats_spark.multiline``) sessionizes with a
-window function; a true stream cannot — an event may span micro-batch
+The batch operator (``beats_spark.multiline``) sees each stream whole,
+in one task; a true stream does not — an event may span micro-batch
 boundaries, and an idle stream must flush its open event after a
 timeout, exactly the reference reader's 5 s timeout flush
 (``libbeat/reader/multiline/pattern.go:43-160`` +
@@ -10,10 +10,12 @@ timeout, exactly the reference reader's 5 s timeout flush
 we buffer the open event across batches and flush on start-of-next,
 end-of-stream timeout, or ``max_lines``.
 
-Each key's rows go through the batch operator's Arrow forward pass
-(``multiline.forward_merge``) with the state as its carry; no per-row
-Python loop. State is one open event: (its first ``max_lines`` lines,
-first offset, line count, last line's match flag).
+Each key's rows take the batch ``merge="stream"`` path's two steps:
+``multiline.event_starts`` over the JVM's ``match_flag`` column, with
+the stored flag of the previous batch's last line, then the Arrow
+forward pass (``multiline.forward_merge``) with the state as its carry;
+no per-row Python loop. State is one open event: (its first
+``max_lines`` lines, first offset, line count, last line's match flag).
 """
 
 from __future__ import annotations
@@ -28,7 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from beats_spark.multiline import DEFAULT_MAX_LINES, forward_merge, with_carry
+from beats_spark.keyed import with_carry
+from beats_spark.multiline import DEFAULT_MAX_LINES, event_starts, forward_merge, match_flag
 
 ROWS = pa.schema([("offset", pa.int64()), ("message", pa.string())])
 
@@ -85,10 +88,7 @@ def streaming_multiline_pattern(
     """
     if match not in ("after", "before"):
         raise ValueError(f"match must be after|before, got {match!r}")
-    # Java rlike, as in the batch operator; a null line never starts an
-    # event there (the null start flag drops out of its running sum)
-    m = F.col("message").rlike(pattern)
-    m = F.coalesce(~m if negate else m, F.lit(True))
+    m = match_flag(F.col("message"), pattern, negate)  # as the batch operator's
 
     def merge(key, rows, starts, extra, final=False):
         closed, carry, extra = forward_merge(
@@ -116,10 +116,8 @@ def streaming_multiline_pattern(
             return
         rows = rows.sort_values("offset")
         matched = rows["_m"].to_numpy(bool)
-        # after: a matching line continues the open event; before: a line
-        # continues the event iff the PREVIOUS line matched — for the first
-        # row, the stored flag of the previous batch's final line
-        starts = ~(matched if match == "after" else np.append(last_matched, matched[:-1]))
+        # the first row's previous line is the previous batch's last
+        starts = event_starts(matched, None, match, last_matched)
         if carry is not None:
             starts = np.concatenate((np.zeros(len(carry), bool), starts))
         batch = pa.RecordBatch.from_pandas(rows[["offset", "message"]], ROWS, preserve_index=False)

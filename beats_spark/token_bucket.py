@@ -16,8 +16,10 @@ reference's wall clock would make results depend on read speed).
 
 Both faces share one kernel:
 
-- ``token_bucket(df, ...)`` — batch: ``applyInPandas`` per key group,
-  rows processed in (ts, order_col) order.
+- ``token_bucket(df, ...)`` — batch: one keyed forward pass
+  (``keyed.keyed_pass``: a shuffle on the key fields, a sort by (key,
+  ts, order_col), one ``mapInArrow``), the bucket of the open key
+  carried across Arrow batches.
 - ``streaming_token_bucket(df, ...)`` — Structured Streaming:
   ``applyInPandasWithState`` carrying (tokens, last_ms) across
   micro-batches; state times out after the bucket would have refilled
@@ -30,8 +32,9 @@ the same operation order as the DuckDB oracle (``epoch_us`` +
 ``WITH RECURSIVE``), so allow/deny decisions are bit-identical.
 
 The per-key loop is sequential BY DEFINITION (each decision depends on
-the previous one); it is Arrow-batched per group and parallel across
-keys, which is the only axis a token bucket can scale on.
+the previous one); it is parallel across keys, which is the only axis a
+token bucket can scale on. The batch face holds one Arrow batch per
+task, so a hot key costs time, not memory.
 """
 
 from __future__ import annotations
@@ -42,9 +45,13 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from beats_spark.keyed import keyed_pass
 
 
 def parse_limit(limit: str | int) -> tuple[int, float]:
@@ -68,10 +75,9 @@ def _run_bucket(
     mask and the final (tokens, last_us) state. Mirrors
     token_bucket.go getBucket/replenish/withdraw with event-time now."""
     allowed = np.zeros(len(ts_us), dtype=bool)
-    for i in range(len(ts_us)):
-        t = float(ts_us[i])
+    for i, t in enumerate(ts_us.tolist()):
         # late arrivals (t < last_us — only possible across streaming
-        # micro-batches; the batch kernel sorts the whole group) must
+        # micro-batches; the batch kernel sorts each key) must
         # never UN-refill the bucket or rewind its clock: clamp the
         # replenish delta at 0 and keep last_us monotone, so a late
         # event only withdraws — matching what the batch kernel would
@@ -87,11 +93,20 @@ def _run_bucket(
     return allowed, tokens, last_us
 
 
+def _arrow_ts_us(ts: pa.Array) -> np.ndarray:
+    """``_ts_us`` for an Arrow timestamp column (Spark's are in
+    microseconds); a null sorts last and is the NaT that ``_ts_us`` maps
+    to int64 min, so it refills nothing."""
+    us = pc.fill_null(ts.cast(pa.int64()), np.iinfo(np.int64).min)
+    return us.to_numpy().astype(np.float64)
+
+
 def _ts_us(s: pd.Series) -> np.ndarray:
     # integer microseconds as float64: exact (< 2^53 until ~2255), and
     # identical to the oracle's epoch_us(ts)::DOUBLE. The datetime64[us]
     # cast makes this correct for any incoming resolution (Arrow may
-    # hand applyInPandas ns- or us-backed series depending on version).
+    # hand applyInPandasWithState ns- or us-backed series depending on
+    # version).
     return s.to_numpy().astype("datetime64[us]").astype("int64").astype("float64")
 
 
@@ -106,36 +121,49 @@ def token_bucket(
 ) -> DataFrame:
     """Batch event-time token bucket: keep rows the bucket admits.
 
-    One shuffle on ``fields``; within each key group rows are processed
-    in (ts, order_col) order starting from a full bucket (the
-    reference creates each bucket full, token_bucket.go:124-137).
-    Rows outside the mask ``active`` pass through without tokens.
+    One keyed forward pass (``keyed.keyed_pass``): one shuffle on
+    ``fields``, then each key's rows in (ts, order_col) order, nulls
+    last, starting from a full bucket (the reference creates each bucket
+    full, token_bucket.go:124-137). No fields is one global bucket on
+    one partition (the reference hashes the empty field list to a single
+    key), which is what a single global rate limit inherently is. Rows
+    outside the mask ``active``, null included, pass through without
+    touching the bucket. ``ts_col`` is a timestamp column.
     """
     n, period = parse_limit(limit)
     rate_per_us = n / (period * 1e6)
     depth = n * burst_multiplier
-    schema = df.schema
     order = order_col if order_col in df.columns else ts_col
-
     cols = df.columns
     guarded = active is not None  # the Column itself cannot ship to workers
-    # no fields → one global bucket (the reference hashes the empty
-    # field list to a single key); this serializes on one task, which
-    # is what a single global rate limit inherently is. A literal in
-    # groupBy would resolve as an ordinal, so group on a real column —
-    # under a mask, the mask itself.
-    extra = {"__tb_on": active} if guarded else {} if fields else {"__tb_g": F.lit(0)}
+    mask = [F.coalesce(active, F.lit(False)).alias("__tb_on")] if guarded else []
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        if guarded and not pdf["__tb_on"].iloc[0]:
-            return pdf[cols]
-        pdf = pdf.sort_values([ts_col, order], kind="mergesort")
-        t = _ts_us(pdf[ts_col])
-        last = float(t[0]) if len(t) else 0.0
-        allowed, _, _ = _run_bucket(t, depth, last, rate_per_us, depth)
-        return pdf[allowed][cols]
+    def kernel(parts):
+        # the open key's (tokens, last_us) and its segment in this batch:
+        # segment 0 is the key open when the batch starts
+        bucket, owner = None, 0
+        for rows, breaks in parts:
+            t = _arrow_ts_us(rows.column(ts_col))
+            on = (rows.column("__tb_on").to_numpy(zero_copy_only=False) if guarded
+                  else np.ones(rows.num_rows, bool))
+            keep = ~on
+            seg = np.cumsum(breaks)
+            act = np.flatnonzero(on)
+            for ids in np.split(act, np.flatnonzero(np.diff(seg[act])) + 1):
+                if not len(ids):
+                    continue
+                s = seg[ids[0]]
+                fresh = bucket is None or s != owner
+                tokens, last = (depth, float(t[ids[0]])) if fresh else bucket
+                allowed, tokens, last = _run_bucket(t[ids], tokens, last, rate_per_us, depth)
+                keep[ids] = allowed
+                bucket, owner = (tokens, last), s
+            bucket, owner = (bucket if owner == seg[-1] else None), 0
+            yield rows.filter(pa.array(keep)).select(cols)
 
-    return df.withColumns(extra).groupBy(*fields, *extra).applyInPandas(run, schema=schema)
+    return keyed_pass(
+        df, fields, [F.asc_nulls_last(ts_col), F.asc_nulls_last(order)],
+        [*cols, *mask], df.schema, kernel)
 
 
 def streaming_token_bucket(

@@ -79,11 +79,10 @@ def run_pipeline_throughput(spark) -> tuple[float, int, list[float]]:
 
 
 def run_multiline_scale(spark, n_rows: int) -> dict:
-    """Multiline merge at scale, both second-phase strategies (the
-    window phase is shared, and both plans have its one exchange):
-    'agg' is the JVM collect_list aggregate, 'stream' the Arrow forward
-    pass. Min-of-5 after an untimed warm-up, as for the headline
-    queries."""
+    """Multiline merge at scale, both engines (each plan has one
+    exchange): 'agg' is the windows plus the JVM collect_list aggregate,
+    'stream' the keyed Arrow forward pass. Min-of-5 after an untimed
+    warm-up, as for the headline queries."""
     from pyspark.sql import functions as F
 
     from beats_spark.datagen import generate_events

@@ -31,6 +31,8 @@ This rule has no exemption key.
 
 Rows that cannot build on this host (``skip_reason``) are listed as
 skipped. Writes PLANS.md with the verdict table + annotated excerpts.
+The table counts each row's Python-boundary operators, so a new Python
+crossing shows up in the diff of PLANS.md.
 
     python scripts/explain_audit.py
 """
@@ -157,6 +159,21 @@ def repeated_regex(df) -> list[tuple[str, int]]:
     return [(patterns[k], n) for k, n in operators.items() if n > 1]
 
 
+PYTHON_NODE = re.compile(
+    r"(MapIn(Arrow|Pandas)|FlatMap\w*In(Arrow|Pandas)\w*|\w*EvalPython\w*|Arrow\w+Python"
+    r"|TransformWithStateInPySpark)Exec")
+
+
+def python_nodes(df) -> int:
+    """How many operators of ``df``'s executed plan cross the Python
+    boundary (``MapInArrow``, ``MapInPandas``, ``FlatMapGroupsIn*``,
+    ``ArrowEvalPython``, the pandas window and aggregate operators …):
+    each ships rows to Python workers and back, so a new one in a row
+    of the table is worth a look in review."""
+    plan = json.loads(df._jdf.queryExecution().executedPlan().toJSON())
+    return sum(bool(PYTHON_NODE.fullmatch(n["class"].rsplit(".", 1)[-1])) for n in plan)
+
+
 def python_rdd_scans(df) -> int:
     """How many leaves of ``df``'s physical plan scan an RDD whose
     lineage holds a ``PythonRDD``. A ``localCheckpoint`` plans as
@@ -215,30 +232,33 @@ def main() -> None:
             problems.append("Python-RDD scan (Scan ExistingRDD) in plan")
         if opts is not None:
             problems += audit(name, text, **opts)
-        results[name] = (problems, text)
+        results[name] = (problems, text, python_nodes(df))
 
     out = ["# PLANS — physical-plan audit of headline queries\n"]
     out.append("Generated by `python scripts/explain_audit.py` (sf=%s).\n" % sf_dir)
-    out.append("| query | broadcast joins | codegen | pushdown | verdict |")
-    out.append("|---|---|---|---|---|")
-    for name, (problems, text) in results.items():
+    out.append("Python nodes: operators that cross the Python boundary "
+               "(`MapInArrow`, `MapInPandas`, `FlatMapGroupsIn*`, `*EvalPython*`, "
+               "the pandas window and aggregate operators).\n")
+    out.append("| query | broadcast joins | codegen | pushdown | Python nodes | verdict |")
+    out.append("|---|---|---|---|---|---|")
+    for name, (problems, text, py) in results.items():
         bj = len(re.findall(r"BroadcastHashJoin", text))
         wsc = len(set(re.findall(r"codegen id : (\d+)", text)))
         pf = "yes" if re.search(r"PushedFilters: \[[^\]]", text) else "—"
         verdict = "OK" if not problems else "; ".join(problems)
-        out.append(f"| {name} | {bj} | {wsc} spans | {pf} | {verdict} |")
+        out.append(f"| {name} | {bj} | {wsc} spans | {pf} | {py} | {verdict} |")
     for name, why in skipped.items():
-        out.append(f"| {name} | — | — | — | skipped: {why} |")
+        out.append(f"| {name} | — | — | — | — | skipped: {why} |")
     out.append("")
 
-    for name, (problems, text) in results.items():
+    for name, (problems, text, _) in results.items():
         if problems:
             out.append(f"## {name} — ISSUES: {problems}\n")
             out.append("```\n" + text[:4000] + "\n```\n")
 
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
-    bad = {n: p for n, (p, _) in results.items() if p}
+    bad = {n: p for n, (p, _, _) in results.items() if p}
     for name, why in skipped.items():
         print(f"skipped {name}: {why}")
     names = {row.name for row in entry.REGISTRY}

@@ -219,11 +219,12 @@ def test_stream_merge_equals_agg_merge_on_random_streams(spark, batch_rows, seed
 
 
 def test_stream_merge_plan_is_one_arrow_pass(lines):
-    """The stream merge is one MapInArrow over the window's output: no
-    pandas pass, the window's one Exchange and its one Sort."""
+    """The stream merge is one MapInArrow over one Exchange and one
+    Sort: no pandas pass and no window."""
     out = multiline_pattern(lines, pattern=r"^\[", negate=True, merge="stream")
     plan = out._jdf.queryExecution().executedPlan().toString()
     nodes = re.findall(r"^[\s:+\-|]*(?:\*\(\d+\)\s*)?(\w+)", plan, re.M)
     assert "MapInArrow" in nodes and "MapInPandas" not in nodes
+    assert "Window" not in nodes
     assert nodes.count("Exchange") == 1
     assert nodes.count("Sort") == 1

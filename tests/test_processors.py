@@ -273,6 +273,35 @@ def test_lookup_enrichment_broadcast(spark, df):
     assert "BroadcastHashJoin" in plan
 
 
+def test_lookup_dim_dedups_in_one_task(spark):
+    """The broadcast dim dedups in one task, with no Exchange under the
+    BroadcastExchange. A dim with duplicate keys over several
+    partitions still gives one row per event."""
+    from pyspark.sql import functions as F
+
+    from beats_spark.processors.enrich import LookupJoin
+
+    def source(c, n):
+        return F.concat(F.lit("s"), (F.col(c) % n).cast("string")).alias("source")
+
+    dim = spark.range(0, 40, numPartitions=4).select(source("id", 4), F.lit("x").alias("env"))
+    ev = spark.range(0, 8, numPartitions=2).select("id", source("id", 5))
+    out = LookupJoin(dim, on="source", prefix="host_")(ev)
+    assert rows(out, "id", "host_env") == [(i, None if i == 4 else "x") for i in range(8)]
+    plan = out._jdf.queryExecution().executedPlan().toString().splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-|*()0123456789"))
+
+    at = next(i for i, line in enumerate(plan) if "BroadcastExchange" in line)
+    below = []
+    for line in plan[at + 1:]:
+        if depth(line) <= depth(plan[at]):
+            break
+        below.append(line)
+    assert below and not any("Exchange" in line for line in below), plan
+
+
 def test_add_nomad_metadata_logs_path_matcher(spark):
     alloc = "389d1bc4-fae4-6956-9f66-6df59a0f11f0"
     dim = spark.createDataFrame(
